@@ -9,19 +9,27 @@ partition being migrated would otherwise kill the ENTIRE distributed
 copy job mid-write — at 100 TB that is an estate job lost to one bad
 upload, and a retry hits the same file again.
 
-Contract (quarantine-and-report):
+Contract (quarantine-and-report), in the order ``migrate`` runs it:
 
-  * every candidate data file's footer is validated BEFORE the copy
-    reads it — executor-side, metadata-only (``pyarrow.parquet
-    .ParquetFile`` parses the footer without touching data pages);
-  * corrupt files are QUARANTINED: excluded from the read, recorded in
-    the report with path + reason, and alerted loudly — never silently
-    skipped (the r12 theme: silent loss under a green report is the
-    failure class this tool exists to prevent);
-  * verification then reads the SOURCE side through the same healthy
-    file list, so the per-partition fingerprints reconcile exactly and
-    the report says "equal, MINUS these named quarantined files" —
-    an explicit, auditable statement instead of a crash or a lie.
+  * the JVM footer pass comes first: migrate's one source read uses
+    mergeSchema, so Spark parses every footer in the table before the
+    copy starts. A clean source pays for nothing more — no listing of
+    its own, no Python workers;
+  * only when that read fails does ``scan_parquet_health`` run, over
+    every data file of the table — executor-side, metadata-only
+    (``pyarrow.parquet.ParquetFile`` parses the footer without touching
+    data pages) — and give a per-file verdict. If it finds no corrupt
+    file, the read's error stands;
+  * corrupt files in the copy set are QUARANTINED: excluded from the
+    read, recorded in the report with path + reason, and alerted loudly
+    — never silently skipped (the r12 theme: silent loss under a green
+    report is the failure class this tool exists to prevent). Corrupt
+    files outside the copy set are only left out of the read;
+  * verification compares the destination against the copy's own read,
+    i.e. exactly the files the copy read, so the per-partition
+    fingerprints reconcile and the report says "equal, MINUS these
+    named quarantined files" — an explicit, auditable statement instead
+    of a crash or a lie.
 
 The reference tool byte-copied files without parsing them
 (``CommonUtils.java:59-72``), so a corrupt container rode through

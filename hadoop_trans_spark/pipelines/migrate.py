@@ -13,8 +13,17 @@ Architectural upgrade over the reference: the copy is ONE distributed
 scan→sink job with partition pruning — no per-partition driver loop, no
 local staging of bytes (`TransTablePartition.java:124,132` pumped every
 byte through the driver's /data/tmp). At 100 TB: executors stream
-partition files cluster-to-cluster; the only driver work is metadata
-(key enumeration + FS listings).
+partition files cluster-to-cluster; the only driver work is metadata.
+
+Metadata order, each step once per run:
+  1. key enumeration (one Spark job) and partition-dir listings;
+  2. ONE source read with mergeSchema: one table listing plus one JVM
+     footer pass over every file. That pass is the health check — the
+     per-file pyarrow verdicts (pipelines/health.py) run only when it
+     fails, and then name the corrupt files to quarantine;
+  3. the copy (that read, pruned to the copy set) and the verification
+     (that same DataFrame), so verify compares the destination against
+     exactly the files the copy read.
 """
 
 from __future__ import annotations
@@ -22,6 +31,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,28 +58,19 @@ def enumerate_partition_keys(
     """R3 (`CommonUtils.java:151-163`): expand the inclusive [start, end]
     day range, format each day with the partition pattern, dedup + sort
     (the reference's TreeSet). Computed with Spark date functions so the
-    pattern semantics are identical to what partition writers produce."""
+    pattern semantics are identical to what partition writers produce;
+    one array expression over one row, so one Spark job."""
     from datetime import date
 
     if date.fromisoformat(start) > date.fromisoformat(end):
         return []  # empty range → no work (Spark sequence would reject it)
-    rows = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.sequence(
-                    F.lit(start).cast("date"),
-                    F.lit(end).cast("date"),
-                    F.expr("interval 1 day"),
-                )
-            ).alias("d")
-        )
-        .select(F.date_format("d", pattern).alias("k"))
-        .distinct()
-        .orderBy("k")
-        .collect()
+    days = F.sequence(
+        F.lit(start).cast("date"), F.lit(end).cast("date"), F.expr("interval 1 day")
     )
-    return [r["k"] for r in rows]
+    keys = F.array_sort(
+        F.array_distinct(F.transform(days, lambda d: F.date_format(d, pattern)))
+    )
+    return spark.range(1).select(keys.alias("k")).collect()[0]["k"]
 
 
 def discover_partitions(spark: SparkSession, table_path: str, partition_name: str) -> list[str]:
@@ -91,10 +93,11 @@ class MigrateJob:
     end: str | None = None  # reference `-e`
     mode: str = "skip"  # conflict policy: skip | overwrite | fail
     verify_after: bool = True
-    # Footer-validate every candidate source file before the copy reads
-    # it; corrupt files are quarantined (excluded + reported + alerted)
-    # instead of killing the whole distributed copy job (r13; see
-    # pipelines/health.py for the contract). Metadata-only cost.
+    # When the source read's JVM footer pass fails, footer-validate every
+    # source file with the per-file pyarrow scan and quarantine the
+    # corrupt ones (excluded + reported + alerted) instead of failing the
+    # run (r13; see pipelines/health.py for the contract). A clean source
+    # never pays for the scan. False re-raises the read's error.
     quarantine_scan: bool = True
 
     @property
@@ -118,7 +121,7 @@ class MigrateReport:
     quarantined: list[dict] = field(default_factory=list)
     # the partition keys the copy ATTEMPTED (post conflict policy, before
     # quarantine): unlike `copied`, this survives the every-candidate-
-    # file-quarantined edge where src_df is None and copied resets to []
+    # file-quarantined edge where nothing is copied and copied stays []
     # (ADVICE r14 — consumers enumerating "months the migrate covered"
     # must read this, not `copied`)
     to_copy: list[str] = field(default_factory=list)
@@ -159,6 +162,52 @@ def raw_partition_values(spark: SparkSession):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+def _read_source(
+    spark: SparkSession, job: MigrateJob, to_copy: list[str]
+) -> tuple[DataFrame | None, list[dict]]:
+    """The whole source table, read once, and the quarantined files of
+    the copy set (``{path, reason}`` each). The DataFrame is ``None``
+    when no healthy file of the copy set is left.
+
+    mergeSchema: a schema-evolved partition (one that gained a column)
+    otherwise has that column SILENTLY DROPPED by the sampled-file
+    schema — and verification, reading the source the same way, stays
+    green through the loss (r12 probe find). A copy tool must read the
+    superset schema; older partitions carry NULLs for the newer columns.
+
+    mergeSchema also makes Spark parse every footer in the table now,
+    before the copy starts, so that pass is the health check. Only when
+    it fails does the per-file scan run (pipelines/health.py), table-wide:
+    corrupt files in the copy set are quarantined and alerted, corrupt
+    files elsewhere are left out of the union schema (the copy never
+    touched them, so they are not quarantine entries), and a scan that
+    finds nothing corrupt re-raises the read's error. ignoreCorruptFiles
+    is pinned off for this read: a session that sets it would otherwise
+    drop corrupt files from the schema pass AND the copy without a word.
+    """
+    reader = spark.read.option("mergeSchema", "true").option(
+        "ignoreCorruptFiles", "false"
+    )
+    try:
+        return reader.parquet(job.src_path), []
+    except (Py4JJavaError, PySparkException):
+        if not job.quarantine_scan:
+            raise
+        healthy, corrupt = scan_parquet_health(
+            spark, health_data_files(spark, job.src_path)
+        )
+        if not corrupt:
+            raise
+    # Explicit healthy-file read; basePath keeps the partition column
+    # resolvable from the dir layout.
+    base = fs.qualify(spark, job.src_path)
+    copy_dirs = tuple(f"{base}/{job.partition_name}={k}/" for k in to_copy)
+    quarantined = [q for q in corrupt if q["path"].startswith(copy_dirs)]
+    if not any(f.startswith(copy_dirs) for f in healthy):
+        return None, quarantined
+    return reader.option("basePath", base).parquet(*healthy), quarantined
 
 
 def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None) -> MigrateReport:
@@ -213,98 +262,20 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
         cond = F.col(pn).isin(named) if named else F.lit(False)
         if DEFAULT_PARTITION in to_copy:
             cond = cond | F.col(pn).isNull()
-        #    Container health (r13, pipelines/health.py): footer-validate
-        #    the candidate files first — one truncated upload must cost
-        #    one quarantined FILE (reported + alerted), not the whole
-        #    distributed copy job.
-        healthy: list[str] | None = None
-        healthy_all: list[str] = []
-        if job.quarantine_scan:
-            candidates: list[str] = []
-            for k in to_copy:
-                candidates += health_data_files(
-                    spark, f"{job.src_path}/{pn}={k}"
-                )
-            healthy, quarantined = scan_parquet_health(spark, candidates)
-            if quarantined:
-                report.quarantined = quarantined
-                for q in quarantined:
-                    sink.emit(
-                        Alert(
-                            "error",
-                            "corrupt_file",
-                            job.table,
-                            q["path"],
-                            f"quarantined (excluded from copy): {q['reason']}",
-                        )
-                    )
-                # Schema-union source (ADVICE r13): the narrowed
-                # healthy-file read below would merge only the to_copy
-                # partitions' schemas, silently dropping a column that
-                # exists ONLY in a partition outside the copy set —
-                # the exact r12 schema-evolution class, reintroduced by
-                # the quarantine path. Health-scan the WHOLE table
-                # (footer-parse only, the same metadata cost the normal
-                # path's mergeSchema inference pays) and derive the
-                # union schema from every healthy file table-wide; the
-                # copy still reads only the healthy to_copy files.
-                # Corrupt files outside the copy set contribute nothing
-                # to the schema and are not copied, so they are not
-                # quarantine entries — the copy contract never touched
-                # them.
-                copy_set = set(candidates)
-                rest = [
-                    f
-                    for f in health_data_files(spark, job.src_path)
-                    if f not in copy_set
-                ]
-                rest_ok, _ = scan_parquet_health(spark, rest)
-                healthy_all = sorted(healthy + rest_ok)
-            else:
-                healthy = None  # normal path: whole-directory read
-        #    mergeSchema: a schema-evolved partition (one that gained a
-        #    column) otherwise has that column SILENTLY DROPPED by the
-        #    sampled-file schema — and verification, reading the source
-        #    the same way, stays green through the loss (r12 probe
-        #    find). A copy tool must read the superset schema; older
-        #    partitions carry NULLs for the newer columns.
         with raw_partition_values(spark):
-            if healthy is not None:
-                # explicit healthy-file read; basePath keeps the
-                # partition column resolvable from the dir layout.
-                # The schema is the TABLE-WIDE healthy union (see the
-                # scan above): files lacking a newer column read it as
-                # NULLs instead of dropping it from the copy.
-                base = fs.qualify(spark, job.src_path)
-                union_schema = (
-                    spark.read.option("mergeSchema", "true")
-                    .option("basePath", base)
-                    .parquet(*healthy_all)
-                    .schema
-                    if healthy_all
-                    else None
+            src_df, report.quarantined = _read_source(spark, job, to_copy)
+        for q in report.quarantined:
+            sink.emit(
+                Alert(
+                    "error",
+                    "corrupt_file",
+                    job.table,
+                    q["path"],
+                    f"quarantined (excluded from copy): {q['reason']}",
                 )
-                reader = spark.read.option("mergeSchema", "true").option(
-                    "basePath", base
-                )
-                if union_schema is not None:
-                    reader = reader.schema(union_schema)
-                src_df = (
-                    reader.parquet(*healthy).where(cond)
-                    if healthy
-                    else None
-                )
-            else:
-                src_df = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(job.src_path)
-                    .where(cond)
-                )
-        if src_df is None:
-            report.copied = []
-            to_copy = []
-        else:
-            writer = src_df.write.partitionBy(pn)
+            )
+        if src_df is not None:
+            writer = src_df.where(cond).write.partitionBy(pn)
             if job.mode == "overwrite":
                 writer = writer.mode("overwrite").option(
                     "partitionOverwriteMode", "dynamic"
@@ -317,27 +288,13 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
     # 5. Post-copy verification (R11) per copied partition — row-content,
     #    both directions (upgrade over file-size compare). Batched: one
     #    grouped-fingerprint scan per side covers every copied partition;
-    #    only mismatching keys pay for the row-level diff. When files
-    #    were quarantined the SOURCE side reads the same healthy file
-    #    list the copy read, so the fingerprints reconcile exactly and
-    #    the report is "equal, minus the NAMED quarantined files" — the
-    #    quarantine entries carry the loss, verification proves the
-    #    copy moved everything it was allowed to read.
+    #    only mismatching keys pay for the row-level diff. The source
+    #    side is the copy's own read, so after a quarantine the report
+    #    is "equal, minus the NAMED quarantined files" — the quarantine
+    #    entries carry the loss, verification proves the copy moved
+    #    everything it was allowed to read.
     if job.verify_after and report.copied:
         with raw_partition_values(spark):
-            if report.quarantined and healthy:
-                # same narrowed file list AND the same table-wide union
-                # schema the copy wrote — the destination carries NULLs
-                # for columns absent from these files, so the source
-                # fingerprints must be computed over the identical shape.
-                vreader = spark.read.option("mergeSchema", "true").option(
-                    "basePath", fs.qualify(spark, job.src_path)
-                )
-                if union_schema is not None:
-                    vreader = vreader.schema(union_schema)
-                src_df = vreader.parquet(*healthy)
-            else:
-                src_df = spark.read.option("mergeSchema", "true").parquet(job.src_path)
             dst_df = spark.read.option("mergeSchema", "true").parquet(job.dst_path)
         report.verify = verify_partitions(src_df, dst_df, pn, report.copied)
         for k, rep in report.verify.items():

@@ -361,3 +361,121 @@ def test_clean_source_skips_quarantine_path(spark, src_warehouse, tmp_path):
         assert report.ok and report.copied == [
             f"1996{m:02d}" for m in range(1, 7)
         ]
+
+
+def test_corrupt_file_outside_range_is_neither_copied_nor_quarantined(
+    spark, smoke_dir, tmp_path
+):
+    """The source read's footer pass covers the WHOLE table (mergeSchema),
+    so a truncated file in a partition outside the migrated range used
+    to fail the run with a Py4JJavaError: the old candidate-only health
+    scan saw nothing wrong. Now the failed read falls back to the
+    table-wide scan: the out-of-range file is left out of the read, the
+    copy and the quarantine list (the copy never touched it), and the
+    range copies and verifies in full."""
+    src = str(tmp_path / "src_wh")
+    li = table(spark, smoke_dir, "lineitem").withColumn(
+        "par_dt", F.date_format("l_shipdate", "yyyyMM")
+    )
+    li.repartition(2).write.partitionBy("par_dt").parquet(f"{src}/lineitem")
+    _corrupt_one_file(f"{src}/lineitem/par_dt=199607", "truncate")
+
+    dst = str(tmp_path / "dst_wh")
+    report = migrate(
+        spark,
+        MigrateJob(src, dst, "lineitem", start="1996-01-01", end="1996-03-31"),
+    )  # must not raise
+    assert report.copied == ["199601", "199602", "199603"]
+    assert report.quarantined == []
+    assert not any(a.kind == "corrupt_file" for a in report.alerts)
+    assert report.ok and set(report.verify) == set(report.copied)
+    assert discover_partitions(spark, f"{dst}/lineitem", "par_dt") == report.copied
+    n_src = li.where(F.col("par_dt").between("199601", "199603")).count()
+    assert spark.read.parquet(f"{dst}/lineitem").count() == n_src
+
+
+def test_clean_source_never_runs_the_file_scan(
+    spark, src_warehouse, tmp_path, monkeypatch
+):
+    """On a clean source the JVM footer pass of the source read is the
+    whole health check: the per-file pyarrow scan (a Python-worker job)
+    must not run at all."""
+    import importlib
+
+    # the package re-exports the function under the module's name
+    migrate_mod = importlib.import_module("hadoop_trans_spark.pipelines.migrate")
+
+    def scan_must_not_run(*_args, **_kwargs):
+        raise AssertionError("per-file health scan ran on a clean source")
+
+    monkeypatch.setattr(migrate_mod, "scan_parquet_health", scan_must_not_run)
+    report = migrate(
+        spark,
+        MigrateJob(
+            src_warehouse, str(tmp_path / "dst"), "lineitem",
+            start="1996-01-01", end="1996-02-29",
+        ),
+    )
+    assert report.ok and report.copied == ["199601", "199602"]
+    assert report.quarantined == []
+
+
+def test_enumerate_partition_keys_runs_one_spark_job(spark):
+    """The day range expands, formats, dedups and sorts inside one array
+    expression over one row: exactly one Spark job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"enumerate_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "enumerate_partition_keys")
+    try:
+        keys = enumerate_partition_keys(spark, "1995-11-15", "1996-02-10", "yyyyMM")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert keys == ["199511", "199512", "199601", "199602"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_corrupt_file_quarantined_when_session_ignores_corrupt_files(
+    spark, smoke_dir, tmp_path
+):
+    """With spark.sql.files.ignoreCorruptFiles=true in the session, Spark
+    drops a file it cannot parse from the schema pass and from the scan
+    without a word, so the footer pass would not fail and the corrupt
+    file would vanish from the copy unreported. migrate's source read
+    pins the option off: the file is still quarantined and named.
+
+    The file's .crc sidecar is removed so that Spark reads the bad bytes
+    as a corrupt parquet file (a bad upload on a store without client
+    checksums), not as a checksum error, which it never ignores."""
+    import os
+
+    src = str(tmp_path / "src_wh")
+    li = table(spark, smoke_dir, "lineitem").withColumn(
+        "par_dt", F.date_format("l_shipdate", "yyyyMM")
+    )
+    li.repartition(2).write.partitionBy("par_dt").parquet(f"{src}/lineitem")
+    bad = _corrupt_one_file(f"{src}/lineitem/par_dt=199602", "garbage")
+    d, name = os.path.split(bad)
+    os.remove(os.path.join(d, f".{name}.crc"))
+
+    key = "spark.sql.files.ignoreCorruptFiles"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        report = migrate(
+            spark,
+            MigrateJob(
+                src, str(tmp_path / "dst_wh"), "lineitem",
+                start="1996-01-01", end="1996-03-31",
+            ),
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert [q["path"].rsplit("/", 1)[-1] for q in report.quarantined] == [name]
+    assert [a.partition for a in report.alerts if a.kind == "corrupt_file"] == [
+        report.quarantined[0]["path"]
+    ]
+    assert report.copied == ["199601", "199602", "199603"]
+    assert report.ok

@@ -1059,6 +1059,23 @@ def test_every_declared_query_has_a_third_engine_model():
     )
 
 
+def test_readme_query_counts_match_the_registry():
+    """README states the size of the query surface twice ("N queries",
+    "N/N ledger"); both must equal the registry, so the count cannot
+    drift from QUERIES again."""
+    import os
+
+    repo = __file__.rsplit("/tests/", 1)[0]
+    with open(os.path.join(repo, "README.md"), encoding="utf-8") as f:
+        text = f.read()
+    stated = re.findall(r"\b(\d+) queries\b", text)
+    ledger = re.findall(r"\b(\d+)/(\d+) ledger\b", text)
+    assert stated and ledger
+    n = str(len(QUERIES))
+    assert set(stated) == {n}, stated
+    assert all(a == b == n for a, b in ledger), ledger
+
+
 def test_third_engine_credit_requires_code_token_not_prose(tmp_path):
     """ADVICE r9: a docstring or comment saying "same shape as q40" in an
     unrelated third-engine test must NOT credit q40 in the COVERAGE.md
