@@ -14,7 +14,7 @@ Layout:
                  minhash/simhash dedup, vector similarity, text stats)
     pipelines  — migrate / compact / verify (the reference's three entry
                  points, re-expressed as distributed scan→sink jobs)
-    sources    — schema-checked readers (parquet/csv/json/binary)
+    sources    — schema-checked readers (parquet/csv/json/orc/xml)
     streaming  — Structured Streaming query builders (E37–E41)
 """
 

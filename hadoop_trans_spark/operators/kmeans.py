@@ -1,129 +1,121 @@
-"""Deterministic k-means (Lloyd) over an embedding column, expressed as
+"""Deterministic k-means (Lloyd) over embedding columns, expressed as
 DataFrame ops — the clustering path that upgrades IVF search
 (operators/similarity.py cell_centroids) from label-defined cells to
-learned cells, and the classic corpus-organization primitive (topic
-bucketing, stratified eval splits) of a training-data pipeline.
+learned cells, the PQ codebook fit (q251/q253/q256), and the classic
+corpus-organization primitive (topic bucketing, stratified eval splits)
+of a training-data pipeline.
+
+One Lloyd core: ``kmeans_fit_fused`` runs S independent fits, one per
+slice of a vector column (the PQ subspaces), as ONE (s)-keyed run;
+``kmeans_fit`` is its one-slice case over a whole column.
 
 Determinism contract (what makes this oracle-checkable across engines):
-  * init = the k vectors with smallest ids, cluster ordinal = id rank —
-    no RNG, no seed state;
+  * init = per slice, the k vectors with smallest ids, cluster ordinal
+    = id rank — no RNG, no seed state;
   * distances rounded to 6 decimals BEFORE the argmin, ties broken on
     cluster ordinal — assignment is stable under fp noise;
   * centroid updates average through decimal (order-independent under
     any partitioning / AQE re-plan).
 
-Physical shape per iteration: the k centroids are collected to the
-driver (O(k·d) — report-sized, like a partition-key listing) and burned
-into the assignment projection as LITERALS, so assignment is a pure
-per-row expression — no join, no window, NO shuffle of the corpus. The
-only exchange per iteration is the (cluster, dim) hash aggregation of
-the centroid update, with map-side partials. Per-vector work is O(k·d);
-the corpus is scanned once per iteration and never pairwise-joined with
-itself. At 100 TB: iterate on a sample to convergence, then one final
-assignment pass over the full corpus — same operator, sampled input.
+Physical shape per iteration: the k centroids of every slice are
+collected to the driver (O(S·k·d) — report-sized, like a partition-key
+listing) and burned into the assignment projection as LITERALS, so
+assignment is a pure per-row expression — no join, no window, NO shuffle
+of the corpus. The only exchange per iteration is the (s, cluster, dim)
+hash aggregation of the centroid update, with map-side partials.
+Per-vector work is O(k·d); the corpus is scanned once per iteration and
+never pairwise-joined with itself. At 100 TB: iterate on a sample to
+convergence, then one final assignment pass over the full corpus — same
+operator, sampled input (``fit_sample_frac``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dbl, dot, lit_doubles
+from .similarity import _dbl, dot, lit_doubles, vec_usable
 
 DEC = "decimal(38,6)"
 
-def vec_usable(col="embedding"):
-    # Euclidean validity: non-NULL, all components finite, |x| < VEC_CAP
-    # — WITHOUT the nonzero-norm conjunct (that rule is cosine-only; an
-    # all-zero vector is a legitimate point under squared-distance).
-    from ..queries.base import vec_usable as _vu  # deferred: avoids the
-    # queries/__init__ registration cycle (see streaming.jobs)
-
-    return _vu(col)
-
-
-def init_centroids(
-    df: DataFrame, k: int, vec: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """First-k-by-id init: (cluster, c, c_sq). Deterministic, seedless.
-
-    The unpartitioned window (Spark warns "No Partition Defined") is
-    over the limit(k) frame — k rows total, never the corpus — so the
-    single partition it forces is k-bounded by construction."""
-    first_k = df.orderBy(id_col).limit(k).select(id_col, vec)
-    w = Window.orderBy(id_col)
-    v = _dbl(F.col(vec))
-    return first_k.select(
-        (F.row_number().over(w) - 1).alias("cluster"),
-        v.alias("c"),
-        dot(v, v).alias("c_sq"),
-    )
-
-
-def assign(corpus: DataFrame, centroid_rows) -> DataFrame:
-    """Nearest-centroid assignment: (id, v, v_sq, cluster, d2).
-
-    ``centroid_rows`` is the collected k-row centroid table. Squared
-    distance = v_sq + c_sq - 2·dot with the single-vector terms hoisted;
-    the centroids enter as literal expressions, so the argmin is
-    array_min over a k-element projection — zero shuffle. array_position
-    takes the FIRST index holding the min, which with the array ordered
-    by cluster ordinal is exactly the (d2, cluster) tie-break. The
-    cluster label is read from the winning struct's own ``cluster``
-    field, NOT the array index: if a cluster empties mid-run,
-    update_centroids' groupBy simply omits its ordinal, and positional
-    labeling would silently renumber every surviving cluster after it.
-    """
-    cents = sorted(centroid_rows, key=lambda r: r["cluster"])
-    lit_cents = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cluster"])).alias("cluster"),
-                lit_doubles(r["c"]).alias("c"),
-                F.lit(float(r["c_sq"])).alias("c_sq"),
-            )
-            for r in cents
-        ]
-    )
-    d2s = F.transform(
-        lit_cents,
-        lambda s: F.round(
-            F.col("v_sq") + s["c_sq"] - 2 * dot(F.col("v"), s["c"]), 6
-        ),
-    )
-    return (
-        corpus.withColumn("d2s", d2s)
-        .withColumn("d2", F.array_min("d2s"))
-        .withColumn(
-            "cluster",
-            F.element_at(
-                lit_cents, F.array_position(F.col("d2s"), F.col("d2")).cast("int")
-            )["cluster"],
-        )
-        .select("id", "v", "v_sq", "cluster", "d2")
-    )
-
 
 def update_centroids(assigned: DataFrame) -> DataFrame:
-    """Per-cluster mean vector via one (cluster, dim) hash aggregation;
-    means go through decimal then round(6) so the new centroids are
-    bit-identical under any execution order."""
-    by_dim = assigned.select(
-        "cluster", F.posexplode("v").alias("pos", "val")
-    )
-    means = by_dim.groupBy("cluster", "pos").agg(
+    """Mean vector per group of ``assigned``'s ``v`` column, grouped by
+    every OTHER column — the fit passes (s, cluster, v), IVF cell
+    routing (q253/q256) passes (cluster, v). Returns (keys..., c, c_sq).
+
+    One (keys, dim) hash aggregation; means go through decimal then
+    round(6) so the new centroids are bit-identical under any execution
+    order."""
+    keys = [c for c in assigned.columns if c != "v"]
+    by_dim = assigned.select(*keys, F.posexplode("v").alias("pos", "val"))
+    means = by_dim.groupBy(*keys, "pos").agg(
         F.round(F.sum(F.col("val").cast(DEC)) / F.count("val"), 6)
         .cast("double")
         .alias("m")
     )
-    packed = means.groupBy("cluster").agg(
+    packed = means.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: s["m"],
+            lambda st: st["m"],
         ).alias("c")
     )
-    return packed.select(
-        "cluster", "c", dot(F.col("c"), F.col("c")).alias("c_sq")
+    return packed.select(*keys, "c", dot(F.col("c"), F.col("c")).alias("c_sq"))
+
+
+def _assign(corpus: DataFrame, cents: dict[int, list]) -> DataFrame:
+    """Nearest-centroid assignment over the (id, s, v, v_sq) corpus:
+    (id, s, v, v_sq, cluster, d2).
+
+    ``cents`` maps each slice ordinal to its centroid rows sorted by
+    cluster; rows of slices without centroids are dropped. Squared
+    distance = v_sq + c_sq - 2·dot with the single-vector terms hoisted;
+    the row's slice picks its centroid array from the literals, so the
+    argmin is array_min over a k-element projection — zero shuffle.
+    array_position takes the FIRST index holding the min, which with the
+    array ordered by cluster ordinal is exactly the (d2, cluster)
+    tie-break. The cluster label is read from the winning struct's own
+    ``cluster`` field, NOT the array index: if a cluster empties
+    mid-run, update_centroids' groupBy simply omits its ordinal, and
+    positional labeling would silently renumber every surviving cluster
+    after it."""
+    ok_s = sorted(cents)
+    all_cents = F.array(
+        *[
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(int(r["cluster"])).alias("cluster"),
+                        lit_doubles(r["c"]).alias("c"),
+                        F.lit(float(r["c_sq"])).alias("c_sq"),
+                    )
+                    for r in cents[s]
+                ]
+            )
+            for s in ok_s
+        ]
+    )
+    idx = F.array_position(F.array(*[F.lit(s) for s in ok_s]), F.col("s"))
+    cents_row = F.element_at(all_cents, idx.cast("int"))
+    d2s = F.transform(
+        cents_row,
+        lambda st: F.round(
+            F.col("v_sq") + st["c_sq"] - 2 * dot(F.col("v"), st["c"]), 6
+        ),
+    )
+    return (
+        corpus.where(F.col("s").isin(ok_s))
+        .withColumn("_cents", cents_row)
+        .withColumn("d2s", d2s)
+        .withColumn("d2", F.array_min("d2s"))
+        .withColumn(
+            "cluster",
+            F.element_at(
+                F.col("_cents"),
+                F.array_position(F.col("d2s"), F.col("d2")).cast("int"),
+            )["cluster"],
+        )
+        .select("id", "s", "v", "v_sq", "cluster", "d2")
     )
 
 
@@ -148,152 +140,19 @@ def kmeans_fit(
     fit_sample_frac: float | None = None,
 ):
     """Like kmeans_assignments, but also returns the centroid rows the
-    FINAL assignment used — (assignments_df, [Row(cluster, c, c_sq)]).
-    Consumers that need the fitted model (PQ codebooks q251, IVF cell
-    routing) read the centroids; the rows are k driver-side literals,
-    never a distributed collect of data.
-
-    ``fit_sample_frac`` is the 100 TB path this module's header
-    documents, executable (VERDICT r13 item 6): Lloyd ITERATES on a
-    deterministic hash-bucket sample (keep id iff
-    pmod(xxhash64(id), 2^20) < frac·2^20 — no RNG, stable under any
-    partitioning), then ONE assignment pass runs over the full corpus
-    with the sample-fitted centroids. Iteration cost drops from
-    O(iters·N·k·d) to O(iters·frac·N·k·d) + O(N·k·d); the full corpus
-    is scanned exactly once. Init is first-k-by-id OF THE SAMPLE, so a
-    sampled fit is a different (still deterministic) model than the
-    full fit — tests/test_analytics_ops.py bounds their agreement.
-    Falls back to the full corpus when the sample holds fewer than k
-    vectors (a sample too small to seed is not a model)."""
-    from .stage import materialize_stage
-
-    # A missing vector has no cluster: NULL / non-finite / over-cap
-    # embeddings are excluded up front (symmetric with the oracle's
-    # WHERE; unfiltered, a NULL in the seed rows crashed the
-    # driver-side centroid iteration — NULL-probe find, r10; a 1e30
-    # component overflows the decimal moment sums — r11). All-zero
-    # vectors stay IN: Euclidean distance is defined for them.
-    df = df.where(vec_usable(vec))
-    v = _dbl(F.col(vec))
-    corpus = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), dot(v, v).alias("v_sq")
-    )
-    # Every iteration runs an action over the corpus (centroid update
-    # collect, then the final assignment) — materialize the projected
-    # (id, v, v_sq) once so the source scan + double-cast + norm happen
-    # once, not once per action. On a cluster this is the cached working
-    # set every iterative fit holds.
-    corpus = materialize_stage(corpus)
-    fit_df, fit_corpus = df, corpus
-    if fit_sample_frac is not None and fit_sample_frac < 1.0:
-        cut = int(fit_sample_frac * (1 << 20))
-        keep = F.pmod(F.xxhash64(F.col("id")), F.lit(1 << 20)) < cut
-        sample = corpus.where(keep)
-        if sample.limit(k).count() >= k:
-            fit_corpus = materialize_stage(sample)
-            fit_df = fit_corpus.select(
-                F.col("id").alias(id_col), F.col("v").alias(vec)
-            )
-    cents = init_centroids(fit_df, k, vec=vec, id_col=id_col).collect()
-    if not cents:
-        # Empty corpus/shard: nothing to seed from — return an empty
-        # typed assignment rather than building a zero-element literal
-        # centroid array (F.array() types as VOID and the transform
-        # lambda fails analysis — empty-input probe find, r10).
-        return (
-            corpus.select(
-                "id",
-                F.lit(None).cast("int").alias("cluster"),
-                F.lit(None).cast("double").alias("d2"),
-            ),
-            [],
-        )
-    # Iterate on the fit corpus (the sample, when one is in force);
-    # only the FINAL assignment pass touches the full corpus.
-    assigned = assign(fit_corpus, cents)
-    for _ in range(iters - 1):
-        cents = update_centroids(assigned).collect()
-        assigned = assign(fit_corpus, cents)
-    if fit_corpus is not corpus:
-        assigned = assign(corpus, cents)
-    return assigned.select("id", "cluster", "d2"), cents
-
-
-def _assign_fused(corpus: DataFrame, centroid_rows) -> DataFrame:
-    """assign() generalized to the (s)-keyed fused corpus: per-subspace
-    centroid literals selected by the row's subspace ordinal. Arithmetic
-    per row is exactly assign()'s (distances rounded to 6 decimals
-    before the argmin, ties broken on cluster ordinal, label read from
-    the winning struct), so per-subspace results are bit-identical."""
-    by_s: dict[int, list] = {}
-    for r in centroid_rows:
-        by_s.setdefault(int(r["s"]), []).append(r)
-    ok_s = sorted(by_s)
-    all_cents = F.array(
-        *[
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(int(r["cluster"])).alias("cluster"),
-                        lit_doubles(r["c"]).alias("c"),
-                        F.lit(float(r["c_sq"])).alias("c_sq"),
-                    )
-                    for r in sorted(by_s[s], key=lambda r: r["cluster"])
-                ]
-            )
-            for s in ok_s
-        ]
-    )
-    # 1-based index of this row's subspace in ok_s (rows of subspaces
-    # with no centroids — empty shards — are filtered out; the caller
-    # emits their empty typed assignment separately, like kmeans_fit).
-    idx = F.array_position(
-        F.array(*[F.lit(int(s)) for s in ok_s]), F.col("s")
-    ).cast("int")
-    cents_row = F.element_at(all_cents, idx)
-    d2s = F.transform(
-        cents_row,
-        lambda st: F.round(
-            F.col("v_sq") + st["c_sq"] - 2 * dot(F.col("v"), st["c"]), 6
-        ),
-    )
-    return (
-        corpus.where(F.col("s").isin([int(s) for s in ok_s]))
-        .withColumn("_cents", cents_row)
-        .withColumn("d2s", d2s)
-        .withColumn("d2", F.array_min("d2s"))
-        .withColumn(
-            "cluster",
-            F.element_at(
-                F.col("_cents"),
-                F.array_position(F.col("d2s"), F.col("d2")).cast("int"),
-            )["cluster"],
-        )
-        .select("id", "s", "v", "v_sq", "cluster", "d2")
-    )
-
-
-def _update_centroids_fused(assigned: DataFrame) -> DataFrame:
-    """update_centroids() with the subspace key carried through the
-    (s, cluster, dim) aggregation — per-(s, cluster) means are the
-    identical decimal-staged values (order-free under any partitioning)."""
-    by_dim = assigned.select(
-        "s", "cluster", F.posexplode("v").alias("pos", "val")
-    )
-    means = by_dim.groupBy("s", "cluster", "pos").agg(
-        F.round(F.sum(F.col("val").cast(DEC)) / F.count("val"), 6)
-        .cast("double")
-        .alias("m")
-    )
-    packed = means.groupBy("s", "cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda st: st["m"],
-        ).alias("c")
-    )
-    return packed.select(
-        "s", "cluster", "c", dot(F.col("c"), F.col("c")).alias("c_sq")
-    )
+    FINAL assignment used — (assignments_df, rows keyed cluster, c,
+    c_sq). Consumers that need the fitted model read the centroids; the
+    rows are k driver-side literals, never a distributed collect of
+    data. The one-slice case of ``kmeans_fit_fused`` (see there for
+    ``fit_sample_frac``)."""
+    return kmeans_fit_fused(
+        df,
+        [F.col(vec)],
+        k=k,
+        iters=iters,
+        id_col=id_col,
+        fit_sample_frac=fit_sample_frac,
+    )[0]
 
 
 def kmeans_fit_fused(
@@ -304,31 +163,44 @@ def kmeans_fit_fused(
     id_col: str = "vec_id",
     fit_sample_frac: float | None = None,
 ):
-    """S independent per-subspace Lloyd fits fused into ONE (s)-keyed
-    run (r15, guide §2.4): ``slices`` is a list of array<double> Columns
-    over ``df`` (e.g. ``F.slice("v", lo, n)`` per PQ subspace); returns
-    ``[(assignments_df, centroid_rows), ...]`` in slice order, each
-    BIT-IDENTICAL to ``kmeans_fit(df.select(id, slice_s), ...)`` on the
-    same slice (differential-tested in tests/test_analytics_ops.py).
+    """S independent per-slice Lloyd fits fused into ONE (s)-keyed run:
+    ``slices`` is a list of array Columns over ``df`` (e.g.
+    ``F.slice("v", lo, n)`` per PQ subspace); returns
+    ``[(assignments_df, centroid_rows), ...]`` in slice order, each the
+    fit ``kmeans_fit`` gives on that slice alone (differential-tested in
+    tests/test_analytics_ops.py).
 
     Why fuse: each separate fit scans the corpus once per action (init,
     per-iteration centroid update, final assignment) — S fits = S scans
     per action plus S materializations and S driver round-trips per
-    iteration, even when thread-pooled. Fused, the exploded
-    (id, s, v, v_sq) working set is materialized ONCE from one scan of
-    ``df``, every iteration runs ONE (s, cluster, dim) aggregation and
-    ONE k·S-row collect for all subspaces, and the per-subspace results
-    are narrow projections of the shared checkpoint. Per-(s, cluster)
-    arithmetic is exactly kmeans_fit's: first-k-by-id init per
-    subspace, distances rounded before the argmin, decimal-staged mean
-    updates — all order-free, so fusing the grouping key changes
-    nothing about the values.
+    iteration. Fused, the exploded (id, s, v, v_sq) working set is
+    materialized ONCE from one scan of ``df``, every iteration runs ONE
+    (s, cluster, dim) aggregation and ONE k·S-row collect for all
+    slices, and the per-slice results are narrow projections of the
+    shared checkpoint. Every step is order-free per (s, cluster), so
+    fusing the grouping key changes nothing about the values.
 
-    Per-subspace usability filtering matches kmeans_fit: a vector can
-    be usable in one subspace and not another; rows are filtered per
-    (id, s) after the slice explode. ``fit_sample_frac`` is honored
-    per subspace (a subspace whose sample holds < k vectors falls back
-    to its full corpus, exactly like kmeans_fit)."""
+    A missing vector has no cluster: NULL / non-finite / over-cap
+    vectors are excluded per (id, s) after the slice explode, so a
+    vector can be usable in one slice and not another (symmetric with
+    the oracles' WHERE; unfiltered, a NULL in the seed rows crashed the
+    driver-side centroid iteration — NULL-probe find, r10; a 1e30
+    component overflows the decimal moment sums — r11). All-zero
+    vectors stay IN: Euclidean distance is defined for them. A slice
+    with no usable vector gets an empty typed assignment and no
+    centroids.
+
+    ``fit_sample_frac`` is the 100 TB path this module's header
+    documents: Lloyd ITERATES on a deterministic hash-bucket sample
+    (keep id iff pmod(xxhash64(id), 2^20) < frac·2^20 — no RNG, stable
+    under any partitioning), then ONE assignment pass runs over the full
+    corpus with the sample-fitted centroids. Iteration cost drops from
+    O(iters·N·k·d) to O(iters·frac·N·k·d) + O(N·k·d). Init is
+    first-k-by-id OF THE SAMPLE, so a sampled fit is a different (still
+    deterministic) model than the full fit — tests/test_analytics_ops.py
+    bounds their agreement. A slice whose sample holds fewer than k
+    vectors falls back to its full corpus (a sample too small to seed
+    is not a model)."""
     from .stage import materialize_stage
 
     S = len(slices)
@@ -337,6 +209,10 @@ def kmeans_fit_fused(
         F.posexplode(F.array(*list(slices))).alias("s", "embedding"),
     ).where(vec_usable("embedding"))
     v = _dbl(F.col("embedding"))
+    # Every iteration runs an action over the corpus (centroid update
+    # collect, then the final assignment) — materialize the projected
+    # working set once so the source scan + double-cast + norm happen
+    # once, not once per action.
     corpus = materialize_stage(
         exploded.select("id", "s", v.alias("v"), dot(v, v).alias("v_sq"))
     )
@@ -356,56 +232,51 @@ def kmeans_fit_fused(
                 corpus.where((in_ok & keep) | ~in_ok)
             )
             sampled = True
-    # First-k-by-id init PER SUBSPACE. NOT a Window.partitionBy("s")
-    # rank: that funnels each subspace's whole corpus through ONE sort
-    # task (the single-partition-window scale-killer this repo bans).
-    # orderBy(id).limit(k) per subspace lowers to TakeOrderedAndProject
-    # — a parallel partial top-k over the checkpoint, exactly what
-    # init_centroids runs — at the cost of S tiny driver actions (k
-    # rows each), which only happen once per fit.
-    cents = []
+    # First-k-by-id init PER SLICE. NOT a Window.partitionBy("s") rank:
+    # that funnels each slice's whole corpus through ONE sort task (the
+    # single-partition-window scale-killer this repo bans).
+    # orderBy(id).limit(k) lowers to TakeOrderedAndProject — a parallel
+    # partial top-k over the checkpoint — at the cost of S tiny driver
+    # actions (k rows each), which only happen once per fit.
+    cents: dict[int, list] = {}
     for s in range(S):
-        rows = sorted(
+        rows = (
             fit_corpus.where(F.col("s") == s)
             .orderBy("id")
             .limit(k)
             .select("id", "v", F.col("v_sq").alias("c_sq"))
-            .collect(),
-            key=lambda r: r["id"],
+            .collect()
         )
-        cents.extend(
-            {"s": s, "cluster": i, "c": r["v"], "c_sq": r["c_sq"]}
-            for i, r in enumerate(rows)
-        )
-    present = {int(r["s"]) for r in cents}
-
-    def _empty(s: int) -> DataFrame:
-        return corpus.where(F.col("s") == s).select(
-            "id",
-            F.lit(None).cast("int").alias("cluster"),
-            F.lit(None).cast("double").alias("d2"),
-        )
-
-    if not present:
-        return [(_empty(s), []) for s in range(S)]
-    assigned = _assign_fused(fit_corpus, cents)
-    for _ in range(iters - 1):
-        cents = _update_centroids_fused(assigned).collect()
-        assigned = _assign_fused(fit_corpus, cents)
-    if sampled:
-        assigned = _assign_fused(corpus, cents)
-    by_s: dict[int, list] = {}
-    for r in cents:
-        by_s.setdefault(int(r["s"]), []).append(r)
+        if rows:
+            cents[s] = [
+                {"s": s, "cluster": i, "c": r["v"], "c_sq": r["c_sq"]}
+                for i, r in enumerate(sorted(rows, key=lambda r: r["id"]))
+            ]
+    if cents:
+        assigned = _assign(fit_corpus, cents)
+        for _ in range(iters - 1):
+            cents = {}
+            for r in sorted(
+                update_centroids(assigned.select("s", "cluster", "v")).collect(),
+                key=lambda r: (r["s"], r["cluster"]),
+            ):
+                cents.setdefault(int(r["s"]), []).append(r)
+            assigned = _assign(fit_corpus, cents)
+        if sampled:
+            assigned = _assign(corpus, cents)
     out = []
     for s in range(S):
-        if s not in present:
-            out.append((_empty(s), []))
-            continue
-        out.append(
-            (
-                assigned.where(F.col("s") == s).select("id", "cluster", "d2"),
-                sorted(by_s.get(s, []), key=lambda r: r["cluster"]),
+        if s in cents:
+            a = assigned.where(F.col("s") == s).select("id", "cluster", "d2")
+        else:
+            # Nothing to seed from: an empty typed assignment rather
+            # than a zero-element literal centroid array (F.array()
+            # types as VOID and the transform lambda fails analysis —
+            # empty-input probe find, r10).
+            a = corpus.where(F.col("s") == s).select(
+                "id",
+                F.lit(None).cast("int").alias("cluster"),
+                F.lit(None).cast("double").alias("d2"),
             )
-        )
+        out.append((a, cents.get(s, [])))
     return out

@@ -27,7 +27,7 @@ def _input_partitions(df: DataFrame) -> int:
 
     The RDD probe forces physical planning; most call sites probe the
     same handful of raw table scans (documents/lineitem), so one probe
-    per distinct plan covers a whole 241-query bench run. The cache
+    per distinct plan covers a whole bench run of every query. The cache
     lives ON the session object so it dies with the session (a global
     keyed on id(session) could collide after CPython id reuse, and a
     different master/parallelism can legitimately change the split
@@ -76,16 +76,6 @@ def parallelize_stage(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
-# Executed-plan strings of the most recent materialize_stage calls, for
-# PLAN TESTS only: a checkpoint cuts lineage, so a shape lock on a
-# query's final plan (e.g. "the cumulative window is band-partitioned")
-# can no longer see work that ran BELOW the cut. The registry keeps the
-# plans that actually executed during materialization so the lock stays
-# assertable (tests/test_plans.py); bounded, cleared by the tests.
-MATERIALIZED_PLANS: list[str] = []
-_MATERIALIZED_PLANS_MAX = 64
-
-
 def materialize_stage(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     """Cut lineage and materialize `df` once for its multiple consumers.
 
@@ -97,13 +87,7 @@ def materialize_stage(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     sc = df.sparkSession.sparkContext
     if reliable is None:
         reliable = sc.getCheckpointDir() is not None
-    out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-    # Record the stage's executed plan (already planned — the eager
-    # checkpoint just ran it; toString is driver-side and cheap).
-    if len(MATERIALIZED_PLANS) >= _MATERIALIZED_PLANS_MAX:
-        del MATERIALIZED_PLANS[: _MATERIALIZED_PLANS_MAX // 2]
-    MATERIALIZED_PLANS.append(df._jdf.queryExecution().executedPlan().toString())
-    return out
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
 
 # Per-process memo for pipeline stages shared by several declared queries

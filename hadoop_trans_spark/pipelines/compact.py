@@ -76,11 +76,7 @@ def _compact_partition(
     GIL.
     """
     rel = part_dir[len(table_path) + 1 :]
-    files = [
-        (p, sz)
-        for p, sz in fs.list_files(spark, part_dir)
-        if not p.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
+    files = fs.data_files(spark, part_dir)
     if not files:
         return rel, "empty", 0, 0
     total = sum(sz for _, sz in files)
@@ -115,10 +111,7 @@ def _compact_partition(
             fs.rename(spark, bak_dir, part_dir)  # roll back
             raise OSError(f"swap failed for {part_dir}")
         fs.delete(spark, bak_dir)
-        after = len(
-            [p for p, _ in fs.list_files(spark, part_dir) if not p.endswith("_SUCCESS")]
-        )
-        return rel, "compacted", len(files), after
+        return rel, "compacted", len(files), len(fs.data_files(spark, part_dir))
     except Exception as exc:  # keep going; sources stay intact
         sink.emit(Alert("error", "compact_failure", table_path, rel, str(exc)))
         if fs.exists(spark, tmp_dir):

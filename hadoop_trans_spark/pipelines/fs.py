@@ -52,6 +52,16 @@ def list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     return sorted(out)
 
 
+def data_files(spark: SparkSession, root: str) -> list[tuple[str, int]]:
+    """``list_files`` without markers: files whose name starts with
+    ``_`` or ``.`` (_SUCCESS, hidden/temp files) are not data."""
+    return [
+        (p, sz)
+        for p, sz in list_files(spark, root)
+        if not p.rsplit("/", 1)[-1].startswith(("_", "."))
+    ]
+
+
 def qualify(spark: SparkSession, path: str) -> str:
     """Fully-qualified URI form of ``path`` (file:/… locally, hdfs://…
     on a cluster) — what listFiles returns, and what a basePath must

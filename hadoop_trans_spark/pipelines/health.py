@@ -105,12 +105,8 @@ def scan_parquet_health(
 
 
 def data_files(spark: SparkSession, root: str) -> list[str]:
-    """All data files under ``root`` (recursively), excluding markers
-    (_SUCCESS, hidden/temp files) — the candidate set for a health scan."""
+    """All data files under ``root`` (recursively) — the candidate set
+    for a health scan."""
     from . import fs
 
-    return [
-        p
-        for p, _ in fs.list_files(spark, root)
-        if not p.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
+    return [p for p, _ in fs.data_files(spark, root)]

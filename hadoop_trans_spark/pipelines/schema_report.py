@@ -29,18 +29,10 @@ from . import fs
 REPORT_SCHEMA = "path string, col_name string, phys_type string"
 
 
-def _data_files(spark: SparkSession, table_path: str) -> list[str]:
-    return [
-        p
-        for p, _sz in fs.list_files(spark, table_path)
-        if not p.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
-
-
 def schema_drift_report(spark: SparkSession, table_path: str) -> DataFrame:
     """(col_name, n_files_with, n_files_missing, n_types) over every
     data file under ``table_path``, sorted by column name."""
-    files = _data_files(spark, table_path)
+    files = [p for p, _ in fs.data_files(spark, table_path)]
     total = len(files)
     if not files:
         return spark.createDataFrame(

@@ -42,56 +42,56 @@ from .base import ORACLE, QUERIES
 _SWEEP_PRIORITY = [
     # Generated by tools/rotate_sweep.py — do not hand-edit;
     # rerun the tool at the start of each round and commit.
-    "q151_wav_decode",
-    "q152_ppm_decode",
-    "q163_ahash_neardup",
-    "q181_spearman_by_brand",
-    "q202_stream_stream_full_outer",
-    "q204_adamic_adar",
-    "q216_equidepth_histogram",
-    "q220_rfm_segments",
-    "q229_spectral_dominant",
-    "q64_dedup_canonical",
-    "q247_ppm_thumbnail",
-    "q121_raw_decode",
-    "q246_footer_quarantine",
+    "q105_kmeans_clusters",
+    "q249_semantic_dedup",
     "q251_pq_ann",
     "q253_ivfpq_ann",
     "q256_ivfpq_residual_ann",
-    "q143_event_paths",
-    "q144_hll_sketch_rollup",
-    "q145_dq_audit",
-    "q146_correlated_subquery",
-    "q147_recursive_bfs",
-    "q148_stream_stream_left_join",
-    "q149_text_source",
-    "q150_binaryfile_source",
-    "q153_geo_radius_join",
-    "q154_pareto_frontier",
-    "q155_chisq_terms",
-    "q156_weighted_median",
-    "q157_sorted_neighborhood",
-    "q158_shipping_priority",
-    "q159_seasonal_anomaly",
-    "q01_pricing_summary",
-    "q02_projection_cast",
-    "q03_filter_predicates",
-    "q04_broadcast_join",
-    "q05_revenue_by_nation",
-    "q06_outer_join_order_counts",
-    "q07_full_outer_reconcile",
-    "q08_semi_anti_customers",
-    "q09_theta_size_bucket",
-    "q160_ohlc_bars",
-    "q161_incremental_rollup",
-    "q162_large_volume_orders",
-    "q164_countmin_freq",
-    "q165_revenue_concentration",
-    "q166_null_semantics",
-    "q167_linear_attribution",
-    "q168_volume_shipping",
-    "q169_market_share",
-    "q170_returned_revenue",
+    "q171_order_count_distribution",
+    "q172_promo_revenue",
+    "q173_inactive_high_balance",
+    "q174_boilerplate_coverage",
+    "q175_bigram_lm_interp",
+    "q176_linear_interpolation",
+    "q177_cusum_changepoint",
+    "q178_market_basket",
+    "q179_event_pattern_match",
+    "q180_range_clustered_layout",
+    "q183_stream_windowed_topk",
+    "q184_forget_users",
+    "q185_share_of_total",
+    "q186_late_shipment_orders",
+    "q187_rolling_hll_distinct",
+    "q188_zipf_slope",
+    "q189_stream_complete_totals",
+    "q190_snapshot_time_travel",
+    "q191_cdc_apply",
+    "q192_hll_intersection",
+    "q193_top_supplier",
+    "q194_forecast_revenue",
+    "q195_benford_digits",
+    "q196_daily_acf",
+    "q197_k_anonymity",
+    "q199_ab_ztest",
+    "q200_degree_distribution",
+    "q201_rake_keywords",
+    "q10_asof_click_to_view",
+    "q11_agg_battery",
+    "q12_approx_distinct",
+    "q13_rollup",
+    "q14_cube",
+    "q15_collect_nations",
+    "q16_union_distinct",
+    "q17_intersect_except",
+    "q18_dedup_keep_first",
+    "q46_struct_nested",
+    "q47_binary_payload",
+    "q203_holt_forecast",
+    "q206_winsorize_acctbal",
+    "q207_small_qty_revenue",
+    "q208_discount_brackets",
+    "q209_profit_by_nation_year",
+    "q210_twap_per_user",
 ]
 
 

@@ -1708,13 +1708,13 @@ def q220_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = materialize_stage(m)
 
-    def cuts(col: str, band_width: int | None):
-        # Only the MONETARY leg's distinct values scale with the
-        # customer count, so only it pays for the banded cumsum
-        # (band_width set). rec is calendar-bounded and freq is
-        # bounded by per-customer order counts — their plain
-        # metadata-sized windows stay (band_width None), saving two
-        # band-stage checkpoints per run.
+    def cuts(col: str, band_width: int):
+        # The MONETARY leg: its distinct values scale with the customer
+        # count, so it pays for the banded cumsum. rec is
+        # calendar-bounded and freq is bounded by per-customer order
+        # counts, so cuts_rec_freq() runs both on one plain
+        # metadata-sized window, saving two band-stage checkpoints per
+        # run.
         hist = m.groupBy(F.col(col).alias("v")).agg(F.count("*").alias("cnt"))
         cum = banded_cumsum(
             hist,

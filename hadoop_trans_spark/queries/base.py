@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import VEC_CAP, vec_usable, vec_valid  # noqa: F401
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -210,28 +212,6 @@ def ts_in_domain(col: Column | str = "ts") -> Column:
     )
 
 
-# Valid-embedding domain for similarity / clustering / quantization.
-# r10 excluded NULL vectors (one NULL killed the kmeans centroid fold);
-# the r11 vec probe showed the remaining degenerate shapes are just as
-# lethal: an ALL-ZERO vector makes cosine normalization divide by zero
-# (a hard ANSI job crash in six similarity queries), a NaN/inf component
-# poisons every score it touches, and a 1e30-magnitude component
-# overflows the decimal moment sums (kmeans crash at 6.4e61). A vector
-# is valid iff non-NULL, every component finite with |x| < VEC_CAP
-# (squares stay inside the exact envelope), and norm > 0. Invalid
-# vectors are excluded symmetrically, like NULL.
-VEC_CAP = 1e15
-
-
-def vec_valid(col: Column | str = "embedding") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    fin = F.forall(
-        c, lambda x: ~F.isnan(x) & (F.abs(x) < F.lit(VEC_CAP))
-    )
-    nonzero = F.exists(c, lambda x: x != F.lit(0.0))
-    return c.isNotNull() & fin & nonzero
-
-
 def o_vec_valid(col: str = "embedding") -> str:
     """DuckDB mirror of vec_valid (element NULLs count as invalid)."""
     bad = (
@@ -242,22 +222,6 @@ def o_vec_valid(col: str = "embedding") -> str:
         f"({col} IS NOT NULL AND {bad} "
         f"AND len(list_filter({col}, x -> x <> 0)) > 0)"
     )
-
-
-# Euclidean / norm-agnostic validity: vec_valid WITHOUT the nonzero-norm
-# conjunct. norm > 0 is a COSINE-only rule (zero norm = undefined
-# angle); under Euclidean distance (kmeans) or per-component transforms
-# (int8 quantization) the all-zero vector is a perfectly valid point,
-# and filtering it out silently drops rows, reseeds kmeans init, and
-# renumbers surviving clusters (r11 overreach, judge find). Keep the
-# finiteness + |x| < VEC_CAP terms — those guard the decimal moment
-# sums on ANY path.
-def vec_usable(col: Column | str = "embedding") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    fin = F.forall(
-        c, lambda x: ~F.isnan(x) & (F.abs(x) < F.lit(VEC_CAP))
-    )
-    return c.isNotNull() & fin
 
 
 def o_vec_usable(col: str = "embedding") -> str:
@@ -278,12 +242,6 @@ def ts_micros(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
-
-
-def ts_day(col: Column | str) -> Column:
-    """Timestamp → 'yyyy-MM-dd' string; DuckDB: strftime(ts, '%Y-%m-%d')."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd")
 
 
 # DuckDB-side fragments mirroring the helpers above.

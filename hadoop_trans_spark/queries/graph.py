@@ -148,13 +148,14 @@ def _supplier_backbone(spark: SparkSession, sf_dir: str):
 def _part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT part co-purchase pair table (u < v) shared by q200
     (degree distribution) and q204 (Adamic-Adar) — one definition, NOT
-    materialized: a measured attempt to memoize+checkpoint it (~1.2M
-    rows at sf0.1) made q204 SLOWER (7.0 vs 3.4 s at sf0.01 — the
-    eager cut forfeits AQE's view of the wedge join) and the resident
-    checkpoint plus the anti-join broadcast OOM'd a default-memory
-    driver session on the second call. Catalyst's exchange reuse
-    already dedups the identical pair subtrees within one query plan;
-    cross-query sharing is not worth the residency here."""
+    memoized across queries: a measured attempt to memo_stage it (~1.2M
+    rows at sf0.1) made q204 SLOWER (7.0 vs 3.4 s at sf0.01 — the eager
+    cut forfeited AQE's view of q204's wedge self-join, since removed)
+    and the resident checkpoint plus the anti-join broadcast OOM'd a
+    default-memory driver session on the second call. q204 now
+    checkpoints it within its own query (materialize_stage, not
+    memo_stage), so its broadcast branches share one fact scan; q200
+    consumes it unmaterialized."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return copurchase_pairs(li, "l_orderkey", "l_partkey")
 

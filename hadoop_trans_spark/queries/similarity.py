@@ -905,7 +905,7 @@ def _pq_encode(
     build them themselves). Returns (codes, luts, books): codes =
     (vec_id, code0, code1) — 2 bytes/vector at scale; luts[s] =
     (q{s}, k{s}, d2_{s}), |queries| x k rows, broadcast-sized.
-    ``fit_sample_frac`` passes through to kmeans_fit: at corpus scale
+    ``fit_sample_frac`` passes through to kmeans_fit_fused: at corpus scale
     the codebooks are fitted on a deterministic sample and only the
     ENCODE pass (one nearest-codeword projection, zero shuffle) touches
     every vector. Also returns the fitted per-subspace codebook
@@ -1272,10 +1272,10 @@ def q256_ivfpq_residual_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = update_centroids(
         xb.select(F.col("label").alias("cluster"), "v")
     )
-    # Materialized: kmeans_fit's per-iteration collects would otherwise
-    # re-execute the centroid agg + residual join once per action (2
-    # iters x 2 subspaces + the final plan — measured 9.9 s -> the
-    # stage runs once).
+    # Materialized: the codebook fit's actions (per-subspace init,
+    # per-iteration collect, final plan) would otherwise each
+    # re-execute the centroid agg + residual join (measured 9.9 s ->
+    # the stage runs once).
     from ..operators.stage import materialize_stage
 
     rb = materialize_stage(

@@ -1,4 +1,4 @@
-"""Schema-checked source readers (E1/E2) and the binary-file source.
+"""Schema-checked source readers (E1/E2).
 
 Policy (SURVEY §1.2): schemas are declared, never inferred, except at
 explicit ingest boundaries. Inference on 100 TB means a second scan and
@@ -46,16 +46,6 @@ def read_orc(spark: SparkSession, path: str, schema: T.StructType | str | None =
     if schema is not None:
         r = r.schema(schema)
     return r.orc(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Opaque-blob source (path, modificationTime, length, content) — the
-    Spark equivalent of the reference's byte-stream file model
-    (`HDFSMerge.java:199-210` treated all files as raw bytes)."""
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    return r.load(path)
 
 
 def read_xml(spark: SparkSession, path: str, schema: T.StructType | str, row_tag: str = "row") -> DataFrame:

@@ -13,7 +13,6 @@ float32→float64 widening, int32 vs int64), never value differences.
 
 from __future__ import annotations
 
-import hashlib
 import math
 from dataclasses import dataclass, field
 
@@ -64,14 +63,6 @@ def canon_rows(df: pd.DataFrame) -> list[str]:
         out.append(SEP.join(_canon_value(v) for v in row))
     out.sort()
     return out
-
-
-def value_hash(df: pd.DataFrame) -> str:
-    h = hashlib.sha256()
-    for r in canon_rows(df):
-        h.update(r.encode("utf-8"))
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 @dataclass

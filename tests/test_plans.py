@@ -1240,16 +1240,30 @@ def test_cumulative_histograms_are_band_partitioned(name, spark, smoke_dir):
     table — distinct near-continuous values scale with the data. The
     only unpartitioned windows left consume metadata-sized frames (the
     band-offsets table, literal bin frames)."""
-    from hadoop_trans_spark.operators.stage import MATERIALIZED_PLANS
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
 
-    MATERIALIZED_PLANS.clear()
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionsList()
+        )
+
+    # By id, not list position: the store caps how many it retains.
+    watermark = max((e.executionId() for e in executions()), default=-1)
     df = QUERIES[name](spark, smoke_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # r15: q216 materializes its cumulative table for its two consumer
     # branches, which cuts the banded window below the checkpoint — the
-    # lock follows it into the materialized-stage plans (the window must
-    # still execute banded SOMEWHERE on the query's path).
-    everywhere = plan + "\n".join(MATERIALIZED_PLANS)
+    # lock follows it into the plans of the SQL executions the build
+    # ran (the window must still execute banded SOMEWHERE on the
+    # query's path).
+    below = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > watermark
+    ]
+    everywhere = "\n".join([plan, *below])
     assert "_bkt" in everywhere, f"{name}: banded window missing\n{plan}"
     assert "CartesianProduct" not in plan, plan
 

@@ -528,8 +528,11 @@ def test_schema_drift_report_matches_independent_walk(spark, tmp_path):
 
     a = spark.createDataFrame([(1, 10.0)], "id long, v double")
     b = spark.createDataFrame([(2, 20.0, "x")], "id long, v double, note string")
-    a.repartition(2).write.parquet(str(tmp_path / "t" / "p=1"))
-    b.repartition(2).write.parquet(str(tmp_path / "t" / "p=2"))
+    # Two one-row appends per side: two non-empty files each (Spark
+    # writes no file for an empty partition).
+    for _ in range(2):
+        a.coalesce(1).write.mode("append").parquet(str(tmp_path / "t" / "p=1"))
+        b.coalesce(1).write.mode("append").parquet(str(tmp_path / "t" / "p=2"))
 
     files = []
     for root, _dirs, names in os.walk(tmp_path / "t"):

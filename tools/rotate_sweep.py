@@ -65,26 +65,18 @@ RESHAPED: dict[str, int] = {
     "q41": 13,
     "q63": 13,
     "q122": 13,
-    # round-14 reshape: q251's codebook/LUT build factored into
-    # _pq_encode (shared with the new q253 IVF+PQ composition); its r13
-    # driver row proves the pre-refactor inline loop.
-    "q251": 14,
     # round-14 OPTIMIZATION reshapes (OPTIMIZATION_r14.md): q205 FK
     # checks folded into one fact scan; q123 pagerank loop invariants
     # hoisted + node table derived from the outdeg checkpoint;
     # q68/q85/q70 connected_components convergence check restructured;
-    # q244 triage fused into one mapInPandas; q246 month list taken
-    # from the migrate report; q253/q256 (with q251 above) share the
-    # thread-pooled _pq_encode. Latest driver rows predate these.
+    # q244 triage fused into one mapInPandas. Latest driver rows
+    # predate these.
     "q205": 14,
     "q123": 14,
     "q68": 14,
     "q85": 14,
     "q70": 14,
     "q244": 14,
-    "q246": 14,
-    "q253": 14,
-    "q256": 14,
     # r14 pin-rule misses flagged by VERDICT r14 (item 4): q64 consumes
     # the r14-changed connected_components (operators/components.py) but
     # was left outside the r14 window; q202 exercises the r14 staging/
@@ -97,10 +89,8 @@ RESHAPED: dict[str, int] = {
     # q152, q163, q229, q247); q204's wedge self-join replaced by the
     # in-array C(k,2) expansion over a materialized pair table; q216's
     # cumulative histogram materialized for its two consumers; q220's
-    # rec/freq cutoff legs fused into one metric-tagged window; the
-    # q251/q253/q256 per-subspace codebook fits fused into one
-    # (subspace)-keyed Lloyd run; q246's month list now reads
-    # report.to_copy.
+    # rec/freq cutoff legs fused into one metric-tagged window; q246's
+    # month list now reads report.to_copy.
     "q121": 15,
     "q151": 15,
     "q152": 15,
@@ -110,13 +100,20 @@ RESHAPED: dict[str, int] = {
     "q204": 15,
     "q216": 15,
     "q220": 15,
-    "q251": 15,
-    "q253": 15,
-    "q256": 15,
     "q246": 15,
     # q181's tie-count windows re-framed onto the rank windows (same
     # exchange); q181's latest driver row predates the reshape.
     "q181": 15,
+    # round-16: one Lloyd k-means core — kmeans_fit is now the one-slice
+    # case of the (subspace)-keyed fused fit, so q105/q249
+    # (kmeans_assignments) run the fused core, and q251/q253/q256 (the
+    # PQ codebook fits, fused in r15) run it with the merged
+    # update_centroids.
+    "q105": 16,
+    "q249": 16,
+    "q251": 16,
+    "q253": 16,
+    "q256": 16,
 }
 
 
