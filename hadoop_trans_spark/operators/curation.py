@@ -49,7 +49,7 @@ def decontaminate(
     """
     from .stage import parallelize_stage
 
-    # NULL-text docs excluded on BOTH sides (word_shingles rule,
+    # NULL-text docs excluded on BOTH sides (shingle_array rule,
     # NULL-probe find r10): word_grams degenerates on NULL text to the
     # single gram "", so unfiltered NULL corpus docs would read as
     # "contaminated" by NULL benchmark docs.
@@ -85,7 +85,7 @@ def repetition_stats(
     so no extra scan or join exists anywhere."""
     from .stage import parallelize_stage
 
-    # Contentless docs have no repetition signal (word_shingles rule,
+    # Contentless docs have no repetition signal (shingle_array rule,
     # NULL-probe find r10) — excluded rather than emitted with NULL/
     # degenerate fractions.
     df = df.where(F.col(text_col).isNotNull())

@@ -47,7 +47,15 @@ from .stage import materialize_stage, parallelize_stage
 
 def shingle_array(text_col="text", k: int = 3) -> F.Column:
     """Distinct word k-gram shingles of a text column (name or Column),
-    as an array."""
+    as an array.
+
+    NULL text must be filtered out by the caller: a contentless doc has
+    no shingles and can never be a content-duplicate. On NULL this
+    expression degenerates (split→NULL, size→-1, concat_ws skips the
+    null) to the single shingle "" — every NULL doc then fingerprints
+    identically and the pair stage emits the full NULL-doc clique
+    (NULL-probe find, r10; the DuckDB oracles drop these docs naturally
+    via null-propagating string ops)."""
     ws = F.split(
         text_col if isinstance(text_col, F.Column) else F.col(text_col), " "
     )
@@ -56,25 +64,6 @@ def shingle_array(text_col="text", k: int = 3) -> F.Column:
             F.sequence(F.lit(1), F.greatest(F.size(ws) - (k - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(ws, i, k)),
         )
-    )
-
-
-def word_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Distinct word k-gram shingles per doc: (id, shingle) — exploded
-    form, used where a relational shingle table is genuinely needed.
-
-    NULL-text docs are excluded: a contentless doc has no shingles and
-    can never be a content-duplicate. Without the filter shingle_array
-    degenerates on NULL (split→NULL, size→-1, concat_ws skips the null)
-    to the single shingle "" — every NULL doc then fingerprints
-    identically and the pair stage emits the full NULL-doc clique
-    (NULL-probe find, r10; the DuckDB oracles drop these docs naturally
-    via null-propagating string ops)."""
-    return df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        F.explode(shingle_array(text_col, k)).alias("shingle"),
     )
 
 

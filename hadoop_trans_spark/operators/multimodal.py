@@ -2,16 +2,33 @@
 metadata, with decode/feature-extraction as Arrow-batched `mapInPandas`
 operators.
 
+One media kernel: every payload operator is a per-row function
+``row_fn(doc_id, payload) -> tuple`` behind one batch driver,
+`_media_map`. The driver owns the Arrow-batched mapInPandas, the
+foreign-mime gate (NotImplementedError — a configuration error, never
+data), dead-lettering of malformed and NULL payloads, and the
+empty-batch guard. Fed a MEDIA_SCHEMA table it reads each row's
+payload; given the synthesizer's ``encode_row(doc_id) -> bytes`` it
+builds each payload in the same Python worker that consumes it, so the
+bytes never cross the JVM↔Python boundary and attach_* → decode_*
+collapses to one crossing. Both run the same per-row loop, so the two
+forms are row-identical by construction.
+
 Decode coverage: REAL byte-level decoders exist for three formats that
-need no external codec library — PCM16 WAV audio (stdlib `wave`,
-decode_wav_features), netpbm P6 PPM images (header grammar + numpy,
-decode_ppm_features), and the documented raw-RGB layout (decode_media).
-Compressed codecs (JPEG/PNG/libav audio) are NOT in this container, so
-their mime branches raise NotImplementedError loudly; `fake_features`
-remains the deterministic stand-in used by schema/batching tests. The
-Spark-side contract — schema, Arrow batch shape, partition-size control
-for large payloads, struct metadata model — is identical for every
-format and exercised end-to-end by the real decoders.
+need no external codec library — PCM16 WAV audio (stdlib `wave`, the
+one reader `_read_pcm16`), netpbm P6 PPM images (header grammar +
+numpy, the one parser `_read_ppm`), and the documented raw-RGB layout
+(`_read_raw_rgb`). Only these readers reject a payload: they raise
+`_Malformed`, which the driver dead-letters (one truncated blob must
+not kill a 100 TB job), and whose status class is exactly
+validate_media's triage. An error in the feature math still fails the
+task. Compressed codecs (JPEG/PNG/libav audio) are NOT in this
+container, so their mime branches raise NotImplementedError loudly;
+`fake_features` remains the deterministic stand-in used by
+schema/batching tests. The Spark-side contract — schema, Arrow batch
+shape, partition-size control for large payloads, struct metadata model
+— is identical for every format and exercised end-to-end by the real
+decoders.
 
 100 TB notes: binary payloads dominate row width — keep
 `spark.sql.files.maxPartitionBytes` small enough that a batch of decoded
@@ -22,8 +39,14 @@ the bytes (column pruning).
 
 from __future__ import annotations
 
+import hashlib
+import io
+import math
+import struct
+import wave
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -58,110 +81,88 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_binary(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+class _Malformed(ValueError):
+    """A payload a reader rejects. ``args[0]`` is its validate_media
+    status class: 'header', 'payload' or 'unsupported'."""
+
+
+def _media_map(
+    df: DataFrame,
+    row_fn,
+    schema: T.StructType,
+    mime: str,
+    encode_row=None,
+) -> DataFrame:
+    """The one batch driver behind every payload operator: Arrow-batched
+    mapInPandas applying ``row_fn(doc_id, payload)`` to each row; the
+    returned tuple is one output row in ``schema`` field order.
+
+    Without ``encode_row`` the input is a MEDIA_SCHEMA table, and a row
+    of any mime but ``mime`` raises NotImplementedError. With it the
+    input only needs a doc_id column: each payload is
+    ``encode_row(doc_id)``, born and consumed in one Python worker — no
+    intermediate MEDIA_SCHEMA frame, no checksum — and the input is
+    parallelized first because the Python-side encode is the CPU stage.
+    A row whose reader raises `_Malformed` (NULL payloads included) is
+    dead-lettered; any other error fails the task."""
+    kind = mime.split("/")[0]
+    names = schema.fieldNames()
+    if encode_row is not None:
+        from .stage import parallelize_stage
+
+        df = parallelize_stage(df).select("doc_id")
+
+    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if encode_row is None:
+                for meta in pdf["meta"]:
+                    if meta["mime"] != mime:
+                        raise NotImplementedError(
+                            f"no {kind} decoder for {meta['mime']!r}"
+                        )
+                payloads = pdf["payload"]
+            else:
+                payloads = (encode_row(int(d)) for d in pdf["doc_id"])
+            out = []
+            for doc_id, payload in zip(pdf["doc_id"], payloads):
+                try:
+                    out.append(row_fn(int(doc_id), payload))
+                except _Malformed:
+                    continue
+            if out:
+                yield pd.DataFrame(out, columns=names)  # an empty frame is untyped -> Arrow error
+
+    return df.mapInPandas(_map, schema)
+
+
+def _synth_media(df: DataFrame, encode_row, mime: str) -> DataFrame:
+    """The attach_* shape: MEDIA_SCHEMA rows whose payload is
+    ``encode_row(doc_id)``, with mime/n_bytes/sha256 meta."""
+
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        meta = {
+            "mime": mime,
+            "n_bytes": len(payload),
+            "checksum": hashlib.sha256(payload).hexdigest(),
+        }
+        return doc_id, payload, meta
+
+    return _media_map(df, _row, MEDIA_SCHEMA, mime, encode_row)
+
+
+def attach_binary(df: DataFrame) -> DataFrame:
     """Model a media table from the documents fixture: payload = utf-8
     bytes of the text (stand-in for image/audio bytes), typed meta struct."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("application/octet-stream").alias("mime"),
             F.octet_length(payload).cast("long").alias("n_bytes"),
-            F.sha2(F.col(text_col).cast("string"), 256).alias("checksum"),
+            F.sha2(F.col("text").cast("string"), 256).alias("checksum"),
         ).alias("meta"),
     )
-
-
-def _encode_media_batches(encode_row, mime: str, id_col: str = "doc_id"):
-    """Batch-function factory behind every synthesizer (attach_*):
-    per-row ``encode_row(doc_id) -> bytes`` wrapped into MEDIA_SCHEMA
-    frames (payload + mime/n_bytes/sha256 meta). ONE definition shared
-    by the standalone attach operators and the fused synth→decode
-    pipelines below, so fusion cannot drift from the operators —
-    composition of the identical batch functions (r15, guide §4.1; the
-    q244 shared-helper rule generalized)."""
-    import hashlib
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "payload": [], "meta": []}
-            for doc_id in pdf[id_col]:
-                payload = encode_row(int(doc_id))
-                rows["doc_id"].append(int(doc_id))
-                rows["payload"].append(payload)
-                rows["meta"].append(
-                    {
-                        "mime": mime,
-                        "n_bytes": len(payload),
-                        "checksum": hashlib.sha256(payload).hexdigest(),
-                    }
-                )
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
-
-    return _encode
-
-
-def _synth_media(df: DataFrame, encode_row, mime: str, id_col: str) -> DataFrame:
-    """The standalone synthesizer shape: parallelize (Python-side encode
-    is the CPU stage), prune to the id column, one mapInPandas."""
-    from .stage import parallelize_stage
-
-    df = parallelize_stage(df)
-    return df.select(F.col(id_col)).mapInPandas(
-        _encode_media_batches(encode_row, mime, id_col), MEDIA_SCHEMA
-    )
-
-
-def fuse_synth_decode(
-    df: DataFrame,
-    encode_row,
-    mime: str,
-    decode_batches,
-    schema: T.StructType,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fused synthesize→decode in ONE Python crossing (r15, guide §4.1
-    — the q244 fusion generalized to the whole media-decode family).
-
-    The chained form (attach_* → decode_*) runs TWO mapInPandas
-    operators: every payload byte crosses Python→JVM after the encode
-    and JVM→Python again before the decode, and each task runs two
-    Python runners. Both stages are pure per-row functions over the
-    same rows, so the fused operator composes the SAME batch functions
-    (the encode factory above + the decode operator's module-level
-    batch function) inside one mapInPandas: payloads are born and
-    consumed in the same Python worker and never cross the boundary at
-    all; only the decoded feature rows return to the JVM. Results are
-    identical by construction — it is literal function composition of
-    the operators' own batch functions."""
-    from .stage import parallelize_stage
-
-    df = parallelize_stage(df)
-    enc = _encode_media_batches(encode_row, mime, id_col)
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return decode_batches(enc(batches))
-
-    return df.select(F.col(id_col)).mapInPandas(_fused, schema)
-
-
-def _maybe_fuse(
-    df: DataFrame,
-    decode_batches,
-    schema: T.StructType,
-    encode_row,
-    mime: str,
-    id_col: str,
-) -> DataFrame:
-    """Every decode operator's exit point: plain mapInPandas when fed an
-    already-materialized media table (``encode_row=None``), or the fused
-    single-crossing pipeline when the caller passes the synthesizer's
-    per-row encode rule (see fuse_synth_decode)."""
-    if encode_row is None:
-        return df.mapInPandas(decode_batches, schema)
-    return fuse_synth_decode(df, encode_row, mime, decode_batches, schema, id_col)
 
 
 RAW_RGB_MIME = "image/x-raw-rgb"
@@ -176,66 +177,54 @@ def encode_raw_rgb(width: int, height: int, pixel_of_index) -> bytes:
     return head + bytes(pixel_of_index(i) & 0xFF for i in range(width * height * 3))
 
 
-def _raw_rgb_feature_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """decode_media's batch function (module-level so the fused
-    pipeline composes the identical code)."""
-    import numpy as np
-
-    for pdf in batches:
-        rows: dict[str, list] = {k.name: [] for k in FEATURE_SCHEMA.fields}
-        for doc_id, payload, meta in zip(
-            pdf["doc_id"], pdf["payload"], pdf["meta"]
-        ):
-            if meta["mime"] != RAW_RGB_MIME:
-                raise NotImplementedError(
-                    f"no decoder for {meta['mime']!r} in this "
-                    "container (image/audio libs absent); raw-RGB is "
-                    "the executable path"
-                )
-            buf = bytes(payload)
-            if buf[:4] != _RAW_MAGIC:
-                raise ValueError(f"bad raw-RGB magic in doc {doc_id}")
-            w = int.from_bytes(buf[4:6], "big")
-            h = int.from_bytes(buf[6:8], "big")
-            px = np.frombuffer(buf, dtype=np.uint8, offset=8)
-            if px.size != w * h * 3:
-                raise ValueError(f"truncated raw-RGB in doc {doc_id}")
-            sums = px.astype(np.float64).reshape(-1, 3).sum(axis=0)
-            n_px = float(w * h)
-            rows["doc_id"].append(int(doc_id))
-            rows["n_bytes"].append(len(buf))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["features"].append([float(s) / n_px for s in sums])
-        if rows["doc_id"]:
-            yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
+def _read_raw_rgb(payload: bytes | None) -> np.ndarray:
+    """The raw-RGB header check: uint8 pixels shaped (height, width, 3)
+    of a payload in encode_raw_rgb's layout; `_Malformed` otherwise."""
+    if payload is None or len(payload) < 8 or payload[:4] != _RAW_MAGIC:
+        raise _Malformed("header")
+    w = int.from_bytes(payload[4:6], "big")
+    h = int.from_bytes(payload[6:8], "big")
+    if w == 0 or h == 0:
+        raise _Malformed("header")
+    px = np.frombuffer(payload, dtype=np.uint8, offset=8)
+    if px.size != w * h * 3:
+        raise _Malformed("payload")
+    return px.reshape(h, w, 3)
 
 
+def _channel_means_row(read):
+    """FEATURE_SCHEMA row function over RGB pixels parsed by ``read``:
+    per-channel means, exact (integer sums in float64, one division)."""
 
-def decode_media(
-    df: DataFrame, encode_row=None, id_col: str = "doc_id"
-) -> DataFrame:
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        img = read(payload)
+        h, w, _ = img.shape
+        sums = img.astype(np.float64).reshape(-1, 3).sum(axis=0)
+        return doc_id, len(payload), w, h, [float(s) / (w * h) for s in sums]
+
+    return _row
+
+
+def decode_media(df: DataFrame, encode_row=None) -> DataFrame:
     """Decode entry point, Arrow-batched mapInPandas (the production
     shape). EXECUTABLE for the documented raw-RGB format (numpy only —
     header parse, frombuffer, per-channel means as features); real
     codecs (JPEG/PNG/audio) raise NotImplementedError because their
     libraries are not in this container — swap the mime dispatch body
     for PIL/libav calls in production. Means are exact: integer sums in
-    float64, one division. ``encode_row`` switches to the fused
-    synthesize→decode single-crossing pipeline (fuse_synth_decode)."""
-    return _maybe_fuse(
-        df, _raw_rgb_feature_batches, FEATURE_SCHEMA, encode_row,
-        RAW_RGB_MIME, id_col,
+    float64, one division. ``encode_row`` synthesizes each payload in
+    the decoding worker (see `_media_map`)."""
+    return _media_map(
+        df, _channel_means_row(_read_raw_rgb), FEATURE_SCHEMA,
+        RAW_RGB_MIME, encode_row,
     )
 
 
-def fake_features(df: DataFrame, n_features: int = 4) -> DataFrame:
+def fake_features(df: DataFrame) -> DataFrame:
     """Deterministic stand-in feature extractor over binary payloads.
 
     Arrow-batched mapInPandas: each batch arrives as a pandas DataFrame
-    with the payload as bytes; features are integer-derived (exact in
+    with the payload as bytes; four features, integer-derived (exact in
     float64) so results are engine-reproducible for the oracle.
     """
 
@@ -255,7 +244,7 @@ def fake_features(df: DataFrame, n_features: int = 4) -> DataFrame:
                     "width": (n % 640).astype("int32"),
                     "height": (n % 480).astype("int32"),
                     "features": [
-                        [float((int(nb) * (j + 1) + int(fb)) % 256) for j in range(n_features)]
+                        [float((int(nb) * (j + 1) + int(fb)) % 256) for j in range(4)]
                         for nb, fb in zip(n, first)
                     ],
                 }
@@ -275,8 +264,10 @@ FRAME_SCHEMA = T.StructType(
     ]
 )
 
+FRAME_US = 40_000  # frame_sample's cadence: 25 fps
 
-def frame_sample(df: DataFrame, fps_us: int = 40_000) -> DataFrame:
+
+def frame_sample(df: DataFrame) -> DataFrame:
     """Fan each media row out into per-frame rows — the video
     frame-sampling shape: one input row becomes N output rows inside the
     same Arrow batch (mapInPandas is a flat-map, not a 1:1 map).
@@ -288,7 +279,6 @@ def frame_sample(df: DataFrame, fps_us: int = 40_000) -> DataFrame:
     memory scales with n_frames × row width: at 100 TB bound it with
     spark.sql.execution.arrow.maxRecordsPerBatch and keep payloads out of
     the output schema (only hashes/timestamps leave the executor)."""
-    import hashlib
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -306,7 +296,7 @@ def frame_sample(df: DataFrame, fps_us: int = 40_000) -> DataFrame:
                     rows["doc_id"].append(int(doc_id))
                     rows["frame_id"].append(i)
                     rows["n_frames"].append(n_frames)
-                    rows["frame_us"].append(i * fps_us)
+                    rows["frame_us"].append(i * FRAME_US)
                     rows["frame_hash"].append(
                         hashlib.md5(f"{checksum}:{i}".encode()).hexdigest()
                     )
@@ -322,18 +312,20 @@ def encode_raw_rgb_row(doc_id: int) -> bytes:
     return encode_raw_rgb(8 + doc_id % 5, 6, lambda i: doc_id + i)
 
 
-def attach_raw_rgb(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_raw_rgb(df: DataFrame) -> DataFrame:
     """Deterministic raw-RGB fixture encoder: each row becomes a decodable
     media row (payload = raw-RGB bytes with pixel i = (id + i) mod 256,
     width = 8 + id mod 5, height = 6). The arithmetic pixel rule is what
     lets a SQL oracle reproduce the decoded statistics exactly."""
-    return _synth_media(df, encode_raw_rgb_row, RAW_RGB_MIME, id_col)
+    return _synth_media(df, encode_raw_rgb_row, RAW_RGB_MIME)
 
 
 # --- REAL codecs (stdlib/numpy only): WAV audio and PPM images ---------------
 
 WAV_MIME = "audio/x-wav"
 PPM_MIME = "image/x-portable-pixmap"
+SAMPLE_RATE = 8000  # every synthesized clip's rate
+TONE_FRAMES = 512  # encode_wav_tone's clip length (one DFT frame)
 
 WAV_FEATURE_SCHEMA = T.StructType(
     [
@@ -348,7 +340,45 @@ WAV_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def encode_wav_square(doc_id: int, sr: int = 8000) -> bytes:
+def _pcm16_wav(samples: list[int]) -> bytes:
+    """PCM16 mono WAV at SAMPLE_RATE holding ``samples``."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(SAMPLE_RATE)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
+
+
+def _read_pcm16(payload: bytes | None) -> tuple[int, np.ndarray]:
+    """The one WAV reader: (sample_rate, int16 samples) of a PCM16 mono
+    RIFF WAVE payload. Anything else raises `_Malformed` with its
+    validate_media status — 'header' when the RIFF/fmt grammar does not
+    parse (NULL included) or declares a zero sample rate, 'payload' when
+    the data chunk holds fewer bytes than the declared frames,
+    'unsupported' when sound but not PCM16 mono — so it accepts exactly
+    what validate_media calls 'ok'."""
+    try:
+        with wave.open(io.BytesIO(payload)) as w:
+            sr, n = w.getframerate(), w.getnframes()
+            width, channels = w.getsampwidth(), w.getnchannels()
+            frames = w.readframes(n)
+    except Exception as exc:  # noqa: BLE001
+        # The stdlib parser's failures on hostile bytes are not a closed
+        # set (wave.Error, EOFError, RuntimeError, struct.error, ...):
+        # whatever stops the parse is a dead header.
+        raise _Malformed("header") from exc
+    if sr == 0:  # stdlib wave accepts it; durations divide by it
+        raise _Malformed("header")
+    if len(frames) < n * width * channels:
+        raise _Malformed("payload")
+    if width != 2 or channels != 1:
+        raise _Malformed("unsupported")
+    return sr, np.frombuffer(frames, dtype="<i2")
+
+
+def encode_wav_square(doc_id: int) -> bytes:
     """Deterministic PCM16 mono WAV: a square wave with amplitude
     A = 1000 + (id%9)*500, half-period h = 4 + id%5 samples, and
     n = 800 + (id%7)*80 frames. Every feature the decoder must recover
@@ -356,31 +386,18 @@ def encode_wav_square(doc_id: int, sr: int = 8000) -> bytes:
     flips every h samples ⇒ zero crossings = (n-1)//h; duration_us =
     n·10⁶/sr) — which is what lets a SQL oracle check a REAL byte-level
     audio decode."""
-    import io
-    import struct
-    import wave
-
     amp = 1000 + (doc_id % 9) * 500
     half = 4 + doc_id % 5
     n = 800 + (doc_id % 7) * 80
-    samples = [amp if (i // half) % 2 == 0 else -amp for i in range(n)]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes(struct.pack(f"<{n}h", *samples))
-    return buf.getvalue()
+    return _pcm16_wav([amp if (i // half) % 2 == 0 else -amp for i in range(n)])
 
 
-def attach_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_wav(df: DataFrame) -> DataFrame:
     """Rows → decodable WAV media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_wav_square, WAV_MIME, id_col)
+    return _synth_media(df, encode_wav_square, WAV_MIME)
 
 
-def decode_wav_features(
-    df: DataFrame, encode_row=None, id_col: str = "doc_id"
-) -> DataFrame:
+def decode_wav_features(df: DataFrame, encode_row=None) -> DataFrame:
     """REAL audio decode (no stub): the stdlib `wave` parser reads each
     payload's RIFF header and PCM frames inside Arrow-batched
     mapInPandas; numpy computes peak / RMS / zero-crossing count — the
@@ -392,64 +409,44 @@ def decode_wav_features(
     payload column pruned for metadata-only queries); batch memory =
     frames × 2 bytes × rows-per-batch, bounded via
     arrow.maxRecordsPerBatch."""
-    import io
-    import wave
 
-    import numpy as np
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        sr, x = _read_pcm16(payload)
+        x = x.astype(np.int64)
+        n = len(x)
+        return (
+            doc_id,
+            sr,
+            n,
+            n * 1_000_000 // sr,
+            int(np.abs(x).max()) if n else 0,
+            float(np.sqrt(np.mean(np.square(x.astype(np.float64))))) if n else 0.0,
+            int(np.sum(x[:-1] * x[1:] < 0)) if n > 1 else 0,
+        )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.name: [] for k in WAV_FEATURE_SCHEMA.fields
-            }
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != WAV_MIME:
-                    raise NotImplementedError(
-                        f"no audio decoder for {meta['mime']!r}"
-                    )
-                # Malformed payloads are DEAD-LETTERED (skipped), never
-                # raised — one truncated clip must not kill a 100 TB
-                # job (same rule as NULL payloads). validate_media
-                # accounts for them upstream (r12 quarantine).
-                try:
-                    with wave.open(io.BytesIO(bytes(payload))) as w:
-                        sr = w.getframerate()
-                        n = w.getnframes()
-                        if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                            raise ValueError(
-                                f"doc {doc_id}: only PCM16 mono supported, "
-                                f"got width={w.getsampwidth()} "
-                                f"ch={w.getnchannels()}"
-                            )
-                        frames = w.readframes(n)
-                        if len(frames) < n * 2:
-                            raise EOFError(f"doc {doc_id}: truncated data")
-                        x = np.frombuffer(frames, dtype="<i2").astype(np.int64)
-                except (Exception,) as exc:  # noqa: BLE001 — dead-letter path
-                    if isinstance(exc, NotImplementedError):
-                        raise
-                    continue
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(sr)
-                rows["n_frames"].append(n)
-                rows["duration_us"].append(n * 1_000_000 // sr)
-                rows["peak"].append(int(np.abs(x).max()) if n else 0)
-                rows["rms"].append(
-                    float(np.sqrt(np.mean(np.square(x.astype(np.float64)))))
-                    if n
-                    else 0.0
-                )
-                rows["n_zero_cross"].append(
-                    int(np.sum(x[:-1] * x[1:] < 0)) if n > 1 else 0
-                )
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
+    return _media_map(df, _row, WAV_FEATURE_SCHEMA, WAV_MIME, encode_row)
 
-    return _maybe_fuse(
-        df, _decode, WAV_FEATURE_SCHEMA, encode_row, WAV_MIME, id_col
-    )
+
+def _read_ppm(payload: bytes | None) -> np.ndarray:
+    """The one P6 parser: uint8 pixels shaped (height, width, 3) of an
+    8-bit netpbm P6 payload with one header field per line (the layout
+    the encoders write); `_Malformed` otherwise."""
+    if payload is None:
+        raise _Malformed("header")
+    try:
+        magic, dims, maxval, raw = payload.split(b"\n", 3)
+        w, h = (int(v) for v in dims.split())
+        maxval = int(maxval)
+    except ValueError as exc:
+        raise _Malformed("header") from exc
+    if magic != b"P6" or w <= 0 or h <= 0:
+        raise _Malformed("header")
+    if maxval != 255:
+        raise _Malformed("unsupported")
+    px = np.frombuffer(raw, dtype=np.uint8)
+    if px.size != w * h * 3:
+        raise _Malformed("payload")
+    return px.reshape(h, w, 3)
 
 
 def encode_ppm(doc_id: int) -> bytes:
@@ -469,14 +466,12 @@ def encode_ppm(doc_id: int) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode("ascii") + bytes(px)
 
 
-def attach_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_ppm(df: DataFrame) -> DataFrame:
     """Rows → decodable PPM media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_ppm, PPM_MIME, id_col)
+    return _synth_media(df, encode_ppm, PPM_MIME)
 
 
-def decode_ppm_features(
-    df: DataFrame, encode_row=None, id_col: str = "doc_id"
-) -> DataFrame:
+def decode_ppm_features(df: DataFrame, encode_row=None) -> DataFrame:
     """REAL image decode of a REAL standard format (netpbm P6): header
     grammar parse + numpy frombuffer/reshape + per-channel means —
     byte-level image decoding with no external codec library. JPEG/PNG
@@ -484,46 +479,8 @@ def decode_ppm_features(
     schema contract, batch shape, and feature math stay identical.
     Integer pixel sums are exact in float64, so the closed-form SQL
     oracle matches bit-for-bit."""
-    import numpy as np
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in FEATURE_SCHEMA.fields}
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != PPM_MIME:
-                    raise NotImplementedError(
-                        f"no image decoder for {meta['mime']!r}"
-                    )
-                # Dead-letter malformed images (r12 quarantine rule):
-                # one bad blob must not kill the job.
-                try:
-                    buf = bytes(payload)
-                    magic, dims, maxval_rest = buf.split(b"\n", 2)
-                    if magic != b"P6":
-                        raise ValueError(f"bad PPM magic in doc {doc_id}")
-                    w, h = (int(v) for v in dims.split())
-                    maxval, raw = maxval_rest.split(b"\n", 1)
-                    if int(maxval) != 255:
-                        raise ValueError("only 8-bit PPM supported")
-                    px = np.frombuffer(raw, dtype=np.uint8)
-                    if px.size != w * h * 3:
-                        raise ValueError(f"truncated PPM in doc {doc_id}")
-                except (Exception,):  # noqa: BLE001 — dead-letter path
-                    continue
-                sums = px.astype(np.float64).reshape(-1, 3).sum(axis=0)
-                n_px = float(w * h)
-                rows["doc_id"].append(int(doc_id))
-                rows["n_bytes"].append(len(buf))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["features"].append([float(s) / n_px for s in sums])
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
-
-    return _maybe_fuse(
-        df, _decode, FEATURE_SCHEMA, encode_row, PPM_MIME, id_col
+    return _media_map(
+        df, _channel_means_row(_read_ppm), FEATURE_SCHEMA, PPM_MIME, encode_row
     )
 
 
@@ -552,7 +509,7 @@ def encode_banded_ppm(doc_id: int) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode("ascii") + bytes(px)
 
 
-def attach_banded_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_banded_ppm(df: DataFrame) -> DataFrame:
     """Rows → 16×8 P6 PPM media rows with a white 2-row band at row
     2·(id%4) over a per-doc solid fill (id%200, id·7%256, id·13%256).
 
@@ -561,12 +518,10 @@ def attach_banded_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     threshold keeps exactly the band cells — so images with the same
     band position are visual near-duplicates with DIFFERENT bytes,
     the ground truth the perceptual-hash query verifies against."""
-    return _synth_media(df, encode_banded_ppm, PPM_MIME, id_col)
+    return _synth_media(df, encode_banded_ppm, PPM_MIME)
 
 
-def ahash_ppm(
-    df: DataFrame, encode_row=None, id_col: str = "doc_id"
-) -> DataFrame:
+def ahash_ppm(df: DataFrame, encode_row=None) -> DataFrame:
     """Perceptual average-hash (aHash) over decoded P6 PPM payloads:
     grayscale → 8×8 block-mean downsample → threshold each cell against
     the mean of cell means → 64-bit hash (16 hex chars). Byte-different
@@ -577,53 +532,30 @@ def ahash_ppm(
     Pure numpy inside Arrow-batched mapInPandas; at 100 TB this is a
     payload-pruning map followed by a hash groupBy, the cheapest dedup
     shape there is."""
-    import hashlib
 
-    import numpy as np
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        img = _read_ppm(payload)
+        h, w, _ = img.shape
+        gray = img.astype(np.float64).mean(axis=2)
+        # 8×8 block means with integer cell boundaries floor(i·dim/8) —
+        # exact for any dim ≥ 8, no resampling library needed.
+        ys = [h * i // 8 for i in range(9)]
+        xs = [w * i // 8 for i in range(9)]
+        cells = np.array(
+            [
+                [
+                    gray[ys[r]: ys[r + 1], xs[c]: xs[c + 1]].mean()
+                    for c in range(8)
+                ]
+                for r in range(8)
+            ]
+        )
+        val = 0
+        for bit in (cells > cells.mean()).flatten():
+            val = (val << 1) | int(bit)
+        return doc_id, f"{val:016x}", hashlib.md5(payload).hexdigest()
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in AHASH_SCHEMA.fields}
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != PPM_MIME:
-                    raise NotImplementedError(
-                        f"no image decoder for {meta['mime']!r}"
-                    )
-                buf = bytes(payload)
-                magic, dims, maxval_rest = buf.split(b"\n", 2)
-                if magic != b"P6":
-                    raise ValueError(f"bad PPM magic in doc {doc_id}")
-                w, h = (int(v) for v in dims.split())
-                _maxval, raw = maxval_rest.split(b"\n", 1)
-                px = np.frombuffer(raw, dtype=np.uint8, count=w * h * 3)
-                gray = px.astype(np.float64).reshape(h, w, 3).mean(axis=2)
-                # 8×8 block means with integer cell boundaries
-                # floor(i·dim/8) — exact for any dim ≥ 8, no resampling
-                # library needed.
-                ys = [h * i // 8 for i in range(9)]
-                xs = [w * i // 8 for i in range(9)]
-                cells = np.array(
-                    [
-                        [
-                            gray[ys[r]: ys[r + 1], xs[c]: xs[c + 1]].mean()
-                            for c in range(8)
-                        ]
-                        for r in range(8)
-                    ]
-                )
-                bits = (cells > cells.mean()).flatten()
-                val = 0
-                for bit in bits:
-                    val = (val << 1) | int(bit)
-                rows["doc_id"].append(int(doc_id))
-                rows["ahash"].append(f"{val:016x}")
-                rows["payload_md5"].append(hashlib.md5(buf).hexdigest())
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
-
-    return _maybe_fuse(df, _hash, AHASH_SCHEMA, encode_row, PPM_MIME, id_col)
+    return _media_map(df, _row, AHASH_SCHEMA, PPM_MIME, encode_row)
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -638,7 +570,7 @@ SPECTRAL_SCHEMA = T.StructType(
 )
 
 
-def encode_wav_tone(doc_id: int, sr: int = 8000, n: int = 512) -> bytes:
+def encode_wav_tone(doc_id: int) -> bytes:
     """Deterministic PCM16 mono WAV: a pure cosine at EXACT FFT bin
     k = 3 + id%17 with amplitude A = 8000 + (id%5)*1000 over n=512
     frames. Because the frequency sits exactly on a bin of the length-n
@@ -646,33 +578,20 @@ def encode_wav_tone(doc_id: int, sr: int = 8000, n: int = 512) -> bytes:
     k regardless of int16 quantization (noise power spreads microscopic
     energy across all bins), and cos(0)=1 makes peak == A exactly —
     the closed forms the SQL oracle states."""
-    import io
-    import math
-    import struct
-    import wave
-
     k = 3 + doc_id % 17
     amp = 8000 + (doc_id % 5) * 1000
-    samples = [
-        int(round(amp * math.cos(2 * math.pi * k * i / n))) for i in range(n)
-    ]
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes(struct.pack(f"<{n}h", *samples))
-    return buf.getvalue()
+    n = TONE_FRAMES
+    return _pcm16_wav(
+        [int(round(amp * math.cos(2 * math.pi * k * i / n))) for i in range(n)]
+    )
 
 
-def attach_tone_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_tone_wav(df: DataFrame) -> DataFrame:
     """Rows → decodable pure-tone WAV media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_wav_tone, WAV_MIME, id_col)
+    return _synth_media(df, encode_wav_tone, WAV_MIME)
 
 
-def decode_spectral(
-    df: DataFrame, encode_row=None, id_col: str = "doc_id"
-) -> DataFrame:
+def decode_spectral(df: DataFrame, encode_row=None) -> DataFrame:
     """REAL frequency-domain decode: RIFF-parse each payload and run a
     numpy rFFT inside Arrow-batched mapInPandas, reporting the dominant
     non-DC bin and its frequency — the pitch/bandwidth screening step
@@ -681,52 +600,20 @@ def decode_spectral(
     per-row Python). dominant_hz = bin·sr/n is exact in float64 for
     sr=8000, n=512 (15.625 is a binary fraction). At 100 TB clips
     transform where they land — pure map, no shuffle."""
-    import io
-    import wave
 
-    import numpy as np
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        sr, x = _read_pcm16(payload)
+        x = x.astype(np.float64)
+        n = len(x)
+        # A clip with under two frames has no non-DC bin (and rFFT of
+        # zero frames raises): bin 0 at 0 Hz.
+        dom = int(np.argmax(np.abs(np.fft.rfft(x))[1:]) + 1) if n > 1 else 0
+        return (
+            doc_id, sr, n, dom, dom * sr / n if n else 0.0,
+            int(np.abs(x).max()) if n else 0,
+        )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.name: [] for k in SPECTRAL_SCHEMA.fields
-            }
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != WAV_MIME:
-                    raise NotImplementedError(
-                        f"no audio decoder for {meta['mime']!r}"
-                    )
-                # Dead-letter malformed clips (r12 quarantine rule).
-                try:
-                    with wave.open(io.BytesIO(bytes(payload))) as w:
-                        sr = w.getframerate()
-                        n = w.getnframes()
-                        frames = w.readframes(n)
-                        if len(frames) < n * 2:
-                            raise EOFError(f"doc {doc_id}: truncated data")
-                        x = np.frombuffer(frames, dtype="<i2").astype(
-                            np.float64
-                        )
-                except (Exception,) as exc:  # noqa: BLE001 — dead-letter path
-                    if isinstance(exc, NotImplementedError):
-                        raise
-                    continue
-                mag = np.abs(np.fft.rfft(x))
-                dom = int(np.argmax(mag[1:]) + 1) if n > 1 else 0
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(sr)
-                rows["n_frames"].append(n)
-                rows["dominant_bin"].append(dom)
-                rows["dominant_hz"].append(dom * sr / n)
-                rows["peak"].append(int(np.abs(x).max()) if n else 0)
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
-
-    return _maybe_fuse(
-        df, _decode, SPECTRAL_SCHEMA, encode_row, WAV_MIME, id_col
-    )
+    return _media_map(df, _row, SPECTRAL_SCHEMA, WAV_MIME, encode_row)
 
 
 # --- corruption quarantine (round 12) ----------------------------------------
@@ -749,7 +636,7 @@ QUARANTINE_SCHEMA = T.StructType(
 )
 
 
-def validate_media(df: DataFrame) -> DataFrame:
+def validate_media(df: DataFrame, encode_row=None) -> DataFrame:
     """Structural triage of WAV payloads, Arrow-batched:
 
     - ``header``: the RIFF/fmt chunk grammar does not parse (bad magic,
@@ -764,57 +651,25 @@ def validate_media(df: DataFrame) -> DataFrame:
     - ``ok``: structurally sound AND decodable (PCM16 mono).
 
     Classification is deterministic (grammar + byte arithmetic), so a
-    corpus with rule-injected corruption has a closed-form oracle."""
-    import io
-    import wave
+    corpus with rule-injected corruption has a closed-form oracle. It
+    IS the audio decoders' reader (`_read_pcm16`), so #ok equals their
+    row count by construction. ``encode_row`` triages each payload in
+    the worker that synthesizes it (see `_media_map`)."""
 
-    def _validate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.name: [] for k in QUARANTINE_SCHEMA.fields
-            }
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != WAV_MIME:
-                    raise NotImplementedError(
-                        f"no validator for {meta['mime']!r}"
-                    )
-                raw = bytes(payload) if payload is not None else b""
-                rows["doc_id"].append(int(doc_id))
-                rows["n_bytes"].append(len(raw))
-                rows["status"].append(_triage_wav_raw(raw))
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
+    def _row(doc_id: int, payload: bytes | None) -> tuple:
+        try:
+            _read_pcm16(payload)
+            status = "ok"
+        except _Malformed as exc:
+            status = exc.args[0]
+        return doc_id, len(payload or b""), status
 
-    return df.mapInPandas(_validate, QUARANTINE_SCHEMA)
-
-
-def _triage_wav_raw(raw: bytes) -> str:
-    """validate_media's per-payload classification rule (one place, so
-    the fused triage pipeline below cannot drift from the operator)."""
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(raw)) as w:
-            n = w.getnframes()
-            sampwidth = w.getsampwidth()
-            channels = w.getnchannels()
-            got = len(w.readframes(n))
-        if got < n * sampwidth * channels:
-            return "payload"
-        if sampwidth != 2 or channels != 1:
-            return "unsupported"
-        return "ok"
-    except Exception:
-        return "header"
+    return _media_map(df, _row, QUARANTINE_SCHEMA, WAV_MIME, encode_row)
 
 
 def _corrupt_wav_raw(doc_id: int, raw: bytes) -> bytes:
-    """corrupt_tone_wavs' per-payload rule (shared with the fused
-    pipeline): doc_id % 4 → 0 intact, 1 magic-flip, 2 data halved,
-    3 truncated to 6 bytes."""
+    """corrupt_tone_wavs' per-payload rule: doc_id % 4 → 0 intact,
+    1 magic-flip, 2 data halved, 3 truncated to 6 bytes."""
     k = int(doc_id) % 4
     if k == 1:
         return b"JUNK" + raw[4:]
@@ -825,37 +680,10 @@ def _corrupt_wav_raw(doc_id: int, raw: bytes) -> bytes:
     return raw
 
 
-def tone_corruption_triage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fused synthesize → corrupt → triage in ONE Python crossing
-    (r14, guide §4.1): the q244 pipeline previously chained three
-    mapInPandas operators (attach_tone_wav → corrupt_tone_wavs →
-    validate_media), so every payload byte crossed the JVM↔Python
-    boundary three times and each task ran three Python runners. The
-    logic is three pure per-row functions, so one batch loop applies
-    them in sequence and only the (doc_id, n_bytes, status) triage rows
-    ever return to the JVM — the payload never crosses at all. Uses the
-    SAME per-row rules as the standalone operators (shared helpers
-    above), so the classification is identical by construction."""
-    from .stage import parallelize_stage
-
-    df = parallelize_stage(df)  # Python-side encode is the CPU stage
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.name: [] for k in QUARANTINE_SCHEMA.fields
-            }
-            for doc_id in pdf[id_col]:
-                raw = _corrupt_wav_raw(
-                    int(doc_id), encode_wav_tone(int(doc_id))
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["n_bytes"].append(len(raw))
-                rows["status"].append(_triage_wav_raw(raw))
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
-
-    return df.select(F.col(id_col)).mapInPandas(_fused, QUARANTINE_SCHEMA)
+def encode_corrupt_tone(doc_id: int) -> bytes:
+    """q244's per-row rule: encode_wav_tone's clip corrupted by
+    corrupt_tone_wavs' rule."""
+    return _corrupt_wav_raw(doc_id, encode_wav_tone(doc_id))
 
 
 def corrupt_tone_wavs(df: DataFrame) -> DataFrame:
@@ -893,7 +721,7 @@ THUMBNAIL_SCHEMA = T.StructType(
 
 
 def resize_ppm_thumbnail(
-    df: DataFrame, size: int = 8, encode_row=None, id_col: str = "doc_id"
+    df: DataFrame, size: int = 8, encode_row=None
 ) -> DataFrame:
     """REAL image resize: P6 decode → nearest-neighbor resample to
     size×size (numpy fancy indexing, no codec library) → P6 re-encode →
@@ -906,57 +734,19 @@ def resize_ppm_thumbnail(
     shuffle, output rows are a fixed 3·size² bytes each regardless of
     input resolution (the property that makes thumbnail tables
     broadcast-friendly downstream)."""
-    import numpy as np
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k.name: [] for k in THUMBNAIL_SCHEMA.fields
-            }
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["mime"] != PPM_MIME:
-                    raise NotImplementedError(
-                        f"no image decoder for {meta['mime']!r}"
-                    )
-                try:
-                    buf = bytes(payload)
-                    magic, dims, maxval_rest = buf.split(b"\n", 2)
-                    if magic != b"P6":
-                        raise ValueError(f"bad PPM magic in doc {doc_id}")
-                    w, h = (int(v) for v in dims.split())
-                    maxval, raw = maxval_rest.split(b"\n", 1)
-                    if int(maxval) != 255:
-                        raise ValueError("only 8-bit PPM supported")
-                    px = np.frombuffer(raw, dtype=np.uint8)
-                    if px.size != w * h * 3:
-                        raise ValueError(f"truncated PPM in doc {doc_id}")
-                except (Exception,):  # noqa: BLE001 — dead-letter path
-                    continue
-                img = px.reshape(h, w, 3)
-                ys = (np.arange(size) * h) // size
-                xs = (np.arange(size) * w) // size
-                thumb = img[ys][:, xs]  # nearest-neighbor resample
-                out = (
-                    f"P6\n{size} {size}\n255\n".encode("ascii")
-                    + thumb.tobytes()
-                )
-                white = int(
-                    (thumb == 255).all(axis=2).sum()
-                )
-                means = thumb.astype(np.float64).reshape(-1, 3).mean(axis=0)
-                rows["doc_id"].append(int(doc_id))
-                rows["out_w"].append(size)
-                rows["out_h"].append(size)
-                rows["n_bytes"].append(len(out))
-                rows["n_white"].append(white)
-                rows["mean_r"].append(float(means[0]))
-                rows["mean_g"].append(float(means[1]))
-                rows["mean_b"].append(float(means[2]))
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)  # empty dict-frame is untyped -> Arrow error
+    def _row(doc_id: int, payload: bytes) -> tuple:
+        img = _read_ppm(payload)
+        h, w, _ = img.shape
+        ys = (np.arange(size) * h) // size
+        xs = (np.arange(size) * w) // size
+        thumb = img[ys][:, xs]  # nearest-neighbor resample
+        out = f"P6\n{size} {size}\n255\n".encode("ascii") + thumb.tobytes()
+        white = int((thumb == 255).all(axis=2).sum())
+        means = thumb.astype(np.float64).reshape(-1, 3).mean(axis=0)
+        return (
+            doc_id, size, size, len(out), white,
+            float(means[0]), float(means[1]), float(means[2]),
+        )
 
-    return _maybe_fuse(
-        df, _resize, THUMBNAIL_SCHEMA, encode_row, PPM_MIME, id_col
-    )
+    return _media_map(df, _row, THUMBNAIL_SCHEMA, PPM_MIME, encode_row)

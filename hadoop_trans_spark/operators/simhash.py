@@ -56,7 +56,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     two-digest 64-bit variant → 1.23× warm (md5 dominates — hence one
     digest). At 100 TB the shuffle carries only the per-doc partial
     count vectors (map-side combine)."""
-    # NULL-text docs get no fingerprint (word_shingles rule: contentless
+    # NULL-text docs get no fingerprint (shingle_array rule: contentless
     # docs are excluded from content dedup — NULL-probe find, r10).
     df = df.where(F.col(text_col).isNotNull())
     masks = (

@@ -37,8 +37,9 @@ from pyspark.sql import functions as F
 # overflows the decimal moment sums (kmeans crash at 6.4e61). A vector
 # is valid iff non-NULL, every component finite with |x| < VEC_CAP
 # (squares stay inside the exact envelope), and norm > 0. Invalid
-# vectors are excluded symmetrically, like NULL. The DuckDB mirrors are
-# queries/base.py o_vec_valid / o_vec_usable.
+# vectors are excluded symmetrically, like NULL. The DuckDB mirror is
+# queries/base.py o_vec_usable; oracles add vec_valid's nonzero term
+# inline.
 VEC_CAP = 1e15
 
 
@@ -117,13 +118,6 @@ def norm(a: Column) -> Column:
     """L2 norm of a raw (float or double) array column."""
     d = _dbl(a)
     return F.sqrt(dot(d, d))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine of two raw arrays — convenience form for one-off use; hot
-    paths precompute ``_dbl`` arrays + norms before the join instead."""
-    da, db = _dbl(a), _dbl(b)
-    return dot(da, db) / (norm(a) * norm(b))
 
 
 def cosine_topk(

@@ -32,6 +32,10 @@ from pyspark.sql import SparkSession
 from . import fs
 from .alerts import Alert, AlertSink
 
+# Partitions compacting at once: each is its own Spark job, so this
+# bounds the driver threads and the jobs the scheduler interleaves.
+MAX_CONCURRENCY = 8
+
 
 @dataclass
 class CompactReport:
@@ -127,7 +131,6 @@ def compact_table(
     target_file_bytes: int = 512 * 1024 * 1024,
     min_avg_file_bytes: int | None = None,
     sink: AlertSink | None = None,
-    max_concurrency: int = 8,
 ) -> CompactReport:
     """Compact every leaf partition of a Hive-layout parquet table whose
     average data-file size is below the threshold (default: half the
@@ -146,7 +149,7 @@ def compact_table(
     threshold = min_avg_file_bytes or target_file_bytes // 2
     leaves = _leaf_partition_dirs(spark, table_path)
 
-    with ThreadPoolExecutor(max_workers=max(1, max_concurrency)) as pool:
+    with ThreadPoolExecutor(max_workers=MAX_CONCURRENCY) as pool:
         results = list(
             pool.map(
                 lambda d: _compact_partition(

@@ -212,18 +212,6 @@ def ts_in_domain(col: Column | str = "ts") -> Column:
     )
 
 
-def o_vec_valid(col: str = "embedding") -> str:
-    """DuckDB mirror of vec_valid (element NULLs count as invalid)."""
-    bad = (
-        f"len(list_filter({col}, x -> NOT coalesce(isfinite(x) "
-        f"AND abs(x) < {VEC_CAP:.0f}, FALSE))) = 0"
-    )
-    return (
-        f"({col} IS NOT NULL AND {bad} "
-        f"AND len(list_filter({col}, x -> x <> 0)) > 0)"
-    )
-
-
 def o_vec_usable(col: str = "embedding") -> str:
     """DuckDB mirror of vec_usable (element NULLs count as invalid)."""
     bad = (

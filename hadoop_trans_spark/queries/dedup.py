@@ -54,7 +54,7 @@ def grams3_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: parallelize_stage(
             table(spark, sf_dir, "documents")
         )
-        # word_shingles rule: NULL-text docs have no shingles and are
+        # shingle_array rule: NULL-text docs have no shingles and are
         # excluded from the whole dedup family (NULL-probe find, r10 —
         # unfiltered they all share the degenerate "" shingle and the
         # pair stage emits the NULL-doc clique).
@@ -372,7 +372,7 @@ def q42_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic join; at 100 TB you'd use q40's LSH instead (noted in the
     plan docs), but the blocked shape is still shuffle-safe: the join is
     an equi-join on the block key."""
-    # NULL-text docs excluded symmetrically with the oracle (word_shingles
+    # NULL-text docs excluded symmetrically with the oracle (shingle_array
     # rule — NULL-probe find, r10).
     d = table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     ws = F.split(F.col("text"), " ")
@@ -877,7 +877,7 @@ def q142_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contained, id tiebreak) is a total order, so both engines emit
     identical pairs. At 100 TB postings shard by (lang, gram); per-gram
     join fan-out is prefix-count(g) × df(g), the AllPairs cost bound."""
-    # NULL-text docs excluded symmetrically with the oracle (word_shingles
+    # NULL-text docs excluded symmetrically with the oracle (shingle_array
     # rule — NULL-probe find, r10).
     d = table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     ws = F.split(F.col("text"), " ")

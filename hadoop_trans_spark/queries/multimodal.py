@@ -201,10 +201,10 @@ def q121_raw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the real decode wiring a production pipeline swaps PIL/libav
     into; only non-synthetic codecs remain stubbed.
 
-    r15 (guide §4.1): synthesize→decode runs FUSED in one mapInPandas
-    (the q244 pattern) — payload bytes never cross the JVM↔Python
-    boundary; the fused operator composes the standalone operators' own
-    batch functions, so the decode is identical by construction."""
+    r15 (guide §4.1): synthesize→decode runs in one mapInPandas
+    (``encode_row``, the q244 pattern) — payload bytes never cross the
+    JVM↔Python boundary; the per-row loop is the one the standalone
+    operators run, so the decode is identical by construction."""
     from ..operators.multimodal import decode_media, encode_raw_rgb_row
 
     docs = table(spark, sf_dir, "documents")
@@ -351,10 +351,10 @@ def q163_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash groupBy is a 16-byte-key shuffle after payloads are pruned
     executor-side — nothing image-sized ever moves.
 
-    r15 (guide §4.1): synthesize→hash runs FUSED in one mapInPandas
-    (the q244 pattern) — payload bytes never cross the JVM↔Python
-    boundary at all; the fused operator composes the standalone
-    operators' own batch functions, so the hashes are identical by
+    r15 (guide §4.1): synthesize→hash runs in one mapInPandas
+    (``encode_row``, the q244 pattern) — payload bytes never cross the
+    JVM↔Python boundary at all; the per-row loop is the one the
+    standalone operators run, so the hashes are identical by
     construction."""
     from ..operators.multimodal import ahash_ppm, encode_banded_ppm
 
@@ -449,17 +449,15 @@ def q244_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead-letter whatever slips past triage (same rule as NULL
     payloads), so the quarantine counts reconcile the pipeline.
 
-    r14 (guide §4.1): the three stages are pure per-row Python, so the
-    query runs them FUSED in one mapInPandas
-    (operators.multimodal.tone_corruption_triage) — one JVM↔Python
-    crossing instead of three, and the payload bytes never cross back;
-    the standalone operators share the same per-row rules (and remain
-    the composition points for the decode-family queries), so the
-    triage is identical by construction."""
-    from ..operators.multimodal import tone_corruption_triage
+    The three stages are pure per-row Python, so they run in one
+    mapInPandas: validate_media with ``encode_row=encode_corrupt_tone``
+    (synthesize + corrupt, the rules attach_tone_wav and
+    corrupt_tone_wavs apply) — one JVM↔Python crossing instead of
+    three, and the payload bytes never reach the JVM."""
+    from ..operators.multimodal import encode_corrupt_tone, validate_media
 
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") % 5 == 0)
-    triage = tone_corruption_triage(docs)
+    triage = validate_media(docs, encode_row=encode_corrupt_tone)
     return (
         triage.groupBy("status")
         .agg(

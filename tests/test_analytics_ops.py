@@ -316,13 +316,15 @@ def test_validate_media_triage_reconciles_with_wav_decode(spark):
     """ADVICE r12: a structurally sound stereo / non-16-bit WAV used to
     triage 'ok' while decode_wav_features dead-lettered it, breaking
     the validate-then-decode count reconciliation. Such clips must now
-    triage 'unsupported', so (#ok == #decoded rows) holds exactly."""
+    triage 'unsupported', so (#ok == #decoded rows) holds exactly, for
+    every audio decoder."""
     import io
     import wave as wave_mod
 
     from hadoop_trans_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         WAV_MIME,
+        decode_spectral,
         decode_wav_features,
         encode_wav_tone,
         validate_media,
@@ -352,8 +354,11 @@ def test_validate_media_triage_reconciles_with_wav_decode(spark):
     )
     triage = {r.doc_id: r.status for r in validate_media(df).collect()}
     assert triage == {1: "ok", 2: "unsupported", 3: "unsupported", 4: "header"}
-    decoded = sorted(r.doc_id for r in decode_wav_features(df).collect())
-    assert decoded == sorted(i for i, s in triage.items() if s == "ok")
+    for decode in (decode_wav_features, decode_spectral):
+        decoded = sorted(r.doc_id for r in decode(df).collect())
+        assert decoded == sorted(
+            i for i, s in triage.items() if s == "ok"
+        ), decode.__name__
 
 
 def test_orc_boundary_is_byte_faithful_on_hostile_strings(spark, tmp_path):

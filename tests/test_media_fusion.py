@@ -1,9 +1,9 @@
 """Fused synth→decode media pipelines (r15, guide §4.1) must be
 row-identical to the chained two-crossing form they replace.
 
-The fused mode composes the SAME batch functions the standalone
-operators run (operators/multimodal._maybe_fuse / fuse_synth_decode), so
-any divergence here means the composition plumbing broke, not the rules.
+Both forms run the SAME per-row loop (operators/multimodal._media_map,
+with and without ``encode_row``), so any divergence here means the
+driver's synthesize path broke, not the rules.
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hadoop_trans_spark.operators.stage import clear_stage_memo  # noqa: E402
 from hadoop_trans_spark.queries import QUERIES  # noqa: E402
 from hadoop_trans_spark.session import get_spark  # noqa: E402
 
@@ -36,13 +37,16 @@ def main() -> None:
     names = [q for q in QUERIES if q.startswith(tuple(args))]
     if not names:
         raise SystemExit(f"no queries match prefixes {args}")
-    from bench import execute  # the v2 noop-sink action — match the protocol
+    from bench import MEMOIZED, execute  # v2 noop-sink action — match the protocol
 
     spark = get_spark(app_name="ab_time")
     execute(QUERIES["q01_pricing_summary"](spark, sf_dir))  # warm-up
     for name in names:
         draws = []
         for _ in range(n):
+            # Without this every draw after the first times a memo hit.
+            if name in MEMOIZED:
+                clear_stage_memo(MEMOIZED[name])
             t0 = time.perf_counter()
             execute(QUERIES[name](spark, sf_dir))
             draws.append(time.perf_counter() - t0)

@@ -2,7 +2,7 @@
 
 Prints per-query wall-clock at each SF and the growth factor between the
 first and last SF — the number SCALE.md's growth tables cite. Timings use
-the engine session (same as bench.py) and a count() action.
+the engine session and bench.py's noop-sink action (``bench.execute``).
 
 Usage: python tools/time_queries.py q229 q230 ... [--sf sf0.001,sf0.1]
 """
