@@ -36,6 +36,16 @@ FIRST run discarded: round 9 showed the heavy tail draws multi-x outliers
 best-of-2 can't absorb when the outlier IS one of the two draws
 (VERDICT r9 item 3). Non-headline queries stay single-run to bound total
 bench time; the recorded run count per query is in bench_results.json.
+
+Stage memo: queries that share a pipeline stage (MinHash pairs, SimHash
+fingerprints, the supplier backbone, the streaming late-batch staging)
+memoize it per session (operators/stage.py memo_stage). Each timed draw
+starts from an EMPTY memo (`draw`), so every draw builds the stages its
+query reads: a query's time is its standalone cost — what
+``python -m hadoop_trans_spark query qNN`` pays — and does not depend on
+which queries ran before it. Within one draw the memo still shares a
+stage between the query's own consumers. `draw` is the one timed run;
+bench's loop, --adjudicate and the tools all call it.
 """
 
 from __future__ import annotations
@@ -49,23 +59,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from hadoop_trans_spark.operators.stage import clear_stage_memo  # noqa: E402
 from hadoop_trans_spark.queries import QUERIES  # noqa: E402
-from hadoop_trans_spark.queries.dedup import clear_stage_memo  # noqa: E402
 from hadoop_trans_spark.session import get_spark  # noqa: E402
-
-# Headline queries whose pipelines are memoized per session (dedup stage
-# cache): their best-of-2 re-run clears the query's OWN stage tags first
-# so both runs do the real work — without wiping the other family's
-# stages (a real session builds each stage once; q64/q68/q70 reusing
-# q40's pairs is the honest cost).
-MEMOIZED = {
-    "q40_minhash_lsh_neardup": {"grams3", "bandsig8x4", "minhash_pairs"},
-    "q41_simhash": {"simhash"},
-    "q59_stream_late_drop": {"late_stage_997"},
-    "q140_triangle_count": {"supplier_backbone"},
-    "q147_recursive_bfs": {"supplier_backbone"},
-    "q183_stream_windowed_topk": {"late_stage_997"},
-}
 
 # Headline set: one per operator family, weighted toward the plans whose
 # scale behavior matters (joins, aggs, windows, dedup, similarity).
@@ -247,8 +243,8 @@ def time_headline(run_once, heavy_s: float = HEAVY_S) -> tuple[float, int]:
     """(best_seconds, n_runs) for one headline query.
 
     ``run_once(i)`` executes the query and returns its wall-clock; ``i``
-    is the run index (the caller clears per-session stage memos before
-    EVERY draw, so each draw does the real work). Light queries (first
+    is the run index (each draw is a `draw`, which starts from an empty
+    stage memo, so each draw does the real work). Light queries (first
     draw <= heavy_s): best of 2. Heavy queries: 3 runs, min of ALL
     three — a slow GC/compilation outlier draw can't set the recorded
     time under min(), and discarding the first draw outright (the r10
@@ -479,17 +475,26 @@ def execute(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def draw(spark, name: str, sf_dir: str) -> float:
+    """One timed run of a declared query: empty the stage memo, then time
+    building the query (eager stage checkpoints happen here) plus its
+    noop-sink action. Seconds."""
+    clear_stage_memo()
+    t0 = time.perf_counter()
+    execute(QUERIES[name](spark, sf_dir))
+    return time.perf_counter() - t0
+
+
 def adjudicate(here: str, names: list[str] | None = None) -> None:
     """Warm A/B re-run of the movers recorded by the LAST bench run
     (bench_results.json), so a regression like r11's q237 is caught and
     attributed in-round instead of by the judge (VERDICT r11 item 6).
 
-    For each flagged mover: ADJUDICATE_RUNS warm draws in a fresh
-    session (stage memos cleared per draw), min recorded. Verdict
-    ``real`` if the warm min STILL exceeds the mover gate against the
-    same drift/suite-adjusted baseline the flag used — i.e. the
-    regression reproduces under the low-noise protocol — else
-    ``noise``. Writes bench_adjudication.json and prints one JSON line.
+    For each flagged mover: ADJUDICATE_RUNS warm `draw`s in a fresh
+    session, min recorded. Verdict ``real`` if the warm min STILL
+    exceeds the mover gate against the same drift/suite-adjusted
+    baseline the flag used — i.e. the regression reproduces under the
+    low-noise protocol — else ``noise``. Writes bench_adjudication.json and prints one JSON line.
 
     ``--adjudicate qA qB ...`` (r14): adjudicate the NAMED queries
     against the fresh calibration.json per-query map (drift 1.0 —
@@ -541,13 +546,7 @@ def adjudicate(here: str, names: list[str] | None = None) -> None:
             name = m["query"]
             if name not in QUERIES:
                 continue
-            draws = []
-            for _ in range(ADJUDICATE_RUNS):
-                if name in MEMOIZED:
-                    clear_stage_memo(MEMOIZED[name])
-                t0 = time.perf_counter()
-                execute(QUERIES[name](spark, sf_dir))
-                draws.append(time.perf_counter() - t0)
+            draws = [draw(spark, name, sf_dir) for _ in range(ADJUDICATE_RUNS)]
             # Prefer the directly-recorded baseline (ADVICE r12);
             # reconstruct from the rounded fields only for mover entries
             # written by pre-r13 bench versions.
@@ -562,12 +561,10 @@ def adjudicate(here: str, names: list[str] | None = None) -> None:
             escalated = False
             if _gate(min(draws)):
                 escalated = True
-                for _ in range(ADJUDICATE_ESCALATE_RUNS):
-                    if name in MEMOIZED:
-                        clear_stage_memo(MEMOIZED[name])
-                    t0 = time.perf_counter()
-                    execute(QUERIES[name](spark, sf_dir))
-                    draws.append(time.perf_counter() - t0)
+                draws += [
+                    draw(spark, name, sf_dir)
+                    for _ in range(ADJUDICATE_ESCALATE_RUNS)
+                ]
             warm_min = min(draws)
             ratio = warm_min / base_s
             verdict = "real" if _gate(warm_min) else "noise"
@@ -619,24 +616,10 @@ def main() -> None:
     runs: dict[str, int] = {}
     headline = set(names)
     for name in names + extra:
-
-        def run_once(i: int, name: str = name) -> float:
-            if name in MEMOIZED:
-                # Every draw must rebuild the query's OWN shared stages,
-                # not hit the per-session memo (that would time a dict
-                # lookup). Including draw 0: an earlier query in the loop
-                # may share a stage tag (q183 warms q59's late stage),
-                # and a memo-warm first draw both underreports the query
-                # and, under min(), would set its recorded time.
-                clear_stage_memo(MEMOIZED[name])
-            t0 = time.perf_counter()
-            execute(QUERIES[name](spark, sf_dir))
-            return time.perf_counter() - t0
-
         if name in headline:
-            best, n_runs = time_headline(run_once)
+            best, n_runs = time_headline(lambda i: draw(spark, name, sf_dir))
         else:
-            best, n_runs = run_once(0), 1
+            best, n_runs = draw(spark, name, sf_dir), 1
         timings[name] = round(best, 4)
         runs[name] = n_runs
 

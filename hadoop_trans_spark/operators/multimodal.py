@@ -135,17 +135,21 @@ def _media_map(
     return df.mapInPandas(_map, schema)
 
 
+def _media_meta(payload: bytes, mime: str) -> dict:
+    """MEDIA_SCHEMA's meta struct for ``payload``: mime, n_bytes, sha256."""
+    return {
+        "mime": mime,
+        "n_bytes": len(payload),
+        "checksum": hashlib.sha256(payload).hexdigest(),
+    }
+
+
 def _synth_media(df: DataFrame, encode_row, mime: str) -> DataFrame:
     """The attach_* shape: MEDIA_SCHEMA rows whose payload is
-    ``encode_row(doc_id)``, with mime/n_bytes/sha256 meta."""
+    ``encode_row(doc_id)``, with `_media_meta`."""
 
     def _row(doc_id: int, payload: bytes) -> tuple:
-        meta = {
-            "mime": mime,
-            "n_bytes": len(payload),
-            "checksum": hashlib.sha256(payload).hexdigest(),
-        }
-        return doc_id, payload, meta
+        return doc_id, payload, _media_meta(payload, mime)
 
     return _media_map(df, _row, MEDIA_SCHEMA, mime, encode_row)
 
@@ -692,7 +696,8 @@ def corrupt_tone_wavs(df: DataFrame) -> DataFrame:
     2 data chunk cut in half (payload-dead), 3 truncated to 6 bytes
     (header-dead). The classes map 1:1 onto validate_media statuses,
     giving q244 its closed-form oracle. The canonical stdlib WAV
-    header is 44 bytes, so [:44 + rest//2] keeps the header intact."""
+    header is 44 bytes, so [:44 + rest//2] keeps the header intact.
+    Each row's meta is rebuilt from its corrupted payload."""
 
     def _corrupt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -700,6 +705,10 @@ def corrupt_tone_wavs(df: DataFrame) -> DataFrame:
             out["payload"] = [
                 _corrupt_wav_raw(int(doc_id), bytes(payload))
                 for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+            ]
+            out["meta"] = [
+                _media_meta(payload, meta["mime"])
+                for payload, meta in zip(out["payload"], pdf["meta"])
             ]
             yield out
 

@@ -94,8 +94,8 @@ def materialize_stage(df: DataFrame, reliable: bool | None = None) -> DataFrame:
 # (MinHash pairs, SimHash fingerprints, the streaming late-batch staging
 # dir). Values are whatever the build produced — a materialized DataFrame
 # or a staged path. Keyed by Spark applicationId so a fresh session never
-# sees a stale handle; bench.py clears a query's OWN tags between its two
-# timed runs (see clear_stage_memo).
+# sees a stale handle. Each timed draw starts from an empty memo (see
+# clear_stage_memo).
 _STAGE_CACHE: dict[tuple, object] = {}
 
 
@@ -123,17 +123,9 @@ def memo_stage(spark, sf_dir: str, tag: str, build, valid=None):
     return _STAGE_CACHE[key]
 
 
-def clear_stage_memo(tags: set[str] | None = None) -> None:
-    """Drop memoized stage handles — all of them, or only the given
-    stage tags. bench.py clears a query's OWN stages between its two
-    timed runs so best-of-2 measures the real pipeline twice, not one
-    build plus one memo hit (0.06 s vs 2.6 s at sf0.001 — a fake 40x);
-    clearing selectively keeps the memo honest for the other families
-    (wiping the MinHash stages before re-timing SimHash would force
-    every later MinHash consumer to rebuild a stage a real session
-    computes once)."""
-    if tags is None:
-        _STAGE_CACHE.clear()
-        return
-    for key in [k for k in _STAGE_CACHE if k[0] in tags]:
-        del _STAGE_CACHE[key]
+def clear_stage_memo() -> None:
+    """Drop every memoized stage handle. bench.draw calls it before each
+    timed run, so each draw builds the stages its query reads instead of
+    timing a memo hit (0.06 s vs 2.6 s at sf0.001 — a fake 40x) left by
+    an earlier draw or by another query that shares the stage."""
+    _STAGE_CACHE.clear()

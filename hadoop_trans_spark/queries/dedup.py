@@ -17,7 +17,7 @@ from ..operators.minhash import (
 )
 from ..operators.simhash import simhash
 from ..operators.similarity import embedding_near_duplicates
-from ..operators.stage import materialize_stage, parallelize_stage
+from ..operators.stage import materialize_stage, memo_stage, parallelize_stage
 from ..operators.textstats import normalize_text
 from .base import query
 
@@ -27,12 +27,8 @@ from .base import query
 # tiny (pairs: O(dups) rows; fingerprints: 16 B/doc) while recomputing
 # them re-runs the md5-dominated shingle pipeline — the same "checkpoint
 # a multi-consumer stage once" rule near_duplicates applies internally,
-# lifted across queries.
-from ..operators.stage import (  # noqa: F401
-    _STAGE_CACHE,
-    clear_stage_memo,
-    memo_stage,
-)
+# lifted across queries. Each timed draw (bench.draw) starts from an
+# empty memo, so a query's measured time includes every stage it reads.
 
 
 def _memo_stage(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:

@@ -127,8 +127,8 @@ def _supplier_backbone(spark: SparkSession, sf_dir: str):
 
     Memoized per (session, sf_dir) and materialized: both consumers pay
     the full pair-mine + top-k once, then read the 2000-row edge table
-    (the dedup-family shared-stage rule; bench.py clears the tag between
-    its timed runs)."""
+    (the dedup-family shared-stage rule; each timed draw starts from an
+    empty memo, bench.draw)."""
     from ..operators.stage import materialize_stage, memo_stage
 
     def build() -> DataFrame:

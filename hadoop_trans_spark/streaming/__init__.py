@@ -21,7 +21,6 @@ from .jobs import (
     stream_upsert_sink,
     tumbling_counts,
     user_streaks,
-    user_streaks_tws,
     user_streaks_updates,
     complete_totals_stream,
 )
@@ -42,7 +41,6 @@ __all__ = [
     "stream_upsert_sink",
     "late_data_drop",
     "user_streaks",
-    "user_streaks_tws",
     "user_streaks_updates",
     "complete_totals_stream",
 ]

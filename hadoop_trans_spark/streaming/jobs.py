@@ -633,96 +633,6 @@ def user_streaks(
     )
 
 
-# --- custom stateful operator: transformWithStateInPandas (Spark 4) -----------
-
-
-def user_streaks_tws(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 600
-) -> DataFrame:
-    """Per-user activity streaks on the MODERN arbitrary-stateful API
-    (`transformWithStateInPandas`, Spark 4): a `StatefulProcessor` with
-    typed ValueState — the successor to applyInPandasWithState (q60 keeps
-    the legacy API form; both compute the same result, and both check
-    against the same islands oracle).
-
-    Requires the RocksDB state store provider — which is also the 100 TB
-    posture (state spills off-heap, snapshot/changelog checkpointing);
-    the fixture run sets it on the session for the duration of the job.
-
-    NOT DECLARED AS A QUERY in this container: the API's state-server
-    protocol needs the `google.protobuf` Python package, which is absent
-    here — gated below with a clear error. The legacy-API twin (q60,
-    ``user_streaks``) is the declared, driver-checked form; on an
-    environment with protobuf this function is its drop-in successor."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-specific
-        raise RuntimeError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(not installed in this container); use user_streaks (q60) "
-            "for the same semantics on the legacy API"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    gap_us = gap_seconds * 1_000_000
-
-    class StreakProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "streak", "n long, cur long, best long, last_us long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            df = pd.concat(list(rows)).sort_values("ts")
-            if self._state.exists():
-                n, cur, best, last_us = self._state.get()
-            else:
-                n, cur, best, last_us = 0, 0, 0, -1
-            for ts in df["ts"]:
-                us = int(ts.value // 1000)
-                if last_us >= 0 and us - last_us < gap_us:
-                    cur += 1
-                else:
-                    cur = 1
-                best = max(best, cur)
-                last_us = us
-                n += 1
-            self._state.update((n, cur, best, last_us))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_streak": [best]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        updates = stream.groupBy("user_id").transformWithStateInPandas(
-            StreakProcessor(),
-            "user_id long, n_events long, max_streak long",
-            "Update",
-            "None",
-        )
-        final = run_to_memory(updates, "update")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    # update mode re-emits per batch; counters are monotone → max = final.
-    return final.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("max_streak").alias("max_streak"),
-    )
-
-
 # --- E39: watermark late-data drop -------------------------------------------
 
 
@@ -741,8 +651,8 @@ def _stage_late_batches(
     The staged DIRECTORY is memoized per (session, sf_dir): q59 and q183
     read the identical staging, and the files are immutable once written
     — each caller still starts its own streaming query with a fresh
-    checkpoint over them (bench.py clears the tag between its two timed
-    runs, operators/stage.py clear_stage_memo).
+    checkpoint over them (each timed draw starts from an empty memo,
+    bench.draw).
     """
     from ..catalog import table
     from ..operators.stage import memo_stage

@@ -234,27 +234,44 @@ def test_triangle_count_matches_handmade_graph(spark, tmp_path):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_stage_memo_selective_clear_keeps_other_family(spark):
-    """clear_stage_memo({tags}) must drop exactly those stage entries
-    and keep the rest (bench relies on this: re-timing SimHash must not
-    force the MinHash family to rebuild)."""
-    from hadoop_trans_spark.queries.dedup import (
-        _STAGE_CACHE,
-        clear_stage_memo,
-        grams3_table,
-        simhash_table,
-    )
+def test_stage_memo_clear_empties_cache(spark):
+    """clear_stage_memo() must drop every family's stage entries."""
+    from hadoop_trans_spark.operators.stage import _STAGE_CACHE, clear_stage_memo
+    from hadoop_trans_spark.queries.dedup import grams3_table, simhash_table
 
     sf = "/root/testdata/sf0.001"
     grams3_table(spark, sf)
     simhash_table(spark, sf)
     tags = {k[0] for k in _STAGE_CACHE}
     assert {"grams3", "simhash"} <= tags
-    clear_stage_memo({"simhash"})
-    tags = {k[0] for k in _STAGE_CACHE}
-    assert "simhash" not in tags and "grams3" in tags
     clear_stage_memo()
     assert not _STAGE_CACHE
+
+
+def test_bench_draw_builds_every_stage_it_reads(spark, monkeypatch):
+    """bench.draw starts each timed run from an empty stage memo: after
+    q40 has primed the MinHash stages, every draw of q64 (which reads
+    them) still builds them itself, the same number of times — no draw
+    times a memo hit left by another query or by the previous draw."""
+    import bench
+    from hadoop_trans_spark.queries import QUERIES, dedup
+
+    sf = "/root/testdata/sf0.001"
+    QUERIES["q40_minhash_lsh_neardup"](spark, sf)
+    builds = []
+    real = dedup.materialize_stage
+
+    def counting(df, *args, **kwargs):
+        builds.append(1)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "materialize_stage", counting)
+    counts = []
+    for _ in range(2):
+        builds.clear()
+        bench.draw(spark, "q64_dedup_canonical", sf)
+        counts.append(len(builds))
+    assert counts[0] == counts[1] > 0, counts
 
 
 def test_stage_memo_evicts_dead_session_entries(spark):

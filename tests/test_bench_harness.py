@@ -9,6 +9,8 @@ fresh — and the unreadable-file marker.
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
 import os
 import sys
@@ -484,3 +486,40 @@ def test_tail_recovery_truncated_block_returns_stale(tmp_path):
         {"parsed": None, "tail": '..., "calibration": {"prev_commit": "abc'},
     )
     assert load_calibration(str(tmp_path))["error"] == "calibration stale"
+
+
+def test_timed_runs_go_through_bench_draw():
+    """The draw rule (empty the stage memo, build, noop-write, time) lives
+    only in bench.draw: nothing in tools/ or elsewhere in bench.py clears
+    the memo itself, and no hand table of memo tags (MEMOIZED) is defined
+    or imported."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(repo, "bench.py")] + sorted(
+        glob.glob(os.path.join(repo, "tools", "*.py"))
+    )
+    found = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        allowed = set()
+        if path == paths[0]:  # bench.py
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "draw":
+                    allowed = {id(n) for n in ast.walk(node)}
+        where = os.path.relpath(path, repo)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and id(node) not in allowed:
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name == "clear_stage_memo":
+                    found.append(f"{where}:{node.lineno} calls clear_stage_memo")
+            names = []
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            elif isinstance(node, ast.alias):
+                names += [node.name, node.asname]
+            if "MEMOIZED" in names:
+                found.append(f"{where}:{getattr(node, 'lineno', '?')} MEMOIZED")
+    assert not found, found

@@ -116,21 +116,3 @@ def test_quantize_int8_bounds_and_error(spark):
     n = 4
     for r in out.values():
         assert r["sq_err"] <= n * (1.0 / r["scale"]) ** 2 + 1e-9
-
-
-def test_transform_with_state_gated_clearly(spark):
-    """transformWithStateInPandas needs google.protobuf (absent here);
-    the operator must fail with an actionable message, not a worker
-    crash mid-job."""
-    import pytest
-
-    from hadoop_trans_spark.streaming import user_streaks_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="google.protobuf"):
-            user_streaks_tws(spark, "/root/testdata/sf0.001")
-    else:  # environment has protobuf: the operator must actually run
-        out = user_streaks_tws(spark, "/root/testdata/sf0.001")
-        assert out.count() > 0

@@ -6,6 +6,7 @@ when the triage calls it 'ok'."""
 
 from __future__ import annotations
 
+import hashlib
 import io
 import struct
 import wave
@@ -19,6 +20,8 @@ from hadoop_trans_spark.operators.multimodal import (
     RAW_RGB_MIME,
     WAV_MIME,
     ahash_ppm,
+    attach_tone_wav,
+    corrupt_tone_wavs,
     decode_media,
     decode_ppm_features,
     decode_spectral,
@@ -92,3 +95,15 @@ def test_edge_clips_triage_as_the_audio_decoders_read_them(spark):
     assert [tuple(r) for r in decode_wav_features(df).collect()] == [
         (1, 8000, 0, 0, 0, 0.0, 0)
     ]
+
+
+def test_corrupted_clips_carry_their_own_meta(spark):
+    """corrupt_tone_wavs changes payload bytes, so each row's meta must
+    describe the corrupted payload, not the intact clip it came from."""
+    docs = spark.range(8).withColumnRenamed("id", "doc_id")
+    rows = corrupt_tone_wavs(attach_tone_wav(docs)).collect()
+    assert len(rows) == 8
+    for r in rows:
+        payload = bytes(r.payload)
+        assert r.meta.n_bytes == len(payload), r.doc_id
+        assert r.meta.checksum == hashlib.sha256(payload).hexdigest(), r.doc_id

@@ -886,10 +886,13 @@ def test_cpu_heavy_stages_do_not_inherit_single_scan_split(spark, smoke_dir):
     is ONE split regardless of cores — parallelize_stage exists exactly
     for this; losing it silently serializes the dedup pipeline)."""
     from hadoop_trans_spark.catalog import table as _table
-    from hadoop_trans_spark.operators.stage import parallelize_stage
-    from hadoop_trans_spark.queries.dedup import clear_stage_memo, grams3_table
+    from hadoop_trans_spark.operators.stage import (
+        clear_stage_memo,
+        parallelize_stage,
+    )
+    from hadoop_trans_spark.queries.dedup import grams3_table
 
-    clear_stage_memo({"grams3"})
+    clear_stage_memo()
     g = grams3_table(spark, smoke_dir)
     assert g.rdd.getNumPartitions() > 1, g.rdd.getNumPartitions()
 

@@ -9,7 +9,7 @@ dimension tables (and events/embeddings) are copied unchanged. This is the
 
 Usage:
   python tools/replicate_facts.py /root/testdata/sf0.1 /tmp/sf0.1_x10 10
-  python tools/time_queries.py q204 --sf ...   # then time against both
+  python tools/ab_cold.py q204 --sf /root/testdata/sf0.1,/tmp/sf0.1_x10   # then time against both
 
 ``--with-events`` / ``--with-embeddings`` additionally replicate the
 events table (event_id AND user_id shifted per copy, so user-grained

@@ -2,8 +2,9 @@
 
 pair_growth.py proves candidate COUNTS stay linear; this audit proves
 the same for the bytes the cluster actually moves. For each audited
-query it executes the full noop-sink write (bench protocol v2 — every
-output column computed) and attributes stage metrics via a stage-id
+query it runs one `bench.draw` (empty stage memo, so the query's own
+stage builds are counted; full noop-sink write, every output column
+computed) and attributes stage metrics via a stage-id
 watermark (queries run sequentially, so every stage completed after
 the watermark belongs to the query), summing shuffle write bytes,
 shuffle read bytes, and input bytes from the Spark REST status API.
@@ -33,7 +34,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hadoop_trans_spark.queries import QUERIES  # noqa: E402
+from bench import draw  # noqa: E402
 from hadoop_trans_spark.session import get_spark  # noqa: E402
 
 # One per heavy family over replicable tables: relational join/agg,
@@ -97,9 +98,7 @@ def measure(spark, sf_dir: str, audited: list[str]) -> dict[str, dict]:
     out = {}
     for name in audited:
         seen = {s["stageId"] for s in _stages(ui)}
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        draw(spark, name, sf_dir)
         mine = [s for s in _stages(ui) if s["stageId"] not in seen]
         out[name] = {
             "shuffle_write_mb": round(
