@@ -597,6 +597,34 @@ def adjudicate(here: str, names: list[str] | None = None) -> None:
     )
 
 
+def write_snapshot(path: str, detail: dict) -> bool:
+    """Write the per-round snapshot of the FULL per-query map.
+
+    The stdout line fits ~40 of 259 queries and bench_results.json is
+    overwritten by every local run, so ``bench_results_r{N}.json`` (N =
+    latest BENCH round + 1, the round this run belongs to) persists the
+    whole map for cross-round comparisons; commit it at round close.
+    An existing snapshot taken at another sf is left alone (a one-line
+    notice goes to stderr): a quick small-sf run must not replace the
+    round's committed sf0.1 map. Returns whether the file was written."""
+    if os.path.exists(path):
+        try:
+            with open(path) as fh:
+                old_sf = json.load(fh).get("sf")
+        except (OSError, ValueError, AttributeError):
+            old_sf = None
+        if old_sf != detail["sf"]:
+            print(
+                f"bench: kept {os.path.basename(path)} (sf {old_sf}); "
+                f"this run's sf {detail['sf']} differs",
+                file=sys.stderr,
+            )
+            return False
+    with open(path, "w") as fh:
+        json.dump(detail, fh, indent=1)
+    return True
+
+
 def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     if "--adjudicate" in sys.argv[1:]:
@@ -643,18 +671,9 @@ def main() -> None:
     detail["movers"] = movers
     with open(os.path.join(here, "bench_results.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
-    # Per-round snapshot of the FULL per-query map (VERDICT r14 item 5,
-    # additions-only): the stdout line fits ~40 of 259 queries and
-    # bench_results.json is overwritten by every local run, so committed
-    # cross-round PERF comparisons were limited to the headline subset.
-    # bench_results_r{N}.json (N = latest BENCH round + 1, i.e. the round
-    # this run belongs to) persists the whole map; sf rides inside, so a
-    # same-SF comparison can check it. Commit the file at round close.
     rounds = _bench_rounds(here)
     cur_round = (rounds[-1][0] + 1) if rounds else 1
-    snap = os.path.join(here, f"bench_results_r{cur_round}.json")
-    with open(snap, "w") as fh:
-        json.dump(detail, fh, indent=1)
+    write_snapshot(os.path.join(here, f"bench_results_r{cur_round}.json"), detail)
 
     print(
         json.dumps(

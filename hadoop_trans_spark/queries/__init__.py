@@ -42,8 +42,27 @@ from .base import ORACLE, QUERIES
 _SWEEP_PRIORITY = [
     # Generated by tools/rotate_sweep.py — do not hand-edit;
     # rerun the tool at the start of each round and commit.
+    "q178_market_basket",
+    "q200_degree_distribution",
+    "q47_binary_payload",
+    "q33_migrate_fidelity",
+    "q34_compact_fidelity",
+    "q245_schema_drift",
     "q105_kmeans_clusters",
     "q249_semantic_dedup",
+    "q48_media_features",
+    "q84_frame_sample",
+    "q140_triangle_count",
+    "q244_media_quarantine",
+    "q121_raw_decode",
+    "q147_recursive_bfs",
+    "q151_wav_decode",
+    "q152_ppm_decode",
+    "q163_ahash_neardup",
+    "q204_adamic_adar",
+    "q229_spectral_dominant",
+    "q246_footer_quarantine",
+    "q247_ppm_thumbnail",
     "q251_pq_ann",
     "q253_ivfpq_ann",
     "q256_ivfpq_residual_ann",
@@ -54,7 +73,6 @@ _SWEEP_PRIORITY = [
     "q175_bigram_lm_interp",
     "q176_linear_interpolation",
     "q177_cusum_changepoint",
-    "q178_market_basket",
     "q179_event_pattern_match",
     "q180_range_clustered_layout",
     "q183_stream_windowed_topk",
@@ -73,25 +91,7 @@ _SWEEP_PRIORITY = [
     "q196_daily_acf",
     "q197_k_anonymity",
     "q199_ab_ztest",
-    "q200_degree_distribution",
     "q201_rake_keywords",
-    "q10_asof_click_to_view",
-    "q11_agg_battery",
-    "q12_approx_distinct",
-    "q13_rollup",
-    "q14_cube",
-    "q15_collect_nations",
-    "q16_union_distinct",
-    "q17_intersect_except",
-    "q18_dedup_keep_first",
-    "q46_struct_nested",
-    "q47_binary_payload",
-    "q203_holt_forecast",
-    "q206_winsorize_acctbal",
-    "q207_small_qty_revenue",
-    "q208_discount_brackets",
-    "q209_profit_by_nation_year",
-    "q210_twap_per_user",
 ]
 
 

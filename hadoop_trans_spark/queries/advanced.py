@@ -983,7 +983,7 @@ def q178_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = it.join(freq.select("p_brand"), "p_brand", "left_semi")
     # Pair supports via the shared co-occurrence operator: one shuffle
-    # keyed on the order + in-array C(k,2) expansion, instead of
+    # keyed on the order + generator C(k,2) expansion, instead of
     # shuffling the frequent-item rows twice through a self-join.
     pairs = (
         copurchase_pairs(fit, "l_orderkey", "p_brand", weighted=True)

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..operators.cooccur import MAX_BASKET, copurchase_pairs
+from ..operators.cooccur import MAX_BASKET, copurchase_pairs, upper_pairs
 from ..operators.graph import pagerank
 from .base import query
 
@@ -457,28 +457,27 @@ def q204_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted neighbor set is collected once — und rows are distinct by
     # construction, so degree == size of the set — hub centers
     # (degree > 64) and degree-1 centers drop exactly as `thin` and the
-    # `ta.degree > 1` filter did, and the C(k,2) wedge fan-out happens
-    # INSIDE the array (capped at C(64,2) = 2016 structs/center by the
-    # hub prune, far under the cooccur MAX_BASKET hazard bound). The
-    # neighbor rows shuffle ONCE and there is no self-join. Per-wedge
-    # weights/counts are identical by construction, and the decimal sum
-    # is order-free — results bit-identical (oracle unchanged).
+    # `ta.degree > 1` filter did, and the C(k,2) wedge fan-out streams
+    # out of the set through cooccur.upper_pairs (at most C(64,2) = 2016
+    # wedges per center after the hub prune), each wedge row carrying
+    # its center's weight w. The neighbor rows shuffle ONCE and there is
+    # no self-join. Per-wedge weights/counts are identical by
+    # construction, and the decimal sum is order-free — results
+    # bit-identical (oracle unchanged).
     centers = (
         und.groupBy("node")
         .agg(F.array_sort(F.collect_set("nbr")).alias("ps"))
         .where((F.size("ps") <= 64) & (F.size("ps") > 1))
-        .select(F.size("ps").cast("long").alias("degree"), "ps")
-    )
-    from ..operators.cooccur import _COMBOS
-
-    cand = (
-        centers.select(
-            F.round(F.lit(1.0) / F.log(F.col("degree")), 9)
+        .select(
+            F.round(F.lit(1.0) / F.log(F.size("ps").cast("long")), 9)
             .cast("decimal(38,9)")
             .alias("w"),
-            F.explode(F.expr(_COMBOS)).alias("p"),
+            "ps",
         )
-        .groupBy(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
+    )
+    cand = (
+        upper_pairs(centers, "ps", "w")
+        .groupBy("u", "v")
         .agg(F.sum("w").alias("aa"), F.count("*").alias("common"))
     )
     return (

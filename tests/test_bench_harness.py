@@ -23,6 +23,7 @@ from bench import (
     compute_movers,
     load_calibration,
     time_headline,
+    write_snapshot,
 )
 
 
@@ -523,3 +524,21 @@ def test_timed_runs_go_through_bench_draw():
             if "MEMOIZED" in names:
                 found.append(f"{where}:{getattr(node, 'lineno', '?')} MEMOIZED")
     assert not found, found
+
+
+def test_snapshot_kept_when_sf_differs(tmp_path, capsys):
+    # A quick sf0.001 run must not replace the round's committed sf0.1 map.
+    snap = tmp_path / "bench_results_r16.json"
+    committed = {"sf": 0.1, "value": 424.5, "queries": {"q01": 1.6}}
+    snap.write_text(json.dumps(committed))
+    assert write_snapshot(str(snap), {"sf": 0.001, "value": 9.0}) is False
+    assert json.loads(snap.read_text()) == committed
+    assert "bench_results_r16.json" in capsys.readouterr().err
+
+
+def test_snapshot_written_when_missing_or_same_sf(tmp_path):
+    snap = tmp_path / "bench_results_r16.json"
+    assert write_snapshot(str(snap), {"sf": 0.001, "value": 9.0}) is True
+    assert json.loads(snap.read_text())["value"] == 9.0
+    assert write_snapshot(str(snap), {"sf": 0.001, "value": 8.0}) is True
+    assert json.loads(snap.read_text())["value"] == 8.0

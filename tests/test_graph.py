@@ -83,7 +83,8 @@ def _brute_pairs(rows):
 
     baskets = defaultdict(set)
     for k, item in rows:
-        baskets[k].add(item)
+        if item is not None:  # collect_set drops NULL items
+            baskets[k].add(item)
     out = defaultdict(int)
     for items in baskets.values():
         s = sorted(items)
@@ -102,6 +103,7 @@ def test_copurchase_pairs_matches_bruteforce_weighted(spark):
         (2, "a"),          # duplicate (key, item) must not inflate w
         (3, "z"),          # singleton basket: no pairs
         (4, "a"), (4, "b"),
+        (5, "a"), (5, None), (5, "c"),  # NULL item: never paired
     ]
     df = spark.createDataFrame(rows, "k long, item string")
     got = {
@@ -127,16 +129,20 @@ def test_copurchase_pairs_distinct_and_int_items(spark):
 
 
 def test_copurchase_pairs_plan_has_no_join(spark):
-    """The operator's point: pair generation is agg + in-array
+    """The operator's point: pair generation is agg + generator
     expansion — a plan containing any join node would mean the fact
-    rows are being shuffled twice through a self-join again."""
+    rows are being shuffled twice through a self-join again. The
+    expansion must also stay in whole-stage codegen: no interpreted
+    higher-order lambda, and every Generate inside a codegen stage."""
     from hadoop_trans_spark.operators.cooccur import copurchase_pairs
 
     df = spark.createDataFrame([(1, "a"), (1, "b")], "k long, item string")
-    plan = (
-        copurchase_pairs(df, "k", "item", weighted=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    out = copurchase_pairs(df, "k", "item", weighted=True)
+    out.collect()  # AQE prints codegen stages only in the final plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
+    assert "lambdafunction" not in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    generates = [ln for ln in final.splitlines() if "Generate " in ln]
+    assert generates, plan
+    assert all("*(" in ln for ln in generates), plan

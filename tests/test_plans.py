@@ -656,11 +656,13 @@ def test_rake_no_python_and_no_forced_broadcast(spark, smoke_dir):
 def test_adamic_adar_wedge_join_keyed_no_cartesian(spark, smoke_dir):
     """q204: the wedge join must be an equi join on the shared
     intermediate node — a cartesian or nested loop over the adjacency
-    lists is the all-pairs plan the hub prune exists to prevent."""
+    lists is the all-pairs plan the hub prune exists to prevent. The
+    wedge expansion runs as generators, never an interpreted lambda."""
     df = QUERIES["q204_adamic_adar"](spark, smoke_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "lambdafunction" not in plan, plan
 
 
 def test_referential_integrity_single_lazy_plan_keyed_joins(spark, smoke_dir):

@@ -196,7 +196,7 @@ def q157_neighborhood(spark, d):
 
 
 def q200_baskets(spark, d):
-    """Basket-capped co-purchase expansion (operators/cooccur.py:43 with
+    """Basket-capped co-purchase expansion (operators/cooccur.copurchase_pairs with
     MAX_BASKET enforced): sum C(k,2) over orders' distinct-part baskets
     with k <= 1024."""
     from hadoop_trans_spark.operators.cooccur import MAX_BASKET

@@ -69,14 +69,13 @@ RESHAPED: dict[str, int] = {
     # checks folded into one fact scan; q123 pagerank loop invariants
     # hoisted + node table derived from the outdeg checkpoint;
     # q68/q85/q70 connected_components convergence check restructured;
-    # q244 triage fused into one mapInPandas. Latest driver rows
-    # predate these.
+    # q244 triage fused into one mapInPandas (q244 re-pinned at round
+    # 16 below). Latest driver rows predate these.
     "q205": 14,
     "q123": 14,
     "q68": 14,
     "q85": 14,
     "q70": 14,
-    "q244": 14,
     # r14 pin-rule misses flagged by VERDICT r14 (item 4): q64 consumes
     # the r14-changed connected_components (operators/components.py) but
     # was left outside the r14 window; q202 exercises the r14 staging/
@@ -90,17 +89,10 @@ RESHAPED: dict[str, int] = {
     # in-array C(k,2) expansion over a materialized pair table; q216's
     # cumulative histogram materialized for its two consumers; q220's
     # rec/freq cutoff legs fused into one metric-tagged window; q246's
-    # month list now reads report.to_copy.
-    "q121": 15,
-    "q151": 15,
-    "q152": 15,
-    "q163": 15,
-    "q229": 15,
-    "q247": 15,
-    "q204": 15,
+    # month list now reads report.to_copy. The media queries, q204 and
+    # q246 changed again in round 16 and are pinned there below.
     "q216": 15,
     "q220": 15,
-    "q246": 15,
     # q181's tie-count windows re-framed onto the rank windows (same
     # exchange); q181's latest driver row predates the reshape.
     "q181": 15,
@@ -114,6 +106,34 @@ RESHAPED: dict[str, int] = {
     "q251": 16,
     "q253": 16,
     "q256": 16,
+    # round-16 migrate/health changes: one mergeSchema source read whose
+    # footer pass is the health check, fs.data_files as the one
+    # marker-free listing, schema_report over it (q33, q34, q245, q246).
+    "q33": 16,
+    "q34": 16,
+    "q245": 16,
+    "q246": 16,
+    # round-16 media kernel: every payload operator is a row function
+    # behind one batch driver (operators/multimodal._media_map).
+    "q47": 16,
+    "q48": 16,
+    "q84": 16,
+    "q121": 16,
+    "q151": 16,
+    "q152": 16,
+    "q163": 16,
+    "q229": 16,
+    "q244": 16,
+    "q247": 16,
+    # round-16 co-purchase pair expansion: two codegen'd generators
+    # (cooccur.upper_pairs) replace the interpreted higher-order lambdas
+    # in the supplier backbone (q140/q147), the part pairs (q200/q204),
+    # q204's wedges and q178's brand pairs.
+    "q140": 16,
+    "q147": 16,
+    "q178": 16,
+    "q200": 16,
+    "q204": 16,
 }
 
 
