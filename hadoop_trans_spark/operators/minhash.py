@@ -8,7 +8,13 @@ DataFrame ops so Catalyst plans it:
     → per-(doc, seed) min of md5(seed || shingle)      [groupBy agg]
     → band signatures (md5 over r consecutive minhashes)
     → candidate pairs: self-equi-join on (band, signature)
+      (`candidate_pairs`), or corpus × new batch (`candidate_pairs_between`)
     → exact Jaccard verification on the shingle sets    [equi-joins]
+
+The stages are the operators; there is no end-to-end wrapper. The
+queries compose them (queries/dedup.py: grams3_table → bandsig_table,
+each materialized once per session, then a candidate stage and
+`jaccard_verify` per query), and the tests call the same stages.
 
 Hash-family note: hash j (j = 4·m + c) is the c-th 8-hex-char chunk of
 md5(m || ':' || shingle) — md5's diffusion makes the four 32-bit chunks
@@ -41,8 +47,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from .stage import materialize_stage, parallelize_stage
 
 
 def shingle_array(text_col="text", k: int = 3) -> F.Column:
@@ -140,6 +144,20 @@ def candidate_pairs(bands_df: DataFrame, max_bucket: int = 1000) -> DataFrame:
     )
 
 
+def candidate_pairs_between(
+    corpus_bands: DataFrame, new_bands: DataFrame
+) -> DataFrame:
+    """Distinct (id_a ∈ corpus, id_b ∈ new) pairs sharing any band
+    signature — the incremental-ingestion candidate stage. The corpus's
+    band signatures are a persisted index (~1% of corpus bytes) that
+    each new batch equi-joins against on (band, band_sig), so per-batch
+    cost scales with the BATCH, not the corpus. Ids must be disjoint
+    across the sides; no bucket cap (a batch never self-joins)."""
+    a = corpus_bands.select("band", "band_sig", F.col("id").alias("id_a"))
+    b = new_bands.select("band", "band_sig", F.col("id").alias("id_b"))
+    return a.join(b, ["band", "band_sig"]).select("id_a", "id_b").distinct()
+
+
 def jaccard_verify(
     grams_df: DataFrame, pairs: DataFrame, threshold: float = 0.0
 ) -> DataFrame:
@@ -164,87 +182,6 @@ def jaccard_verify(
     return scored.where(jac >= threshold).select(
         "id_a", "id_b", F.round(jac, 6).alias("jaccard")
     )
-
-
-def near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    n_hashes: int = 12,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """End-to-end: shingle → minhash → LSH candidates → verified pairs
-    with Jaccard ≥ threshold. Returns (id_a, id_b, jaccard).
-
-    Callers that run several dedup variants over one corpus should
-    compose the public stages directly instead (build `shingle_array` →
-    `band_signatures` once, then `candidate_pairs` + `jaccard_verify`
-    per variant) — queries/dedup.py grams3_table/bandsig_table is the
-    worked example."""
-    # Materialize the shingle table once: band signatures and both
-    # sides of the verification join consume it, and each would
-    # otherwise re-tokenize the full corpus from the scan (3× the
-    # dominant cost). At cluster scale this is a cached/checkpointed
-    # intermediate — standard for any multi-consumer pipeline stage.
-    # parallelize_stage first: the shingle+signature projection is the
-    # CPU stage, and a coarsely-split input would serialize it.
-    grams_df = parallelize_stage(df).select(
-        F.col(id_col).alias("id"),
-        shingle_array(text_col, shingle_k).alias("grams"),
-    )
-    grams_df = materialize_stage(grams_df)
-    bandsig = band_signatures(grams_df, n_hashes, bands)
-    cand = candidate_pairs(bandsig)
-    return jaccard_verify(grams_df, cand, threshold)
-
-
-def near_duplicates_between(
-    corpus: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    n_hashes: int = 12,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Incremental dedup: near-dup pairs BETWEEN an existing corpus and a
-    new batch (id_a ∈ corpus, id_b ∈ new; ids must be disjoint).
-
-    The production ingestion shape: the corpus's band signatures are a
-    persisted index (tiny — ~1% of corpus bytes); each new batch computes
-    its own signatures and equi-joins against that index, so per-batch
-    cost scales with the BATCH, not the corpus. Candidates verify with
-    exact Jaccard exactly like the self-join variant. When both sides
-    are slices of one corpus whose band signatures already exist,
-    filter that shared stage instead (q86 in queries/dedup.py does) —
-    band signatures are per-doc, so a split is a filter, never a
-    recompute."""
-    go = materialize_stage(
-        parallelize_stage(corpus).select(
-            F.col(id_col).alias("id"),
-            shingle_array(text_col, shingle_k).alias("grams"),
-        )
-    )
-    gn = materialize_stage(
-        parallelize_stage(new).select(
-            F.col(id_col).alias("id"),
-            shingle_array(text_col, shingle_k).alias("grams"),
-        )
-    )
-    bo = band_signatures(go, n_hashes, bands)
-    bn = band_signatures(gn, n_hashes, bands)
-    cand = (
-        bo.select("band", "band_sig", F.col("id").alias("id_a"))
-        .join(bn.select("band", "band_sig", F.col("id").alias("id_b")), ["band", "band_sig"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # ids are disjoint across sides, so the union table serves both
-    # verification joins.
-    return jaccard_verify(go.unionByName(gn), cand, threshold)
 
 
 def dedup_keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -10,9 +10,9 @@ data), dead-lettering of malformed and NULL payloads, and the
 empty-batch guard. Fed a MEDIA_SCHEMA table it reads each row's
 payload; given the synthesizer's ``encode_row(doc_id) -> bytes`` it
 builds each payload in the same Python worker that consumes it, so the
-bytes never cross the JVM↔Python boundary and attach_* → decode_*
-collapses to one crossing. Both run the same per-row loop, so the two
-forms are row-identical by construction.
+bytes never cross the JVM↔Python boundary: synthesize → decode is one
+crossing. Both run the same per-row loop, so the two forms are
+row-identical by construction.
 
 Decode coverage: REAL byte-level decoders exist for three formats that
 need no external codec library — PCM16 WAV audio (stdlib `wave`, the
@@ -133,25 +133,6 @@ def _media_map(
                 yield pd.DataFrame(out, columns=names)  # an empty frame is untyped -> Arrow error
 
     return df.mapInPandas(_map, schema)
-
-
-def _media_meta(payload: bytes, mime: str) -> dict:
-    """MEDIA_SCHEMA's meta struct for ``payload``: mime, n_bytes, sha256."""
-    return {
-        "mime": mime,
-        "n_bytes": len(payload),
-        "checksum": hashlib.sha256(payload).hexdigest(),
-    }
-
-
-def _synth_media(df: DataFrame, encode_row, mime: str) -> DataFrame:
-    """The attach_* shape: MEDIA_SCHEMA rows whose payload is
-    ``encode_row(doc_id)``, with `_media_meta`."""
-
-    def _row(doc_id: int, payload: bytes) -> tuple:
-        return doc_id, payload, _media_meta(payload, mime)
-
-    return _media_map(df, _row, MEDIA_SCHEMA, mime, encode_row)
 
 
 def attach_binary(df: DataFrame) -> DataFrame:
@@ -311,17 +292,11 @@ def frame_sample(df: DataFrame) -> DataFrame:
 
 
 def encode_raw_rgb_row(doc_id: int) -> bytes:
-    """attach_raw_rgb's per-row rule: width = 8 + id%5, height = 6,
-    pixel byte i = (id + i) mod 256."""
+    """Deterministic raw-RGB fixture payload: width = 8 + id%5,
+    height = 6, pixel byte i = (id + i) mod 256. The arithmetic pixel
+    rule is what lets a SQL oracle reproduce the decoded statistics
+    exactly."""
     return encode_raw_rgb(8 + doc_id % 5, 6, lambda i: doc_id + i)
-
-
-def attach_raw_rgb(df: DataFrame) -> DataFrame:
-    """Deterministic raw-RGB fixture encoder: each row becomes a decodable
-    media row (payload = raw-RGB bytes with pixel i = (id + i) mod 256,
-    width = 8 + id mod 5, height = 6). The arithmetic pixel rule is what
-    lets a SQL oracle reproduce the decoded statistics exactly."""
-    return _synth_media(df, encode_raw_rgb_row, RAW_RGB_MIME)
 
 
 # --- REAL codecs (stdlib/numpy only): WAV audio and PPM images ---------------
@@ -396,11 +371,6 @@ def encode_wav_square(doc_id: int) -> bytes:
     return _pcm16_wav([amp if (i // half) % 2 == 0 else -amp for i in range(n)])
 
 
-def attach_wav(df: DataFrame) -> DataFrame:
-    """Rows → decodable WAV media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_wav_square, WAV_MIME)
-
-
 def decode_wav_features(df: DataFrame, encode_row=None) -> DataFrame:
     """REAL audio decode (no stub): the stdlib `wave` parser reads each
     payload's RIFF header and PCM frames inside Arrow-batched
@@ -470,11 +440,6 @@ def encode_ppm(doc_id: int) -> bytes:
     return f"P6\n{w} {h}\n255\n".encode("ascii") + bytes(px)
 
 
-def attach_ppm(df: DataFrame) -> DataFrame:
-    """Rows → decodable PPM media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_ppm, PPM_MIME)
-
-
 def decode_ppm_features(df: DataFrame, encode_row=None) -> DataFrame:
     """REAL image decode of a REAL standard format (netpbm P6): header
     grammar parse + numpy frombuffer/reshape + per-channel means —
@@ -498,8 +463,14 @@ AHASH_SCHEMA = T.StructType(
 
 
 def encode_banded_ppm(doc_id: int) -> bytes:
-    """attach_banded_ppm's per-row rule: 16×8 P6 PPM, white 2-row band
-    at row 2·(id%4) over a solid (id%200, id·7%256, id·13%256) fill."""
+    """16×8 P6 PPM with a white 2-row band at row 2·(id%4) over a
+    per-doc solid fill (id%200, id·7%256, id·13%256).
+
+    The band POSITION is the visual structure; the fill is per-doc
+    noise. Because fill gray < 255 always holds, an average-hash's
+    threshold keeps exactly the band cells — so images with the same
+    band position are visual near-duplicates with DIFFERENT bytes,
+    the ground truth the perceptual-hash query verifies against."""
     w, h = 16, 8
     r, g, b = doc_id % 200, (doc_id * 7) % 256, (doc_id * 13) % 256
     band = 2 * (doc_id % 4)
@@ -511,18 +482,6 @@ def encode_banded_ppm(doc_id: int) -> bytes:
             else bytes((r, g, b)) * w
         )
     return f"P6\n{w} {h}\n255\n".encode("ascii") + bytes(px)
-
-
-def attach_banded_ppm(df: DataFrame) -> DataFrame:
-    """Rows → 16×8 P6 PPM media rows with a white 2-row band at row
-    2·(id%4) over a per-doc solid fill (id%200, id·7%256, id·13%256).
-
-    The band POSITION is the visual structure; the fill is per-doc
-    noise. Because fill gray < 255 always holds, an average-hash's
-    threshold keeps exactly the band cells — so images with the same
-    band position are visual near-duplicates with DIFFERENT bytes,
-    the ground truth the perceptual-hash query verifies against."""
-    return _synth_media(df, encode_banded_ppm, PPM_MIME)
 
 
 def ahash_ppm(df: DataFrame, encode_row=None) -> DataFrame:
@@ -588,11 +547,6 @@ def encode_wav_tone(doc_id: int) -> bytes:
     return _pcm16_wav(
         [int(round(amp * math.cos(2 * math.pi * k * i / n))) for i in range(n)]
     )
-
-
-def attach_tone_wav(df: DataFrame) -> DataFrame:
-    """Rows → decodable pure-tone WAV media rows (MEDIA_SCHEMA)."""
-    return _synth_media(df, encode_wav_tone, WAV_MIME)
 
 
 def decode_spectral(df: DataFrame, encode_row=None) -> DataFrame:
@@ -671,10 +625,15 @@ def validate_media(df: DataFrame, encode_row=None) -> DataFrame:
     return _media_map(df, _row, QUARANTINE_SCHEMA, WAV_MIME, encode_row)
 
 
-def _corrupt_wav_raw(doc_id: int, raw: bytes) -> bytes:
-    """corrupt_tone_wavs' per-payload rule: doc_id % 4 → 0 intact,
-    1 magic-flip, 2 data halved, 3 truncated to 6 bytes."""
-    k = int(doc_id) % 4
+def encode_corrupt_tone(doc_id: int) -> bytes:
+    """q244's per-row rule: encode_wav_tone's clip, corrupted by
+    doc_id % 4 — 0 intact, 1 magic bytes replaced (header-dead), 2 data
+    chunk cut in half (payload-dead), 3 truncated to 6 bytes
+    (header-dead). The classes map 1:1 onto validate_media statuses,
+    giving q244 its closed-form oracle. The canonical stdlib WAV header
+    is 44 bytes, so [:44 + rest//2] keeps the header intact."""
+    raw = encode_wav_tone(doc_id)
+    k = doc_id % 4
     if k == 1:
         return b"JUNK" + raw[4:]
     if k == 2:
@@ -682,37 +641,6 @@ def _corrupt_wav_raw(doc_id: int, raw: bytes) -> bytes:
     if k == 3:
         return raw[:6]
     return raw
-
-
-def encode_corrupt_tone(doc_id: int) -> bytes:
-    """q244's per-row rule: encode_wav_tone's clip corrupted by
-    corrupt_tone_wavs' rule."""
-    return _corrupt_wav_raw(doc_id, encode_wav_tone(doc_id))
-
-
-def corrupt_tone_wavs(df: DataFrame) -> DataFrame:
-    """Deterministic corruption injector for quarantine tests/queries:
-    by doc_id % 4 — 0 intact, 1 magic bytes replaced (header-dead),
-    2 data chunk cut in half (payload-dead), 3 truncated to 6 bytes
-    (header-dead). The classes map 1:1 onto validate_media statuses,
-    giving q244 its closed-form oracle. The canonical stdlib WAV
-    header is 44 bytes, so [:44 + rest//2] keeps the header intact.
-    Each row's meta is rebuilt from its corrupted payload."""
-
-    def _corrupt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [
-                _corrupt_wav_raw(int(doc_id), bytes(payload))
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            out["meta"] = [
-                _media_meta(payload, meta["mime"])
-                for payload, meta in zip(out["payload"], pdf["meta"])
-            ]
-            yield out
-
-    return df.mapInPandas(_corrupt, MEDIA_SCHEMA)
 
 
 THUMBNAIL_SCHEMA = T.StructType(

@@ -1,12 +1,13 @@
-"""Z-order (Morton) clustering for multi-dimensional data skipping.
+"""Z-order (Morton) codes for multi-dimensional data skipping.
 
 A parquet lake prunes files by min/max column stats. Sorting by one
 column gives perfect pruning on it and none on any other; interleaving
 the bits of two dimensions into a single *z-value* and range-sorting by
 it bounds every file's extent in BOTH dimensions, so predicates on
 either column (or both) skip most files. This is the layout trick behind
-Delta/Iceberg `OPTIMIZE ZORDER BY` — here as a plain column expression
-plus a range-repartition + local sort, nothing table-format specific.
+Delta/Iceberg `OPTIMIZE ZORDER BY`; the z-value here is a plain column
+expression, nothing table-format specific (q96 reports its buckets'
+extents).
 
 The Spark expression and the DuckDB SQL fragment are generated from the
 same bit loop, so oracles can reproduce z-values bit-for-bit.
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -44,20 +45,3 @@ def zvalue_sql(x: str, y: str, bits: int = 8) -> str:
         parts.append(f"(((({x}) >> {i}) & 1) << {2 * i})")
         parts.append(f"(((({y}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(parts) + ")"
-
-
-def cluster_by_zorder(
-    df: DataFrame, x: Column, y: Column, bits: int = 8, partitions: int | None = None
-) -> DataFrame:
-    """Lay ``df`` out in z-order: range-partition on the z-value (each
-    output file owns a contiguous z-range → bounded x AND y extents),
-    then sort within partitions so row groups inherit the locality.
-    Write the result with ``.write.parquet`` to materialize the layout."""
-    z = zvalue(x, y, bits).alias("__z")
-    out = df.withColumn("__z", z)
-    out = (
-        out.repartitionByRange(partitions, "__z")
-        if partitions
-        else out.repartitionByRange("__z")
-    )
-    return out.sortWithinPartitions("__z").drop("__z")

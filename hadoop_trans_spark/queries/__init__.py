@@ -48,9 +48,11 @@ _SWEEP_PRIORITY = [
     "q33_migrate_fidelity",
     "q34_compact_fidelity",
     "q245_schema_drift",
+    "q86_incremental_dedup",
     "q105_kmeans_clusters",
     "q249_semantic_dedup",
     "q48_media_features",
+    "q70_corpus_curation",
     "q84_frame_sample",
     "q140_triangle_count",
     "q244_media_quarantine",
@@ -90,8 +92,6 @@ _SWEEP_PRIORITY = [
     "q195_benford_digits",
     "q196_daily_acf",
     "q197_k_anonymity",
-    "q199_ab_ztest",
-    "q201_rake_keywords",
 ]
 
 

@@ -12,6 +12,7 @@ from ..catalog import table
 from ..operators.minhash import (
     band_signatures,
     candidate_pairs,
+    candidate_pairs_between,
     jaccard_verify,
     shingle_array,
 )
@@ -25,10 +26,10 @@ from .base import query
 # streaming late-batch staging); q40/q64/q68 reuse the verified MinHash
 # pairs, q41/q63 the SimHash fingerprints. The materialized tables are
 # tiny (pairs: O(dups) rows; fingerprints: 16 B/doc) while recomputing
-# them re-runs the md5-dominated shingle pipeline — the same "checkpoint
-# a multi-consumer stage once" rule near_duplicates applies internally,
-# lifted across queries. Each timed draw (bench.draw) starts from an
-# empty memo, so a query's measured time includes every stage it reads.
+# them re-runs the md5-dominated shingle pipeline — the "checkpoint a
+# multi-consumer stage once" rule (operators/stage.py), lifted across
+# queries. Each timed draw (bench.draw) starts from an empty memo, so a
+# query's measured time includes every stage it reads.
 
 
 def _memo_stage(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
@@ -79,9 +80,9 @@ def bandsig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs (id_a, id_b, jaccard) on `documents` with
     the declared parameters (k=3 shingles, 8 hashes, 4 bands, J >= 0.5).
-    Composed from the shared materialized stages (grams3_table,
-    bandsig_table) — same pipeline as operators.minhash.near_duplicates,
-    with the two expensive stages lifted across the query family."""
+    Composed from the operators.minhash stages over the shared
+    materialized stages (grams3_table, bandsig_table): the self-join
+    `candidate_pairs`, then `jaccard_verify`."""
     return _memo_stage(
         spark,
         sf_dir,
@@ -600,24 +601,14 @@ def q86_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the existing corpus (even ids) — per-batch cost scales with
     the batch because the corpus side is a persisted band-signature
     index. Output: each contaminated new doc with its best corpus match
-    (operators.minhash.near_duplicates_between)."""
-    # Same shape as operators.minhash.near_duplicates_between, with both
-    # sides filtering the SHARED materialized shingle + band-signature
+    (operators.minhash.candidate_pairs_between, then jaccard_verify)."""
+    # Both sides filter the SHARED materialized shingle + band-signature
     # stages (band signatures are per-doc, so the corpus/new split is a
     # filter, not a recompute — zero md5 work beyond what q40 already
     # paid this session).
     bs = bandsig_table(spark, sf_dir)
-    cand = (
-        bs.where(F.col("id") % 2 == 0)
-        .select("band", "band_sig", F.col("id").alias("id_a"))
-        .join(
-            bs.where(F.col("id") % 2 == 1).select(
-                "band", "band_sig", F.col("id").alias("id_b")
-            ),
-            ["band", "band_sig"],
-        )
-        .select("id_a", "id_b")
-        .distinct()
+    cand = candidate_pairs_between(
+        bs.where(F.col("id") % 2 == 0), bs.where(F.col("id") % 2 == 1)
     )
     pairs = jaccard_verify(grams3_table(spark, sf_dir), cand, 0.5)
     w = W.partitionBy("id_b").orderBy(F.col("jaccard").desc(), F.col("id_a"))
@@ -677,7 +668,8 @@ def q70_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually runs, composed from the engine's own operators:
 
       1. near-dup CLUSTER removal (MinHash/LSH pairs → connected
-         components → drop non-canonical members, operators.components);
+         components → drop non-canonical members,
+         operators.components.dedup_keep_cluster_canonical);
       2. exact dedup, keep-lowest-id per normalized-content hash;
       3. quality filter (length >= 200 chars, punct ratio <= 0.05,
          stopword ratio >= 0.05 — the textstats operators);
@@ -686,15 +678,12 @@ def q70_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: step 1 is metadata joins (the corpus never reshuffles);
     step 2 is one shuffle on the 16-byte content key; step 3 is a
     codegen'd projection-filter; step 4 a map-side-combined aggregate."""
-    from ..operators.components import connected_components
+    from ..operators.components import dedup_keep_cluster_canonical
     from ..operators.textstats import punct_ratio, stopword_ratio
 
-    d = table(spark, sf_dir, "documents")
-    comp = connected_components(minhash_pairs(spark, sf_dir))
-    losers = comp.where(F.col("id") != F.col("comp")).select(
-        F.col("id").alias("doc_id")
+    kept0 = dedup_keep_cluster_canonical(
+        table(spark, sf_dir, "documents"), minhash_pairs(spark, sf_dir)
     )
-    kept0 = d.join(losers, "doc_id", "left_anti")
     exact = (
         kept0.withColumn("ck", F.md5(normalize_text(F.col("text"))))
         .withColumn(

@@ -194,8 +194,8 @@ def q84_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q121_raw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END media decode (no stub in the path): documents become
-    raw-RGB payloads (operators/multimodal.py attach_raw_rgb — header +
-    arithmetic pixels), decode_media parses the header and extracts
+    raw-RGB payloads (operators/multimodal.py encode_raw_rgb_row — header
+    + arithmetic pixels), decode_media parses the header and extracts
     per-channel means with numpy inside Arrow-batched mapInPandas, and
     the oracle re-derives the same statistics from the pixel rule. This
     is the real decode wiring a production pipeline swaps PIL/libav
@@ -441,19 +441,18 @@ def q229_spectral_dominant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q244_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt-blob triage — the validate-then-decode production shape
     for a 100 TB media corpus (one truncated upload must cost one
-    quarantined row, not the job). Pipeline: synthesize tone WAVs →
+    quarantined row, not the job). Pipeline: synthesize tone WAVs and
     deterministically corrupt a subset (operators.multimodal
-    .corrupt_tone_wavs) → validate_media structurally classifies every
+    .encode_corrupt_tone) → validate_media structurally classifies every
     payload (RIFF grammar parse + declared-vs-actual byte accounting,
     pure map) → aggregate per status. The decode operators themselves
     dead-letter whatever slips past triage (same rule as NULL
     payloads), so the quarantine counts reconcile the pipeline.
 
-    The three stages are pure per-row Python, so they run in one
-    mapInPandas: validate_media with ``encode_row=encode_corrupt_tone``
-    (synthesize + corrupt, the rules attach_tone_wav and
-    corrupt_tone_wavs apply) — one JVM↔Python crossing instead of
-    three, and the payload bytes never reach the JVM."""
+    Synthesis, corruption and triage are pure per-row Python, so they
+    run in one mapInPandas: validate_media with
+    ``encode_row=encode_corrupt_tone`` — one JVM↔Python crossing, and
+    the payload bytes never reach the JVM."""
     from ..operators.multimodal import encode_corrupt_tone, validate_media
 
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") % 5 == 0)

@@ -174,9 +174,8 @@ def q96_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events on (user bucket, time-of-day bucket) and report each z-range's
     extent in both dimensions. Every bucket's x AND y spans are bounded
     (≤16 of 256 values at 8 bits ≫ 8-bit bucket shift) — the property
-    that makes min/max file stats prune on either predicate after a
-    z-order layout; `cluster_by_zorder` materializes it (asserted in
-    tests/test_plans.py on real partitions)."""
+    that makes min/max file stats prune on either predicate once a
+    table is range-partitioned on the z-value."""
     e = table(spark, sf_dir, "events").select(
         (F.col("user_id") % 256).cast("int").alias("x"),
         F.floor(

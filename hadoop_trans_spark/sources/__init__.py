@@ -11,13 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(path)
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType | str, header: bool = True) -> DataFrame:
     """CSV ingest with an explicit schema (no inferSchema scan).
 

@@ -1,1 +1,2 @@
-"""Test-support utilities (oracle differential harness)."""
+"""Test-support utilities (oracle differential harness, synthetic media
+tables)."""

@@ -135,13 +135,16 @@ def test_ahash_brightness_invariant_band_sensitive(spark):
     """Perceptual contract: images differing only in fill brightness
     hash equal; images with a different band position hash different."""
     from hadoop_trans_spark.operators.multimodal import (
+        PPM_MIME,
         ahash_ppm,
-        attach_banded_ppm,
+        encode_banded_ppm,
     )
+    from hadoop_trans_spark.testing.media import synth_media
 
     # doc_ids 4 and 8: band = 0 for both, different fills; 5: band = 1.
     df = spark.createDataFrame([(4,), (8,), (5,)], "doc_id long")
-    rows = {r["doc_id"]: r for r in ahash_ppm(attach_banded_ppm(df)).collect()}
+    media = synth_media(df, encode_banded_ppm, PPM_MIME)
+    rows = {r["doc_id"]: r for r in ahash_ppm(media).collect()}
     assert rows[4]["ahash"] == rows[8]["ahash"]
     assert rows[4]["payload_md5"] != rows[8]["payload_md5"]
     assert rows[4]["ahash"] != rows[5]["ahash"]

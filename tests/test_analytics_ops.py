@@ -243,10 +243,11 @@ def test_wav_decode_matches_python_wave_model(spark):
     import wave as wave_mod
 
     from hadoop_trans_spark.operators.multimodal import (
-        attach_wav,
+        WAV_MIME,
         decode_wav_features,
         encode_wav_square,
     )
+    from hadoop_trans_spark.testing.media import synth_media
 
     ids = [0, 3, 17, 44]
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
@@ -255,7 +256,9 @@ def test_wav_decode_matches_python_wave_model(spark):
             r["sample_rate"], r["n_frames"], r["duration_us"],
             r["peak"], r["rms"], r["n_zero_cross"],
         )
-        for r in decode_wav_features(attach_wav(df)).collect()
+        for r in decode_wav_features(
+            synth_media(df, encode_wav_square, WAV_MIME)
+        ).collect()
     }
     for i in ids:
         with wave_mod.open(io.BytesIO(encode_wav_square(i))) as w:

@@ -75,24 +75,43 @@ def test_kmeans_invariant_under_repartition(spark, smoke_dir):
     }
     assert a1 == a2
 
+def _minhash_stages(docs, k, n_hashes, bands):
+    """(grams, band signatures) of a (doc_id, text) frame — the stages
+    grams3_table and bandsig_table build for the q40 family."""
+    from hadoop_trans_spark.operators.minhash import (
+        band_signatures,
+        shingle_array,
+    )
+
+    grams = docs.select(
+        F.col("doc_id").alias("id"), shingle_array("text", k).alias("grams")
+    )
+    return grams, band_signatures(grams, n_hashes, bands)
+
+
 def test_incremental_dedup_empty_new_batch(spark, smoke_dir):
-    """near_duplicates_between with an EMPTY new batch must return zero
+    """q86's corpus×batch join with an EMPTY new batch must return zero
     pairs without erroring — the q86 odd/even split happens to make both
     sides non-empty on the fixture, so fixture greenness alone never
     exercises the first batch of a fresh ingestion (or a quiet one)."""
-    from hadoop_trans_spark.operators.minhash import near_duplicates_between
+    from hadoop_trans_spark.operators.minhash import (
+        candidate_pairs_between,
+        jaccard_verify,
+    )
+
+    def between(corpus, new):
+        gc, bc = _minhash_stages(corpus, 3, 8, 4)
+        gn, bn = _minhash_stages(new, 3, 8, 4)
+        cand = candidate_pairs_between(bc, bn)
+        return jaccard_verify(gc.unionByName(gn), cand, 0.5)
 
     d = table(spark, smoke_dir, "documents")
     empty = d.where(F.lit(False))
-    got = near_duplicates_between(
-        d, empty, shingle_k=3, n_hashes=8, bands=4, threshold=0.5
-    )
+    got = between(d, empty)
     assert got.count() == 0
     assert {"id_a", "id_b", "jaccard"} <= set(got.columns)
     # and the mirror case: empty corpus, real batch
-    got2 = near_duplicates_between(
-        empty, d.limit(20), shingle_k=3, n_hashes=8, bands=4, threshold=0.5
-    )
+    got2 = between(empty, d.limit(20))
     assert got2.count() == 0
 
 def test_session_concurrency_two_phase_equals_global(spark, smoke_dir):
@@ -1093,13 +1112,17 @@ def test_asof_join_matches_pandas_merge_asof(spark, data):
 @given(data=st.data())
 @settings(max_examples=8, deadline=None)
 def test_minhash_near_duplicates_sound_and_finds_exact_dups(spark, data):
-    """near_duplicates soundness on random corpora: every reported pair's
+    """MinHash pair soundness on random corpora (minhash_pairs' stages:
+    self-join candidates, then exact verification): every reported pair's
     jaccard must equal the exact shingle-set Jaccard of the Python model
     (split-on-space word k-grams, short docs collapsing to one shingle)
     and clear the threshold; and the one pair LSH can never miss — two
     IDENTICAL docs (equal signatures ⇒ equal band keys ⇒ guaranteed
     candidate) — must always be reported with jaccard 1."""
-    from hadoop_trans_spark.operators.minhash import near_duplicates
+    from hadoop_trans_spark.operators.minhash import (
+        candidate_pairs,
+        jaccard_verify,
+    )
 
     K, THRESH = 3, 0.3
     word = st.sampled_from(["a", "b", "c", "d"])
@@ -1121,9 +1144,8 @@ def test_minhash_near_duplicates_sound_and_finds_exact_dups(spark, data):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = near_duplicates(
-        df, shingle_k=K, n_hashes=8, bands=4, threshold=THRESH
-    ).collect()
+    grams, bands = _minhash_stages(df, K, 8, 4)
+    got = jaccard_verify(grams, candidate_pairs(bands), THRESH).collect()
 
     reported = {}
     for r in got:

@@ -20,13 +20,12 @@ from hadoop_trans_spark.operators.multimodal import (
     RAW_RGB_MIME,
     WAV_MIME,
     ahash_ppm,
-    attach_tone_wav,
-    corrupt_tone_wavs,
     decode_media,
     decode_ppm_features,
     decode_spectral,
     decode_wav_features,
     encode_banded_ppm,
+    encode_corrupt_tone,
     encode_ppm,
     encode_raw_rgb_row,
     encode_wav_square,
@@ -34,6 +33,7 @@ from hadoop_trans_spark.operators.multimodal import (
     resize_ppm_thumbnail,
     validate_media,
 )
+from hadoop_trans_spark.testing.media import synth_media
 
 
 def _media(spark, rows):
@@ -98,10 +98,11 @@ def test_edge_clips_triage_as_the_audio_decoders_read_them(spark):
 
 
 def test_corrupted_clips_carry_their_own_meta(spark):
-    """corrupt_tone_wavs changes payload bytes, so each row's meta must
-    describe the corrupted payload, not the intact clip it came from."""
+    """q244's corruption rule changes payload bytes, so each row's meta
+    must describe the corrupted payload, not the intact clip it came
+    from."""
     docs = spark.range(8).withColumnRenamed("id", "doc_id")
-    rows = corrupt_tone_wavs(attach_tone_wav(docs)).collect()
+    rows = synth_media(docs, encode_corrupt_tone, WAV_MIME).collect()
     assert len(rows) == 8
     for r in rows:
         payload = bytes(r.payload)

@@ -86,12 +86,26 @@ def test_signlsh_band_join_is_equi_not_cartesian(spark, smoke_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_minhash_pipeline_no_python_no_cartesian(spark, smoke_dir):
-    from hadoop_trans_spark.catalog import table
-    from hadoop_trans_spark.operators.minhash import near_duplicates
+@pytest.fixture
+def unstaged(monkeypatch):
+    """Plan a MinHash-family query whole: its memo stages are built
+    without the lineage cut, so the plan shows the shingle, signature,
+    band-join and verification stages instead of checkpoint scans. The
+    memo is emptied before and after, so no unstaged handle outlives
+    the test."""
+    from hadoop_trans_spark.operators.stage import clear_stage_memo
+    from hadoop_trans_spark.queries import dedup
 
-    d = table(spark, smoke_dir, "documents")
-    plan = explain_formatted(near_duplicates(d, n_hashes=8, bands=4))
+    monkeypatch.setattr(dedup, "materialize_stage", lambda df: df)
+    clear_stage_memo()
+    yield lambda spark, sf_dir, name: explain_formatted(
+        QUERIES[name](spark, sf_dir)
+    )
+    clear_stage_memo()
+
+
+def test_minhash_pipeline_no_python_no_cartesian(spark, smoke_dir, unstaged):
+    plan = unstaged(spark, smoke_dir, "q40_minhash_lsh_neardup")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -142,20 +156,11 @@ def test_quantize_is_shuffle_free_projection(spark, smoke_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_incremental_dedup_band_join_is_equi(spark, smoke_dir):
+def test_incremental_dedup_band_join_is_equi(spark, smoke_dir, unstaged):
     """q86's corpus×new candidate stage must be the (band, band_sig)
     equi-join — the persisted-index shape that keeps per-batch cost
     proportional to the batch."""
-    from hadoop_trans_spark.operators.minhash import near_duplicates_between
-
-    d = table(spark, smoke_dir, "documents")
-    pairs = near_duplicates_between(
-        d.where(F.col("doc_id") % 2 == 0),
-        d.where(F.col("doc_id") % 2 == 1),
-        n_hashes=8,
-        bands=4,
-    )
-    plan = explain_formatted(pairs)
+    plan = unstaged(spark, smoke_dir, "q86_incremental_dedup")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -224,44 +229,6 @@ def test_binned_range_join_matches_naive_and_guards_empty(spark, smoke_dir):
         li, empty, "l_shipdate", "wstart", "wend", bin_days=16
     )
     assert degenerate.count() == 0
-
-
-def test_zorder_layout_bounds_both_dimensions(spark, smoke_dir):
-    """After cluster_by_zorder, each output partition's extent must be
-    bounded in BOTH dimensions (that is what makes min/max file stats
-    prune on either predicate); a time-sorted layout bounds neither."""
-    from hadoop_trans_spark.operators.zorder import cluster_by_zorder
-
-    # event_id (not user_id) for x: the smoke fixture has too few users
-    # to span 8 bits, which would leave x trivially bounded in ANY layout
-    e = table(spark, smoke_dir, "events").select(
-        (F.col("event_id") % 256).cast("int").alias("x"),
-        F.floor((F.hour("ts") * 60 + F.minute("ts")) / 6).cast("int").alias("y"),
-        "ts",
-    )
-
-    def mean_spans(df):
-        spans = (
-            df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                (F.max("x") - F.min("x")).alias("xs"),
-                (F.max("y") - F.min("y")).alias("ys"),
-            )
-            .agg(F.avg("xs").alias("xs"), F.avg("ys").alias("ys"))
-            .first()
-        )
-        return spans["xs"], spans["ys"]
-
-    zx, zy = mean_spans(
-        cluster_by_zorder(e, F.col("x"), F.col("y"), partitions=32)
-    )
-    # single-dimension layouts: each bounds its own sort key perfectly
-    # and leaves the OTHER dimension at nearly full extent
-    _, x_sorted_y = mean_spans(e.repartitionByRange(32, "x"))
-    y_sorted_x, _ = mean_spans(e.repartitionByRange(32, "y"))
-    assert zx < 0.5 * y_sorted_x, (zx, y_sorted_x)
-    assert zy < 0.5 * x_sorted_y, (zy, x_sorted_y)
 
 
 def test_weighted_sample_plans_take_ordered(spark, smoke_dir):

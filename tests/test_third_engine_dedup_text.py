@@ -116,7 +116,7 @@ def _minhash_model(smoke_dir: str):
 
 def _verified_pairs(smoke_dir: str, threshold: float = 0.5, max_bucket: int = 1000):
     """Self-join pairs (id_a < id_b), bucket-capped, exact-Jaccard
-    verified — operators.minhash.near_duplicates' contract."""
+    verified — the contract of queries/dedup.minhash_pairs."""
     grams, buckets = _minhash_model(smoke_dir)
     gsets = {i: set(g) for i, g in grams.items()}
     cand = set()

@@ -297,13 +297,14 @@ def test_wav_decoder_dead_letters_corrupt_payloads(spark, smoke_dir):
 
     from hadoop_trans_spark.catalog import table
     from hadoop_trans_spark.operators.multimodal import (
-        attach_tone_wav,
-        corrupt_tone_wavs,
+        WAV_MIME,
         decode_wav_features,
+        encode_corrupt_tone,
     )
+    from hadoop_trans_spark.testing.media import synth_media
 
     docs = table(spark, smoke_dir, "documents").where(F.col("doc_id") % 5 == 0)
-    media = corrupt_tone_wavs(attach_tone_wav(docs))
+    media = synth_media(docs, encode_corrupt_tone, WAV_MIME)
     decoded = decode_wav_features(media).select("doc_id").collect()
     got = sorted(r.doc_id for r in decoded)
     want = sorted(

@@ -43,7 +43,7 @@ def _c2(col):
 
 
 def q40_minhash(spark, d):
-    """LSH band-signature equi-join (operators/minhash.py:136)."""
+    """LSH band-signature equi-join (operators/minhash.candidate_pairs)."""
     from hadoop_trans_spark.operators.minhash import candidate_pairs
     from hadoop_trans_spark.queries.dedup import bandsig_table
 

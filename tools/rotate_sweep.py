@@ -69,13 +69,12 @@ RESHAPED: dict[str, int] = {
     # checks folded into one fact scan; q123 pagerank loop invariants
     # hoisted + node table derived from the outdeg checkpoint;
     # q68/q85/q70 connected_components convergence check restructured;
-    # q244 triage fused into one mapInPandas (q244 re-pinned at round
-    # 16 below). Latest driver rows predate these.
+    # q244 triage fused into one mapInPandas (q244 and q70 re-pinned at
+    # round 16 below). Latest driver rows predate these.
     "q205": 14,
     "q123": 14,
     "q68": 14,
     "q85": 14,
-    "q70": 14,
     # r14 pin-rule misses flagged by VERDICT r14 (item 4): q64 consumes
     # the r14-changed connected_components (operators/components.py) but
     # was left outside the r14 window; q202 exercises the r14 staging/
@@ -134,6 +133,12 @@ RESHAPED: dict[str, int] = {
     "q178": 16,
     "q200": 16,
     "q204": 16,
+    # round-16 one operator per MinHash join: q86's corpus×batch band
+    # join is operators.minhash.candidate_pairs_between, and q70 drops
+    # non-canonical cluster members through
+    # operators.components.dedup_keep_cluster_canonical.
+    "q70": 16,
+    "q86": 16,
 }
 
 
