@@ -43,24 +43,42 @@ _SWEEP_PRIORITY = [
     # Generated by tools/rotate_sweep.py — do not hand-edit;
     # rerun the tool at the start of each round and commit.
     "q178_market_basket",
+    "q183_stream_windowed_topk",
+    "q189_stream_complete_totals",
     "q200_degree_distribution",
     "q47_binary_payload",
     "q33_migrate_fidelity",
     "q34_compact_fidelity",
     "q245_schema_drift",
+    "q54_stream_tumbling",
+    "q55_stream_sliding",
+    "q56_stream_session",
+    "q57_stream_dedup",
+    "q58_stream_migrate",
+    "q59_stream_late_drop",
+    "q60_stream_custom_state",
+    "q79_stream_stream_join",
     "q86_incremental_dedup",
+    "q88_stream_static_join",
+    "q89_stream_upsert_sink",
     "q105_kmeans_clusters",
     "q249_semantic_dedup",
+    "q250_stream_restart_tumbling",
     "q48_media_features",
     "q70_corpus_curation",
     "q84_frame_sample",
+    "q132_stream_approx_distinct",
     "q140_triangle_count",
+    "q141_stream_chained_rollup",
     "q244_media_quarantine",
+    "q254_stream_restart_session",
     "q121_raw_decode",
     "q147_recursive_bfs",
+    "q148_stream_stream_left_join",
     "q151_wav_decode",
     "q152_ppm_decode",
     "q163_ahash_neardup",
+    "q202_stream_stream_full_outer",
     "q204_adamic_adar",
     "q229_spectral_dominant",
     "q246_footer_quarantine",
@@ -74,24 +92,6 @@ _SWEEP_PRIORITY = [
     "q174_boilerplate_coverage",
     "q175_bigram_lm_interp",
     "q176_linear_interpolation",
-    "q177_cusum_changepoint",
-    "q179_event_pattern_match",
-    "q180_range_clustered_layout",
-    "q183_stream_windowed_topk",
-    "q184_forget_users",
-    "q185_share_of_total",
-    "q186_late_shipment_orders",
-    "q187_rolling_hll_distinct",
-    "q188_zipf_slope",
-    "q189_stream_complete_totals",
-    "q190_snapshot_time_travel",
-    "q191_cdc_apply",
-    "q192_hll_intersection",
-    "q193_top_supplier",
-    "q194_forecast_revenue",
-    "q195_benford_digits",
-    "q196_daily_acf",
-    "q197_k_anonymity",
 ]
 
 

@@ -18,10 +18,9 @@ from ..streaming import (
     sliding_counts,
     stream_dedup,
     stream_migrate,
+    restart_harness,
     stream_static_enrich,
     stream_stream_join,
-    stream_stream_left_join,
-    stream_stream_full_outer_join,
     stream_upsert_sink,
     tumbling_counts,
     user_streaks,
@@ -35,10 +34,9 @@ from .base import (
     query,
 )
 
-
-@query(
-    "q54_stream_tumbling",
-    f"""
+# Hourly tumbling windows finalized by the final watermark: q54's oracle,
+# and q250's (the same job across a stop/resume).
+_TUMBLING_ORACLE = f"""
     WITH wm AS (SELECT max(ts) - INTERVAL '10 minutes' AS w FROM events
                 WHERE {O_TS_DOMAIN})
     SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS window_start,
@@ -50,8 +48,40 @@ from .base import (
       AND {O_TS_DOMAIN}
     GROUP BY 1, 2
     ORDER BY 1, 2
-    """,
-)
+    """
+
+# 30-minute-gap sessions finalized by the final watermark: q56's oracle,
+# and q254's (the same job across a stop/resume).
+_SESSION_ORACLE = f"""
+    WITH o AS (
+        SELECT user_id, ts,
+               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
+        FROM events WHERE {O_TS_DOMAIN}
+    ), f AS (
+        SELECT user_id, ts,
+               CASE WHEN prev IS NULL
+                         OR ts - prev >= INTERVAL '30 minutes'
+                    THEN 1 ELSE 0 END AS news
+        FROM o
+    ), g AS (
+        SELECT user_id, ts,
+               sum(news) OVER (PARTITION BY user_id ORDER BY ts
+                               ROWS UNBOUNDED PRECEDING) AS sid
+        FROM f
+    ), wm AS (SELECT max(ts) - INTERVAL '10 minutes' AS w FROM events
+                WHERE {O_TS_DOMAIN})
+    SELECT user_id,
+           epoch_us(min(ts)) AS session_start,
+           epoch_us(max(ts) + INTERVAL '30 minutes') AS session_end,
+           count(*) AS n_events
+    FROM g, wm
+    GROUP BY user_id, sid, w
+    HAVING max(ts) + INTERVAL '30 minutes' <= w
+    ORDER BY user_id, session_start
+    """
+
+
+@query("q54_stream_tumbling", _TUMBLING_ORACLE)
 def q54(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E37 tumbling window: hourly per-type counts + exact sums.
 
@@ -98,36 +128,7 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("window_start", "event_type")
 
 
-@query(
-    "q56_stream_session",
-    f"""
-    WITH o AS (
-        SELECT user_id, ts,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-        FROM events WHERE {O_TS_DOMAIN}
-    ), f AS (
-        SELECT user_id, ts,
-               CASE WHEN prev IS NULL
-                         OR ts - prev >= INTERVAL '30 minutes'
-                    THEN 1 ELSE 0 END AS news
-        FROM o
-    ), g AS (
-        SELECT user_id, ts,
-               sum(news) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sid
-        FROM f
-    ), wm AS (SELECT max(ts) - INTERVAL '10 minutes' AS w FROM events
-                WHERE {O_TS_DOMAIN})
-    SELECT user_id,
-           epoch_us(min(ts)) AS session_start,
-           epoch_us(max(ts) + INTERVAL '30 minutes') AS session_end,
-           count(*) AS n_events
-    FROM g, wm
-    GROUP BY user_id, sid, w
-    HAVING max(ts) + INTERVAL '30 minutes' <= w
-    ORDER BY user_id, session_start
-    """,
-)
+@query("q56_stream_session", _SESSION_ORACLE)
 def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E38 session windows: 30-minute-gap sessions per user.
 
@@ -227,7 +228,7 @@ def q60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): per-user longest
     activity streak (runs of events < 10 min apart). Logic Spark's
     built-in windows can't express; oracle is the islands equivalent."""
-    return user_streaks(spark, sf_dir, gap_seconds=600).orderBy("user_id")
+    return user_streaks(spark, sf_dir).orderBy("user_id")
 
 
 @query(
@@ -253,8 +254,10 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides + an event-time range predicate, so Spark bounds the buffered
     join state by watermark + lookback — the oracle is the equivalent
     batch interval join."""
-    out = run_to_memory(stream_stream_join(spark, sf_dir), "append")
-    return out.orderBy("click_id", "view_id")
+    out = run_to_memory(stream_stream_join(spark, sf_dir, "inner"), "append")
+    return out.select(
+        "click_id", "view_id", "user_id", "click_us", "view_us"
+    ).orderBy("click_id", "view_id")
 
 
 @query(
@@ -486,9 +489,7 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-of-stream and correctly absent. State per key is bounded by
     watermark + lookback on both sides; at 100 TB user_id partitions
     both state stores."""
-    out = run_to_memory(
-        stream_stream_left_join(spark, sf_dir), "append"
-    )
+    out = run_to_memory(stream_stream_join(spark, sf_dir, "left_outer"), "append")
     return out.orderBy("click_id", "view_id")
 
 
@@ -606,9 +607,7 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
     — rows newer than their horizon are still unresolved at
     end-of-stream and correctly absent. State on both sides is bounded
     by watermark + lookback; user_id partitions both stores."""
-    out = run_to_memory(
-        stream_stream_full_outer_join(spark, sf_dir), "append"
-    )
+    out = run_to_memory(stream_stream_join(spark, sf_dir, "full_outer"), "append")
     return out.orderBy("click_id", "view_id")
 
 
@@ -620,19 +619,7 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint round-trip emitted exactly the windows a never-stopped
     # run emits — no losses (state forgotten) and no duplicates (state
     # replayed).
-    oracle=f"""
-    WITH wm AS (SELECT max(ts) - INTERVAL '10 minutes' AS w FROM events
-                WHERE {O_TS_DOMAIN})
-    SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS window_start,
-           event_type,
-           count(*) AS n_events,
-           {o_dsum('value')} AS sum_value
-    FROM events, wm
-    WHERE time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' <= w
-      AND {O_TS_DOMAIN}
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
+    oracle=_TUMBLING_ORACLE,
 )
 def q250_stream_restart_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store restart THROUGH the driver's hash gate (r13; the full
@@ -651,59 +638,7 @@ def q250_stream_restart_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalized windows back through the query contract and is bounded at
     |windows|x|event_types| rows; a production job writes each
     micro-batch to a sink table instead — nothing crosses the driver."""
-    import os
-    import shutil
-
-    from ..tmputil import staging_dir
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..streaming.jobs import _pinned_state_partitions, tumbling_counts
-
-    work = staging_dir("htspark_restart_")
-    src = os.path.join(sf_dir, "events.parquet")
-    t = pq.read_table(src)
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), f"{work}/events_000.parquet")
-    later = t.slice(half)
-
-    collected: list = []
-
-    def run_phase(ckpt: str) -> None:
-        sdf = tumbling_counts(
-            read_events_stream(spark, work, max_files_per_trigger=1)
-        )
-        with _pinned_state_partitions(spark):
-            q = (
-                sdf.writeStream.foreachBatch(
-                    lambda bdf, _id: collected.extend(bdf.collect())
-                )
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("restart phase did not finish")
-
-    # try/finally over BOTH phases (ADVICE r13): a raising phase, or a
-    # normal run, must not leak the staged input or the state-store
-    # checkpoint dir across repeated bench/driver sweeps.
-    ckpt = staging_dir("htspark_restart_ckpt_")
-    try:
-        run_phase(ckpt)  # phase 1: first half only
-        pq.write_table(later, f"{work}/events_001.parquet")
-        run_phase(ckpt)  # phase 2: resumed from the same checkpoint
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    out = spark.createDataFrame(collected, tumbling_counts(
-        read_events_stream(spark, sf_dir)
-    ).schema)
+    out = _across_restart(spark, sf_dir, tumbling_counts)
     return out.orderBy("window_start", "event_type")
 
 
@@ -716,33 +651,7 @@ def q250_stream_restart_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stop) must survive the checkpoint and MERGE with events that
     # arrive after the resume, or the engine double-emits the two
     # halves as separate sessions.
-    f"""
-    WITH o AS (
-        SELECT user_id, ts,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-        FROM events WHERE {O_TS_DOMAIN}
-    ), f AS (
-        SELECT user_id, ts,
-               CASE WHEN prev IS NULL
-                         OR ts - prev >= INTERVAL '30 minutes'
-                    THEN 1 ELSE 0 END AS news
-        FROM o
-    ), g AS (
-        SELECT user_id, ts,
-               sum(news) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS sid
-        FROM f
-    ), wm AS (SELECT max(ts) - INTERVAL '10 minutes' AS w FROM events
-                WHERE {O_TS_DOMAIN})
-    SELECT user_id,
-           epoch_us(min(ts)) AS session_start,
-           epoch_us(max(ts) + INTERVAL '30 minutes') AS session_end,
-           count(*) AS n_events
-    FROM g, wm
-    GROUP BY user_id, sid, w
-    HAVING max(ts) + INTERVAL '30 minutes' <= w
-    ORDER BY user_id, session_start
-    """,
+    _SESSION_ORACLE,
 )
 def q254_stream_restart_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-window state across a stop/resume (VERDICT r13 item 7 —
@@ -759,53 +668,24 @@ def q254_stream_restart_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     collector's ``bdf.collect()`` is bounded at |finalized sessions|
     and exists to return the result through the query contract; a
     production job writes micro-batches to a sink table."""
-    import os
-    import shutil
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..streaming.jobs import _pinned_state_partitions
-    from ..tmputil import staging_dir
-
-    work = staging_dir("htspark_restart_sess_")
-    src = os.path.join(sf_dir, "events.parquet")
-    t = pq.read_table(src)
-    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
-    half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), f"{work}/events_000.parquet")
-    later = t.slice(half)
-
-    collected: list = []
-
-    def run_phase(ckpt: str) -> None:
-        sdf = session_windows(
-            read_events_stream(spark, work, max_files_per_trigger=1)
-        )
-        with _pinned_state_partitions(spark):
-            q = (
-                sdf.writeStream.foreachBatch(
-                    lambda bdf, _id: collected.extend(bdf.collect())
-                )
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("session restart phase did not finish")
-
-    ckpt = staging_dir("htspark_restart_sess_ckpt_")
-    try:
-        run_phase(ckpt)  # phase 1: first half, open sessions checkpointed
-        pq.write_table(later, f"{work}/events_001.parquet")
-        run_phase(ckpt)  # phase 2: resumed; open sessions must gap-merge
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    out = spark.createDataFrame(collected, session_windows(
-        read_events_stream(spark, sf_dir)
-    ).schema)
+    out = _across_restart(spark, sf_dir, session_windows)
     return out.orderBy("user_id", "session_start")
+
+
+def _across_restart(spark: SparkSession, sf_dir: str, job) -> DataFrame:
+    """``job`` over the events landed as two ts-ordered halves (cut at
+    ``num_rows // 2``): run to completion on the first, stopped, resumed
+    from the same checkpoint once the second lands. Returns the union of
+    both phases' output — what a never-stopped run emits, if the state
+    store round-trips."""
+
+    def build(d: str) -> DataFrame:
+        return job(read_events_stream(spark, d, max_files_per_trigger=1))
+
+    with restart_harness(spark, sf_dir, 2) as run:
+        run.phase(build, "append", 1)  # first half: open state checkpointed
+        run.phase(build, "append", 2)  # resumed after the second half lands
+    rows = [r for phase in run.phases for _, batch in phase for r in batch]
+    return spark.createDataFrame(
+        rows, job(read_events_stream(spark, sf_dir)).schema
+    )

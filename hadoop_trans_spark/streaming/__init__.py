@@ -1,13 +1,16 @@
 """Structured Streaming surface (SURVEY §2B E37–E41).
 
-Batch tables become streams via the file source; every job runs with
-``trigger(availableNow=True)`` so a finite fixture directory produces a
-deterministic final state that a batch DuckDB oracle can reproduce.
+Batch tables become streams via the file source; every job starts in
+``run_stream``, which sets ``trigger(availableNow=True)`` so a finite
+fixture directory produces a deterministic final state that a batch
+DuckDB oracle can reproduce. ``restart_harness`` stops a job and resumes
+it from the same checkpoint (q250, q254, tools/stream_probe.py).
 """
 
 from .jobs import (
     late_data_drop,
     read_events_stream,
+    restart_harness,
     run_to_memory,
     chained_windowed_rollup,
     session_windows,
@@ -16,8 +19,6 @@ from .jobs import (
     stream_migrate,
     stream_static_enrich,
     stream_stream_join,
-    stream_stream_left_join,
-    stream_stream_full_outer_join,
     stream_upsert_sink,
     tumbling_counts,
     user_streaks,
@@ -28,6 +29,7 @@ from .jobs import (
 __all__ = [
     "read_events_stream",
     "run_to_memory",
+    "restart_harness",
     "tumbling_counts",
     "sliding_counts",
     "chained_windowed_rollup",
@@ -36,8 +38,6 @@ __all__ = [
     "stream_migrate",
     "stream_static_enrich",
     "stream_stream_join",
-    "stream_stream_left_join",
-    "stream_stream_full_outer_join",
     "stream_upsert_sink",
     "late_data_drop",
     "user_streaks",

@@ -6,6 +6,11 @@ partitions; ``stream_migrate`` is that loop as a Structured Streaming
 incremental append sink (E41).  The windowed/stateful operators are the
 north-star streaming surface.
 
+Every streaming run starts in ``run_stream`` — the one place that sets
+the availableNow trigger and checkpoint, pins the state partitions and
+bounds the wait; callers build only the sink. Stop/resume runs go
+through ``restart_harness``.
+
 Scale notes (100 TB / 1000-executor design):
 
 * File source discovery is incremental and driver-metadata-only; at scale
@@ -28,10 +33,13 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from pyspark.sql.types import (
     DoubleType,
@@ -111,8 +119,15 @@ def read_events_stream(
     return normalize_event_ts(df)
 
 
+# Every streaming run is bounded: a query still running after this many
+# seconds is stopped and its caller gets a TimeoutError.
+STREAM_TIMEOUT_S = 300
+# Shuffle (= state-store) partitions while a streaming query starts.
+STATE_PARTITIONS = 4
+
+
 @contextlib.contextmanager
-def _pinned_state_partitions(spark: SparkSession, n: int = 4):
+def _pinned_state_partitions(spark: SparkSession):
     """Pin ``spark.sql.shuffle.partitions`` low while a streaming query
     starts: each stateful operator materializes one state store per
     shuffle partition per micro-batch — pure overhead at fixture scale
@@ -122,43 +137,54 @@ def _pinned_state_partitions(spark: SparkSession, n: int = 4):
     save/restore is race-free."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def run_to_memory(
-    sdf: DataFrame, output_mode: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_stream(
+    spark: SparkSession, writer: DataStreamWriter, checkpoint: str
+) -> None:
+    """The one start site of every streaming run in the package.
+
+    ``writer`` is built by the caller, sink and output mode included
+    (memory, ``foreachBatch`` or a parquet path). This sets
+    ``trigger(availableNow=True)`` — process every currently-available
+    file, then stop — and the checkpoint, starts the query under the
+    state-partition pin, and waits for it. A query that fails re-raises
+    from ``awaitTermination``; one still running after
+    ``STREAM_TIMEOUT_S`` is stopped and raises TimeoutError, so no
+    caller ever reads a half-written sink and no query is left running.
+    """
+    with _pinned_state_partitions(spark):
+        query = (
+            writer.trigger(availableNow=True)
+            .option("checkpointLocation", checkpoint)
+            .start()
+        )
+        if not query.awaitTermination(STREAM_TIMEOUT_S):
+            # Never return a partially-populated sink: stop and fail loudly.
+            query.stop()
+            raise TimeoutError(
+                f"streaming query {query.name or query.id} did not finish "
+                f"in {STREAM_TIMEOUT_S}s"
+            )
+
+
+def run_to_memory(sdf: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink.
 
     ``availableNow`` processes every currently-available file then stops,
     so the returned (batch) DataFrame is the deterministic final state.
-
-    The state-partition count is pinned low for the fixture runs: each
-    stateful operator materializes one state store per shuffle partition
-    per micro-batch, pure overhead at local scale (a cluster job raises
-    it; the value is baked into the checkpoint at first start).
     """
     spark = sdf.sparkSession
     name = f"sink_{uuid.uuid4().hex}"
-    with _pinned_state_partitions(spark):
-        query = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", staging_dir("ckpt_"))
-            .start()
-        )
-        finished = query.awaitTermination(timeout_sec)
-        if not finished:
-            # Never return a partially-populated sink: stop and fail loudly.
-            query.stop()
-            raise TimeoutError(
-                f"streaming query {name} did not finish in {timeout_sec}s"
-            )
+    run_stream(
+        spark,
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        staging_dir("ckpt_"),
+    )
     return spark.table(name)
 
 
@@ -185,11 +211,11 @@ def watermarked(df: DataFrame, col: str = "ts", delay: str = "10 minutes") -> Da
 # --- E37: tumbling / sliding windows ----------------------------------------
 
 
-def tumbling_counts(stream: DataFrame, size: str = "1 hour") -> DataFrame:
-    """Per-window, per-type counts + exact value sums (tumbling)."""
+def tumbling_counts(stream: DataFrame) -> DataFrame:
+    """Per-hour-window, per-type counts + exact value sums (tumbling)."""
     return (
         watermarked(stream)
-        .groupBy(F.window("ts", size), "event_type")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             _dsum()("value").alias("sum_value"),
@@ -203,13 +229,12 @@ def tumbling_counts(stream: DataFrame, size: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(
-    stream: DataFrame, size: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Overlapping-window counts; each event lands in size/slide windows."""
+def sliding_counts(stream: DataFrame) -> DataFrame:
+    """Overlapping-window counts (1 hour windows every 30 minutes); each
+    event lands in two windows."""
     return (
         watermarked(stream)
-        .groupBy(F.window("ts", size, slide), "event_type")
+        .groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.unix_micros(F.col("window.start")).alias("window_start"),
@@ -219,25 +244,23 @@ def sliding_counts(
     )
 
 
-def chained_windowed_rollup(
-    stream: DataFrame, fine: str = "15 minutes", coarse: str = "1 hour"
-) -> DataFrame:
+def chained_windowed_rollup(stream: DataFrame) -> DataFrame:
     """Two chained stateful aggregations in ONE streaming query (Spark
-    3.5+ multiple-stateful-operator support): per-(fine window, user)
-    counts roll up into per-coarse-window activity stats without landing
+    3.5+ multiple-stateful-operator support): per-(15-minute window,
+    user) counts roll up into per-hour activity stats without landing
     the intermediate anywhere. The second groupBy re-windows on
     window_time() of the first — the documented chaining contract; the
-    propagated watermark finalizes a coarse window only after every fine
+    propagated watermark finalizes an hour only after every 15-minute
     sub-window inside it has been emitted upstream, so append output is
-    deterministic. State is bounded at (open fine windows × active
-    users) + open coarse windows; both drop on watermark pass."""
+    deterministic. State is bounded at (open 15-minute windows × active
+    users) + open hours; both drop on watermark pass."""
     fine_counts = (
         watermarked(stream)
-        .groupBy(F.window("ts", fine), "user_id")
+        .groupBy(F.window("ts", "15 minutes"), "user_id")
         .agg(F.count("*").alias("c"))
     )
     return (
-        fine_counts.groupBy(F.window(F.window_time("window"), coarse))
+        fine_counts.groupBy(F.window(F.window_time("window"), "1 hour"))
         .agg(
             F.sum("c").alias("n_events"),
             F.count("*").alias("n_user_slots"),
@@ -255,15 +278,15 @@ def chained_windowed_rollup(
 # --- E38: session windows ----------------------------------------------------
 
 
-def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user sessions: events merge while consecutive gaps < gap.
+def session_windows(stream: DataFrame) -> DataFrame:
+    """Per-user sessions: events merge while consecutive gaps < 30 minutes.
 
-    Spark's ``session_window`` end is ``last event ts + gap``; the DuckDB
+    Spark's ``session_window`` end is ``last event ts + 30 minutes``; the DuckDB
     oracle reproduces that with a lag/cumulative-flag islands query.
     """
     return (
         watermarked(stream)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -277,142 +300,48 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
 # --- stream-stream interval join ----------------------------------------------
 
 
-def stream_stream_join(
-    spark: SparkSession, sf_dir: str, lookback: str = "30 minutes"
-) -> DataFrame:
-    """Attribute each click to the views it followed within ``lookback``
-    (same user) — a stream-stream inner join with an event-time range
-    condition.
+def stream_stream_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Attribute each click to the views of the same user in the 30
+    minutes before it — the stream-stream interval join, ``how`` one of
+    "inner" (q79), "left_outer" (q148) or "full_outer" (q202).
 
     Both sides carry watermarks, and the range predicate bounds how long
-    a view must be buffered (watermark + lookback) — Spark evicts join
-    state past that horizon, so state is bounded on an infinite stream.
-    This is the streaming form of the as-of/attribution join (E12); at
-    100 TB the join key (user_id) partitions both sides' state stores.
+    a row must be buffered (watermark + 30 minutes) — Spark evicts join
+    state past that horizon, so state is bounded on an infinite stream;
+    at 100 TB the join key (user_id) partitions both sides' state
+    stores. This is the streaming form of the as-of/attribution join
+    (E12). Matched pairs emit immediately. The outer joins emit an
+    unmatched row NULL-padded once the watermark proves no partner can
+    still arrive, then drop its state — a deterministic emission rule
+    the batch oracles reproduce. The asymmetric range gives each side
+    its own horizon: a click waits on views in [click_ts - 30 min,
+    click_ts], so it resolves when the watermark passes click_ts; a view
+    waits on clicks in [view_ts, view_ts + 30 min], so it resolves 30
+    minutes later. ``user_id`` is ``coalesce(c_user, v_user)``, which is
+    the click's user whenever the row has a click.
     """
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
+
+    def side(event_type: str, id_col: str, user_col: str, ts_col: str) -> DataFrame:
+        rows = (
+            read_events_stream(spark, sf_dir)
+            .where(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(user_col),
+                F.col("ts").alias(ts_col),
+            )
         )
-        .transform(lambda d: watermarked(d, "click_ts"))
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .transform(lambda d: watermarked(d, "view_ts"))
-    )
+        return watermarked(rows, ts_col)
+
+    clicks = side("click", "click_id", "c_user", "click_ts")
+    views = side("view", "view_id", "v_user", "view_ts")
     return clicks.join(
         views,
         F.expr(
-            f"c_user = v_user AND view_ts >= click_ts - interval {lookback} "
+            "c_user = v_user AND view_ts >= click_ts - interval 30 minutes "
             "AND view_ts <= click_ts"
         ),
-        "inner",
-    ).select(
-        "click_id",
-        "view_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_micros("click_ts").alias("click_us"),
-        F.unix_micros("view_ts").alias("view_us"),
-    )
-
-
-def stream_stream_left_join(
-    spark: SparkSession, sf_dir: str, lookback: str = "30 minutes"
-) -> DataFrame:
-    """Left-outer stream-stream join: every click, matched to prior views
-    within ``lookback`` or emitted NULL-padded once the watermark proves
-    no match can arrive. The outer semantics are what make attribution
-    complete (clicks with no preceding view are the interesting rows);
-    Spark buffers the click until the view-side watermark passes its
-    event time, then emits the null row and drops the state — bounded
-    state with a deterministic emission rule, which is exactly what the
-    batch oracle reproduces (matched rows + unmatched clicks older than
-    the final watermark)."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .transform(lambda d: watermarked(d, "click_ts"))
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .transform(lambda d: watermarked(d, "view_ts"))
-    )
-    return clicks.join(
-        views,
-        F.expr(
-            f"c_user = v_user AND view_ts >= click_ts - interval {lookback} "
-            "AND view_ts <= click_ts"
-        ),
-        "left_outer",
-    ).select(
-        "click_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_micros("click_ts").alias("click_us"),
-        "view_id",
-        F.unix_micros("view_ts").alias("view_us"),
-    )
-
-
-def stream_stream_full_outer_join(
-    spark: SparkSession, sf_dir: str, lookback: str = "30 minutes"
-) -> DataFrame:
-    """Full-outer stream-stream join: matched click/view pairs emit
-    immediately; unmatched rows on EITHER side emit NULL-padded once
-    the watermark proves no partner can still arrive. The asymmetric
-    range condition gives each side its own state horizon — a click
-    waits on views in [click_ts - lookback, click_ts] so it expires
-    when the watermark passes click_ts; a view waits on clicks in
-    [view_ts, view_ts + lookback] so it expires lookback later. Both
-    horizons are bounded, so state never grows on an infinite stream;
-    user_id partitions both state stores at scale."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .transform(lambda d: watermarked(d, "click_ts"))
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .transform(lambda d: watermarked(d, "view_ts"))
-    )
-    return clicks.join(
-        views,
-        F.expr(
-            f"c_user = v_user AND view_ts >= click_ts - interval {lookback} "
-            "AND view_ts <= click_ts"
-        ),
-        "full_outer",
+        how,
     ).select(
         "click_id",
         F.coalesce("c_user", "v_user").alias("user_id"),
@@ -446,9 +375,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- foreachBatch upsert sink ---------------------------------------------------
 
 
-def stream_upsert_sink(
-    spark: SparkSession, sf_dir: str, dest: str | None = None
-) -> str:
+def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> str:
     """Continuously upsert micro-batches into a parquet target by key —
     the foreachBatch MERGE pattern (the standard way Structured Streaming
     maintains a keyed table in a sink without native MERGE support).
@@ -460,13 +387,11 @@ def stream_upsert_sink(
     materialize → atomic overwrite. On a real lakehouse the
     read-merge-overwrite becomes a table-format MERGE (Iceberg/Delta);
     the batch-side plan is identical."""
-    import shutil
-
     from ..operators.merge import merge_upsert
     from ..operators.stage import materialize_stage
 
     base = staging_dir("stream_upsert_")
-    stage, dest = f"{base}/stage", dest or f"{base}/target"
+    stage, dest = f"{base}/stage", f"{base}/target"
     os.makedirs(stage)
     src = f"{sf_dir}/events.parquet"
     for i in range(2):
@@ -491,16 +416,9 @@ def stream_upsert_sink(
         .parquet(stage)
     )
     stream = normalize_event_ts(stream)
-    with _pinned_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", staging_dir("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError("stream_upsert_sink did not finish in 300s")
+    run_stream(
+        spark, stream.writeStream.foreachBatch(apply_batch), staging_dir("ckpt_")
+    )
     return dest
 
 
@@ -547,26 +465,21 @@ def stream_migrate(
     a fresh tempdir is minted and the run processes everything once.
     """
     dest = dest or staging_dir("stream_migrate_")
-    checkpoint = checkpoint or staging_dir("ckpt_")
-    stream = read_events_stream(spark, sf_dir, glob=glob)
-    query = (
-        stream.writeStream.format("parquet")
+    run_stream(
+        spark,
+        read_events_stream(spark, sf_dir, glob=glob)
+        .writeStream.format("parquet")
         .option("path", dest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint or staging_dir("ckpt_"),
     )
-    query.awaitTermination(300)
     return dest
 
 
 # --- custom stateful operator: applyInPandasWithState -------------------------
 
 
-def user_streaks_updates(
-    stream: DataFrame, gap_seconds: int = 600
-) -> DataFrame:
+def user_streaks_updates(stream: DataFrame) -> DataFrame:
     """The applyInPandasWithState UPDATE stream behind ``user_streaks``
     (exposed separately so the restart probe — tools/stream_probe.py —
     can drive it across a checkpoint stop/resume boundary)."""
@@ -582,7 +495,7 @@ def user_streaks_updates(
             n, cur, best, last_us = 0, 0, 0, None
         for ts in df["ts"]:
             us = int(ts.value // 1000)  # pandas ns → µs
-            if last_us is not None and us - last_us < gap_seconds * 1_000_000:
+            if last_us is not None and us - last_us < 600 * 1_000_000:
                 cur += 1
             else:
                 cur = 1
@@ -607,13 +520,11 @@ def user_streaks_updates(
     )
 
 
-def user_streaks(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 600
-) -> DataFrame:
+def user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user activity streaks via a CUSTOM stateful operator.
 
     A streak is a maximal run of events where each inter-arrival gap is
-    < ``gap_seconds``. This is the `applyInPandasWithState` surface for
+    < 600 seconds. This is the `applyInPandasWithState` surface for
     stateful logic Spark's built-in windows can't express (the operator
     tracks (event_count, current_streak, longest_streak, last_ts) across
     micro-batches; state is per-key and watermark/timeout-evictable at
@@ -621,9 +532,7 @@ def user_streaks(
 
     Returns the final (user_id, n_events, max_streak) per user.
     """
-    updates = user_streaks_updates(
-        read_events_stream(spark, sf_dir), gap_seconds
-    )
+    updates = user_streaks_updates(read_events_stream(spark, sf_dir))
     final = run_to_memory(updates, "update")
     # update mode re-emits a key's row each batch it changes; counters are
     # monotone, so the max per key is the final state.
@@ -636,14 +545,16 @@ def user_streaks(
 # --- E39: watermark late-data drop -------------------------------------------
 
 
-def _stage_late_batches(
-    spark: SparkSession, sf_dir: str, late_mod: int
-) -> DataFrame:
+# Held-back (late) rows of the watermark jobs: event_id % _LATE_MOD == 0.
+_LATE_MOD = 997
+
+
+def _stage_late_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared three-micro-batch staging for the watermark-semantics jobs
     (``late_data_drop``, ``stream_windowed_topk``): two on-time files,
-    then the held-back rows (``event_id % late_mod == 0``). The q59 and
+    then the held-back rows (``event_id % 997 == 0``). The q59 and
     q183 oracles BOTH re-derive the on-time subset from this exact
-    %late_mod / %13 split — one copy of the construction keeps the two
+    %997 / %13 split — one copy of the construction keeps the two
     streams and their oracles synchronized by definition.
 
     ONE partitioned write stages all three batch files; distinct mtimes
@@ -661,7 +572,7 @@ def _stage_late_batches(
         stage = staging_dir("late_stage_")
         events = table(spark, sf_dir, "events")
         batch = (
-            F.when(F.col("event_id") % late_mod == 0, F.lit(2))
+            F.when(F.col("event_id") % _LATE_MOD == 0, F.lit(2))
             .when(F.col("event_id") % 13 == 0, F.lit(1))
             .otherwise(F.lit(0))
         )
@@ -690,7 +601,7 @@ def _stage_late_batches(
     # reaper (or manual cleanup) removing it mid-session would otherwise
     # make q59/q183 stream from a missing dir instead of rebuilding.
     stage = memo_stage(
-        spark, sf_dir, f"late_stage_{late_mod}", _build, valid=os.path.isdir
+        spark, sf_dir, f"late_stage_{_LATE_MOD}", _build, valid=os.path.isdir
     )
     events = table(spark, sf_dir, "events")
     return (
@@ -704,28 +615,23 @@ def _stage_late_batches(
     )
 
 
-def late_data_drop(
-    spark: SparkSession,
-    sf_dir: str,
-    delay: str = "10 minutes",
-    late_mod: int = 997,
-) -> DataFrame:
+def late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode tumbling count demonstrating watermark semantics.
 
     Stages events into three files processed as separate micro-batches
     (``maxFilesPerTrigger=1``, mtime-ordered): two on-time files, then the
-    held-back rows (``event_id % late_mod == 0``).  The late-record filter
+    held-back rows (``event_id % 997 == 0``).  The late-record filter
     uses the watermark *announced by the previous batch* (measured on
     Spark 4.1: data from batch N sets the filter watermark of batch N+2),
-    so the middle batch ensures ``max(batch0 ts) - delay`` is in force
+    so the middle batch ensures ``max(batch0 ts) - 10 minutes`` is in force
     when the late file arrives — its rows, months older, are dropped, and
     append mode emits exactly the windows whose end precedes the final
-    watermark ``max(on-time ts) - delay``.  Deterministic → reproducible
+    watermark ``max(on-time ts) - 10 minutes``.  Deterministic → reproducible
     by a batch oracle over the on-time subset.
     """
-    stream = _stage_late_batches(spark, sf_dir, late_mod)
+    stream = _stage_late_batches(spark, sf_dir)
     agg = (
-        watermarked(stream, "ts", delay)
+        watermarked(stream)
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -736,18 +642,12 @@ def late_data_drop(
     return run_to_memory(agg, "append")
 
 
-def stream_windowed_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 3,
-    delay: str = "10 minutes",
-    late_mod: int = 997,
-) -> str:
-    """Per-window top-k event types maintained by a streaming pipeline:
+def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> str:
+    """Per-window top-3 event types maintained by a streaming pipeline:
     append-mode tumbling counts (same staging + watermark construction
     as ``late_data_drop`` — two on-time micro-batches, one late batch
     whose rows are dropped), then a ``foreachBatch`` sink RANKS each
-    finalized window and appends only its top-k rows to the target.
+    finalized window and appends only its top-3 rows to the target.
 
     Ranking inside foreachBatch is correct because append mode emits a
     window exactly once and in full (all its groups in one batch) when
@@ -761,9 +661,9 @@ def stream_windowed_topk(
     from pyspark.sql.window import Window
 
     dest = staging_dir("topk_dest_") + "/out"
-    stream = _stage_late_batches(spark, sf_dir, late_mod)
+    stream = _stage_late_batches(spark, sf_dir)
     agg = (
-        watermarked(stream, "ts", delay)
+        watermarked(stream)
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -796,22 +696,16 @@ def stream_windowed_topk(
         )
         (
             bdf.withColumn("rk", F.row_number().over(w).cast("int"))
-            .where(F.col("rk") <= k)
+            .where(F.col("rk") <= 3)
             .write.mode("append")
             .parquet(dest)
         )
 
-    with _pinned_state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(rank_batch)
-            .option("checkpointLocation", staging_dir("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(300):
-            query.stop()
-            raise TimeoutError("stream_windowed_topk did not finish in 300s")
+    run_stream(
+        spark,
+        agg.writeStream.outputMode("append").foreachBatch(rank_batch),
+        staging_dir("ckpt_"),
+    )
     return dest
 
 
@@ -843,3 +737,82 @@ def complete_totals_stream(stream: DataFrame) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(_dterm()("value", 6)).alias("sum_value_dec"),
     )
+
+
+# --- restart harness: one job stopped and resumed on one checkpoint ----------
+
+
+class _Restart:
+    """The phases of one ``restart_harness``: see there."""
+
+    def __init__(self, spark: SparkSession, parts: list, work: str, ckpt: str):
+        self.spark, self.parts, self.work, self.ckpt = spark, parts, work, ckpt
+        self.phases: list[list[tuple[int, list]]] = []
+
+    def phase(
+        self,
+        build: Callable[[str], DataFrame],
+        output_mode: str,
+        landed: int,
+        after_batch: Callable[[int], None] | None = None,
+    ) -> list[tuple[int, list]]:
+        import pyarrow.parquet as pq
+
+        for i in range(landed):
+            path = f"{self.work}/events_{i:03d}.parquet"
+            if not os.path.exists(path):
+                pq.write_table(self.parts[i], path)
+                # The file source orders a batch's files by mtime; files
+                # written within one clock tick would tie and could be
+                # read out of ts order.
+                os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
+        batches: list[tuple[int, list]] = []
+        self.phases.append(batches)
+
+        def collect(bdf: DataFrame, batch_id: int) -> None:
+            batches.append((batch_id, bdf.collect()))
+            if after_batch is not None:
+                after_batch(batch_id)
+
+        run_stream(
+            self.spark,
+            build(self.work).writeStream.foreachBatch(collect).outputMode(output_mode),
+            self.ckpt,
+        )
+        return batches
+
+
+@contextlib.contextmanager
+def restart_harness(spark: SparkSession, sf_dir: str, n_files: int):
+    """Run one streaming job in phases on ONE checkpoint: stop it, let
+    more input land, resume — the contract a production stream lives by
+    (no rows lost with forgotten state, none duplicated by replayed
+    state) and a single availableNow pass never exercises.
+
+    ``sf_dir``'s events are sorted by ts (arrival order, the shape a
+    migrate loop feeds a landing dir) and cut at rows
+    ``i * num_rows // n_files`` into ``n_files`` slices. The context
+    value's ``phase(build, output_mode, landed, after_batch=None)``
+    lands the first ``landed`` slices as ``events_000.parquet``, … in a
+    staging dir, runs ``build(dir)`` to completion on the shared
+    checkpoint through a foreachBatch collector, and returns that
+    phase's ``[(batch_id, rows)]``; ``phases`` holds every phase's list,
+    a crashed one included. foreachBatch is the one sink that resumes
+    from a checkpoint (the memory sink refuses to). ``after_batch(id)``
+    runs once a batch's rows are collected: raising there kills the
+    query between the sink write and the batch's commit. The staged
+    input and the checkpoint are removed on exit, raising or not."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
+    cuts = [i * t.num_rows // n_files for i in range(n_files + 1)]
+    parts = [t.slice(a, b - a) for a, b in zip(cuts, cuts[1:])]
+    work = staging_dir("restart_")
+    ckpt = staging_dir("restart_ckpt_")
+    try:
+        yield _Restart(spark, parts, work, ckpt)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)

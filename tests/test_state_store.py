@@ -51,25 +51,50 @@ def test_rocksdb_provider_matches_default_provider(spark, smoke_dir):
 
 
 def test_pinned_state_partitions_restores_conf(spark):
-    """Every streaming start site wraps _pinned_state_partitions; the
+    """Every streaming start site wraps _pinned_state_partitions (there
+    is one, run_stream — tests/test_stream_start_site.py checks it); the
     pin must restore the session's shuffle-partition conf on BOTH the
     normal and the exception path (a leak would silently re-plan every
-    later batch query in the shared driver session at 4 partitions)."""
+    later batch query in the shared driver session at the pinned
+    count). The session is set off the pinned count first, so a restore
+    is visible."""
     import pytest
 
-    from hadoop_trans_spark.streaming.jobs import _pinned_state_partitions
+    from hadoop_trans_spark.streaming.jobs import (
+        STATE_PARTITIONS,
+        _pinned_state_partitions,
+    )
 
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    with _pinned_state_partitions(spark):
-        assert spark.conf.get(key) == "4"
-    assert spark.conf.get(key) == prev
+    other = str(STATE_PARTITIONS + 3)
+    spark.conf.set(key, other)
+    try:
+        with _pinned_state_partitions(spark):
+            assert spark.conf.get(key) == str(STATE_PARTITIONS)
+        assert spark.conf.get(key) == other
 
-    with pytest.raises(RuntimeError):
-        with _pinned_state_partitions(spark, n=2):
-            assert spark.conf.get(key) == "2"
-            raise RuntimeError("boom")
-    assert spark.conf.get(key) == prev
+        with pytest.raises(RuntimeError):
+            with _pinned_state_partitions(spark):
+                assert spark.conf.get(key) == str(STATE_PARTITIONS)
+                raise RuntimeError("boom")
+        assert spark.conf.get(key) == other
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stream_migrate_timeout_stops_query(spark, smoke_dir, monkeypatch):
+    """A stream_migrate run that outlives the timeout must raise and
+    leave no query running — never return a half-written dest while the
+    query keeps appending to it."""
+    import pytest
+
+    from hadoop_trans_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        jobs.stream_migrate(spark, smoke_dir)
+    assert spark.streams.active == []
 
 
 def test_stream_migrate_restart_resumes_from_checkpoint(
@@ -108,20 +133,7 @@ def test_stream_migrate_restart_resumes_from_checkpoint(
     assert spark.read.parquet(dest).count() == 2 * n
 
 
-def _load_stream_probe():
-    import importlib.util
-    import os
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "stream_probe", os.path.join(repo, "tools", "stream_probe.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_stateful_restart_matches_single_run(spark, smoke_dir, tmp_path):
+def test_stateful_restart_matches_single_run(spark, smoke_dir):
     """r13 streaming restart contract (VERDICT r12 item 3), pinned for
     the two state shapes with the most machinery behind them: a
     watermarked windowed aggregate (tumbling) and the custom
@@ -131,41 +143,41 @@ def test_stateful_restart_matches_single_run(spark, smoke_dir, tmp_path):
     never-stopped run — open-window partials, watermark position, and
     per-key custom state all live in (and must come back from) the
     state store. The full 10-family sweep is tools/stream_probe.py."""
-    import os
-    import shutil
-    import tempfile
-
     from hadoop_trans_spark.streaming import (
         read_events_stream,
+        restart_harness,
         tumbling_counts,
         user_streaks_updates,
     )
 
-    sp = _load_stream_probe()
-    full = str(tmp_path / "full")
-    sp.stage_split(smoke_dir, full, 4)
-    files = sorted(f for f in os.listdir(full) if f.startswith("events_"))
-    assert len(files) == 4
-
     def es(d):
         return read_events_stream(spark, d, max_files_per_trigger=1)
 
+    def rows(run):
+        return [tuple(r) for phase in run.phases for _, b in phase for r in b]
+
+    def canon_rows(rs):
+        return sorted(rs, key=lambda t: tuple((v is None, v) for v in t))
+
+    def canon_streaks(rs):
+        # update mode re-emits a key per batch; counters are monotone,
+        # so the max per key is its final state
+        best: dict = {}
+        for k, n, streak in rs:
+            n0, s0 = best.get(k, (n, streak))
+            best[k] = (max(n0, n), max(s0, streak))
+        return sorted((k, n, s) for k, (n, s) in best.items())
+
     for build, mode, canon in [
-        (lambda d: tumbling_counts(es(d)), "append", sp.canon_rows),
-        (lambda d: user_streaks_updates(es(d)), "update", sp.canon_streaks),
+        (lambda d: tumbling_counts(es(d)), "append", canon_rows),
+        (lambda d: user_streaks_updates(es(d)), "update", canon_streaks),
     ]:
-        single = sp.run_available_now(
-            build(full), mode, tempfile.mkdtemp(prefix="ckpt_s_")
-        )
-        grow = tempfile.mkdtemp(prefix="grow_")
-        for f in files[:2]:
-            shutil.copy2(os.path.join(full, f), os.path.join(grow, f))
-        ckpt = tempfile.mkdtemp(prefix="ckpt_r_")
-        p1 = sp.run_available_now(build(grow), mode, ckpt)
-        for f in files[2:]:
-            shutil.copy2(os.path.join(full, f), os.path.join(grow, f))
-        p2 = sp.run_available_now(build(grow), mode, ckpt)
-        a = canon(sp.flat(single))
-        b = canon(sp.flat(p1) + sp.flat(p2))
+        with restart_harness(spark, smoke_dir, 4) as single:
+            single.phase(build, mode, 4)
+        with restart_harness(spark, smoke_dir, 4) as restart:
+            restart.phase(build, mode, 2)
+            restart.phase(build, mode, 4)
+        a = canon(rows(single))
+        b = canon(rows(restart))
         assert a, "single run produced no rows"
         assert a == b

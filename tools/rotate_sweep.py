@@ -139,6 +139,29 @@ RESHAPED: dict[str, int] = {
     # operators.components.dedup_keep_cluster_canonical.
     "q70": 16,
     "q86": 16,
+    # round-16 one way to run a stream: every streaming query starts in
+    # streaming.jobs.run_stream (q58's migrate now pinned and bounded),
+    # q79/q148/q202 share one click/view join, q250/q254 run the one
+    # restart harness, and the single-valued window/gap/delay options
+    # became literals.
+    "q54": 16,
+    "q55": 16,
+    "q56": 16,
+    "q57": 16,
+    "q58": 16,
+    "q59": 16,
+    "q60": 16,
+    "q79": 16,
+    "q88": 16,
+    "q89": 16,
+    "q132": 16,
+    "q141": 16,
+    "q148": 16,
+    "q183": 16,
+    "q189": 16,
+    "q202": 16,
+    "q250": 16,
+    "q254": 16,
 }
 
 

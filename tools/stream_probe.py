@@ -5,18 +5,23 @@ pass with a fresh checkpoint, so the driver gate never exercises the
 contract a production stream lives by: stop mid-stream, restart from the
 checkpoint, and produce EXACTLY the rows a never-stopped run produces —
 no losses (state forgotten on resume) and no duplicates (state replayed).
-This probe drives that contract for every stateful operator family:
+This probe drives that contract for every stateful operator family,
+each scenario one job on one checkpoint through the package's
+``streaming.restart_harness`` (the harness q250 and q254 run):
 
-  1. stage the fixture's events as K ts-ordered files (arrival order —
-     the shape a migrate loop feeds a landing dir);
+  1. the harness stages the fixture's events as K ts-ordered files
+     (arrival order — the shape a migrate loop feeds a landing dir);
   2. SINGLE run: one availableNow pass over all K files, fresh
      checkpoint — the reference result;
-  3. RESTART run: a growing dir with only the first half of the files,
-     availableNow to completion (watermark mid-stream, open windows /
-     dedup keys / join buffers / custom state live in the checkpoint),
-     process STOPPED; remaining files copied in; a NEW query resumed
-     from the SAME checkpoint;
-  4. compare the canonical final result of (3) against (2).
+  3. RESTART run: only the first half of the files landed, availableNow
+     to completion (watermark mid-stream, open windows / dedup keys /
+     join buffers / custom state live in the checkpoint), query
+     STOPPED; remaining files land; a NEW query resumed from the SAME
+     checkpoint;
+  4. compare the canonical final result of (3) against (2);
+  5. with ``--abort``: all files landed, the first query crashes after
+     the sink write of batch N (``crash_after``), a NEW query resumes
+     from its checkpoint; the batch_id-merged result must equal (2).
 
 Output-mode canonicalization: append emits each row exactly once across
 both phases (union phase sinks); update re-emits a key per batch it
@@ -25,115 +30,81 @@ re-emits full state (canonical = LAST phase's table alone).
 
 Usage:
   python tools/stream_probe.py [fixture_dir] [--files=6] [--jobs=a,b,...]
+                               [--abort | --abort=1,3]
 
 Differential probing under injected data (the null_probe campaign):
-  python tools/null_probe.py /root/testdata/sf0.001 /tmp/p --mode=time
-  python tools/stream_probe.py /tmp/p
+  python tools/null_probe.py SRC_FIXTURE PROBE_DIR --mode=time
+  python tools/stream_probe.py PROBE_DIR --abort
 
-Exit 1 on any restart-vs-single mismatch. Jobs covered: tumbling,
-sliding, session, chained, dedup, join_inner, join_left, join_full,
-streaks (applyInPandasWithState), totals (complete mode).
+Prints one JSON line per scenario, then a summary line
+``=== STREAM RESTART PROBE === jobs: N  bad: M``; exit 1 on any
+restart-vs-single mismatch. Jobs covered: tumbling, sliding, session,
+chained, dedup, join_inner, join_left, join_full, streaks
+(applyInPandasWithState), totals (complete mode).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def stage_split(src_dir: str, out_dir: str, n_files: int) -> None:
-    """events.parquet → K ts-ordered parquet files + the other tables
-    copied as-is (the static sides of stream-static jobs)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    for name in os.listdir(src_dir):
-        if name == "events.parquet":
-            continue
-        src = os.path.join(src_dir, name)
-        dst = os.path.join(out_dir, name)
-        if os.path.isfile(src):
-            shutil.copy2(src, dst)
-    t = pq.read_table(os.path.join(src_dir, "events.parquet"))
-    order = pc.sort_indices(t, sort_keys=[("ts", "ascending")])
-    t = t.take(order)
-    n = t.num_rows
-    step = (n + n_files - 1) // n_files
-    for i in range(n_files):
-        chunk = t.slice(i * step, step)
-        if chunk.num_rows == 0:
-            break
-        pq.write_table(
-            chunk, os.path.join(out_dir, f"events_{i:03d}.parquet")
-        )
 
 
 ABORT_MARK = "stream_probe injected crash"
 
 
-def run_available_now(
-    sdf, output_mode: str, checkpoint: str, abort_after: int | None = None
-):
-    """One availableNow pass through a foreachBatch collector; returns
-    [(batch_id, rows)] in batch order.
-
-    foreachBatch (not the memory sink) because it is the one sink shape
-    that SUPPORTS checkpoint recovery — the restart leg resumes a NEW
-    query from the prior run's checkpoint, which the memory sink
-    refuses outright ("This query does not support recovering from
-    checkpoint location"). It is also the honest production shape: a
-    resumed job replays only uncommitted batches, so the collector sees
-    each batch exactly once across both phases.
-
-    ``abort_after=N`` injects the UNCLEAN-restart crash (VERDICT r13
-    item 4): the sink function completes its write for batch N (rows
+def crash_after(n: int):
+    """``after_batch`` hook injecting the UNCLEAN-restart crash: the
+    sink completes its write for batch ``n`` (rows
     collected — the external side effect happened) and then raises, so
     the query dies BETWEEN the sink write and the batch's commit-log
     entry — the harsher window a clean stop() never exercises. On
-    resume Spark must replay batch N (it never committed) with state
-    stores rolled back to version N: the collector legitimately sees
-    batch N twice, which is exactly why foreachBatch's contract is
+    resume Spark must replay batch ``n`` (it never committed) with state
+    stores rolled back to version ``n``: the collector legitimately sees
+    batch ``n`` twice, which is exactly why foreachBatch's contract is
     at-least-once and production sinks key their writes on batchId.
     The probe models that idempotent sink: merge_by_batch_id keeps the
     LAST write per batch_id before comparing."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from hadoop_trans_spark.streaming.jobs import _pinned_state_partitions
-
-    spark = sdf.sparkSession
-    batches: list[tuple[int, list]] = []
-
-    def sink(bdf, batch_id: int) -> None:
-        batches.append((batch_id, bdf.collect()))
-        if abort_after is not None and batch_id >= abort_after:
+    def hook(batch_id: int) -> None:
+        if batch_id >= n:
             raise RuntimeError(f"{ABORT_MARK} after sink write of batch {batch_id}")
 
-    name = f"probe_{uuid.uuid4().hex}"
-    with _pinned_state_partitions(spark):
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+    return hook
+
+
+def run_job(spark, src, n_files, build, mode, landed):
+    """One job on one checkpoint (the package's restart_harness), one
+    phase per entry of ``landed`` (files present when it starts).
+    Returns every phase's [(batch_id, rows)]."""
+    from hadoop_trans_spark.streaming import restart_harness
+
+    with restart_harness(spark, src, n_files) as run:
+        for n in landed:
+            run.phase(lambda d: build(spark, d), mode, n)
+    return run.phases
+
+
+def run_crashed(spark, src, n_files, build, mode, abort_after):
+    """All files landed; the first query crashes after the sink write of
+    batch ``abort_after``, a NEW one resumes from its checkpoint.
+    Returns (crashed, resumed) [(batch_id, rows)]."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from hadoop_trans_spark.streaming import restart_harness
+
+    with restart_harness(spark, src, n_files) as run:
         try:
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(f"stream {name} did not finish")
+            run.phase(
+                lambda d: build(spark, d), mode, n_files, crash_after(abort_after)
+            )
         except StreamingQueryException as ex:
-            if abort_after is None or ABORT_MARK not in str(ex):
+            if ABORT_MARK not in str(ex):
                 raise
-    return batches
+        run.phase(lambda d: build(spark, d), mode, n_files)
+    return run.phases
 
 
 def merge_by_batch_id(phases) -> list[tuple[int, list]]:
@@ -183,9 +154,7 @@ def jobs_table():
         session_windows,
         sliding_counts,
         stream_dedup,
-        stream_stream_full_outer_join,
         stream_stream_join,
-        stream_stream_left_join,
         tumbling_counts,
         user_streaks_updates,
     )
@@ -221,17 +190,17 @@ def jobs_table():
         ),
         "dedup": (lambda s, d: stream_dedup(s, d), "append", union),
         "join_inner": (
-            lambda s, d: stream_stream_join(s, d),
+            lambda s, d: stream_stream_join(s, d, "inner"),
             "append",
             union,
         ),
         "join_left": (
-            lambda s, d: stream_stream_left_join(s, d),
+            lambda s, d: stream_stream_join(s, d, "left_outer"),
             "append",
             union,
         ),
         "join_full": (
-            lambda s, d: stream_stream_full_outer_join(s, d),
+            lambda s, d: stream_stream_join(s, d, "full_outer"),
             "append",
             union,
         ),
@@ -267,14 +236,7 @@ def main() -> None:
     from hadoop_trans_spark.session import get_spark
 
     spark = get_spark(app_name="stream_probe")
-
-    work = tempfile.mkdtemp(prefix="stream_probe_")
-    full = os.path.join(work, "full")
-    stage_split(src, full, n_files)
-    split_files = sorted(
-        f for f in os.listdir(full) if f.startswith("events_")
-    )
-    half = len(split_files) // 2 or 1
+    half = n_files // 2 or 1
 
     table = jobs_table()
     if only:
@@ -282,21 +244,12 @@ def main() -> None:
     bad = []
     for name, (build, mode, canon) in table.items():
         # SINGLE: all files, fresh checkpoint
-        single = run_available_now(
-            build(spark, full), mode, tempfile.mkdtemp(prefix="ckpt_s_")
-        )
+        (single,) = run_job(spark, src, n_files, build, mode, [n_files])
         # RESTART: first half, stop, add the rest, resume from the SAME
         # checkpoint (a new query object — the process-restart shape)
-        grow = os.path.join(work, f"grow_{name}")
-        os.makedirs(grow)
-        for f in os.listdir(full):
-            if not f.startswith("events_") or f in split_files[:half]:
-                shutil.copy2(os.path.join(full, f), os.path.join(grow, f))
-        ckpt = tempfile.mkdtemp(prefix="ckpt_r_")
-        phase1 = run_available_now(build(spark, grow), mode, ckpt)
-        for f in split_files[half:]:
-            shutil.copy2(os.path.join(full, f), os.path.join(grow, f))
-        phase2 = run_available_now(build(spark, grow), mode, ckpt)
+        phase1, phase2 = run_job(
+            spark, src, n_files, build, mode, [half, n_files]
+        )
         a, b = canon(single, [phase1, phase2])
         ok = a == b
         status = {
@@ -322,11 +275,7 @@ def main() -> None:
         # each abort point (all files present from the start), resume
         # from the same checkpoint, idempotent-sink merge by batch_id.
         for ap in abort_points:
-            ckpt_a = tempfile.mkdtemp(prefix="ckpt_a_")
-            crashed = run_available_now(
-                build(spark, full), mode, ckpt_a, abort_after=ap
-            )
-            resumed = run_available_now(build(spark, full), mode, ckpt_a)
+            crashed, resumed = run_crashed(spark, src, n_files, build, mode, ap)
             merged = merge_by_batch_id([crashed, resumed])
             aa, bb = canon(single, [merged])
             replayed = {b for b, _ in crashed} & {b for b, _ in resumed}
@@ -348,7 +297,6 @@ def main() -> None:
         f"\n=== STREAM RESTART PROBE === jobs: {len(table)}  bad: {len(bad)}"
         + (f"  ({','.join(bad)})" if bad else "")
     )
-    shutil.rmtree(work, ignore_errors=True)
     if bad:
         raise SystemExit(1)
 
