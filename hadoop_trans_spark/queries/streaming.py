@@ -155,7 +155,9 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E40 stateful stream dedup: doubled input → exactly-once per key."""
-    deduped = run_to_memory(stream_dedup(spark, sf_dir), "append")
+    deduped = run_to_memory(
+        stream_dedup(read_events_stream(spark, sf_dir)), "append"
+    )
     return (
         deduped.groupBy("event_type")
         .agg(
@@ -254,7 +256,9 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides + an event-time range predicate, so Spark bounds the buffered
     join state by watermark + lookback — the oracle is the equivalent
     batch interval join."""
-    out = run_to_memory(stream_stream_join(spark, sf_dir, "inner"), "append")
+    out = run_to_memory(
+        stream_stream_join(read_events_stream(spark, sf_dir), "inner"), "append"
+    )
     return out.select(
         "click_id", "view_id", "user_id", "click_us", "view_us"
     ).orderBy("click_id", "view_id")
@@ -489,7 +493,9 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-of-stream and correctly absent. State per key is bounded by
     watermark + lookback on both sides; at 100 TB user_id partitions
     both state stores."""
-    out = run_to_memory(stream_stream_join(spark, sf_dir, "left_outer"), "append")
+    out = run_to_memory(
+        stream_stream_join(read_events_stream(spark, sf_dir), "left_outer"), "append"
+    )
     return out.orderBy("click_id", "view_id")
 
 
@@ -607,7 +613,9 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
     — rows newer than their horizon are still unresolved at
     end-of-stream and correctly absent. State on both sides is bounded
     by watermark + lookback; user_id partitions both stores."""
-    out = run_to_memory(stream_stream_join(spark, sf_dir, "full_outer"), "append")
+    out = run_to_memory(
+        stream_stream_join(read_events_stream(spark, sf_dir), "full_outer"), "append"
+    )
     return out.orderBy("click_id", "view_id")
 
 

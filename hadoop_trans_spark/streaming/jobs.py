@@ -300,10 +300,11 @@ def session_windows(stream: DataFrame) -> DataFrame:
 # --- stream-stream interval join ----------------------------------------------
 
 
-def stream_stream_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
-    """Attribute each click to the views of the same user in the 30
-    minutes before it — the stream-stream interval join, ``how`` one of
-    "inner" (q79), "left_outer" (q148) or "full_outer" (q202).
+def stream_stream_join(stream: DataFrame, how: str) -> DataFrame:
+    """Attribute each click of the event ``stream`` to the views of the
+    same user in the 30 minutes before it — the stream-stream interval
+    join, ``how`` one of "inner" (q79), "left_outer" (q148) or
+    "full_outer" (q202).
 
     Both sides carry watermarks, and the range predicate bounds how long
     a row must be buffered (watermark + 30 minutes) — Spark evicts join
@@ -323,8 +324,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
 
     def side(event_type: str, id_col: str, user_col: str, ts_col: str) -> DataFrame:
         rows = (
-            read_events_stream(spark, sf_dir)
-            .where(F.col("event_type") == event_type)
+            stream.where(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(id_col),
                 F.col("user_id").alias(user_col),
@@ -425,16 +425,14 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> str:
 # --- E40: stateful dedup over a stream ---------------------------------------
 
 
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate the stream (union of two sources) then drop dups by key.
+def stream_dedup(stream: DataFrame) -> DataFrame:
+    """Duplicate the ``stream`` (union with itself) then drop dups by key.
 
     ``dropDuplicatesWithinWatermark`` keeps per-key state only for the
     watermark horizon — bounded state at 100 TB, unlike a global distinct.
     """
-    a = read_events_stream(spark, sf_dir)
-    b = read_events_stream(spark, sf_dir)
     return (
-        a.unionByName(b)
+        stream.unionByName(stream)
         .transform(lambda d: watermarked(d, "ts", "1 hour"))
         .dropDuplicatesWithinWatermark(["event_id"])
     )

@@ -54,20 +54,15 @@ transition siblings q106/q217 as canaries.
 
 from __future__ import annotations
 
-import importlib.util
 import os
-import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from hadoop_trans_spark.queries import ORACLE, QUERIES  # noqa: E402
-from hadoop_trans_spark.testing.oracle import compare  # noqa: E402
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from hadoop_trans_spark.queries import ORACLE, QUERIES
+from hadoop_trans_spark.testing.oracle import compare
+from tools import null_probe as np_mod
 
 PROBED = [
     # events-side finds (round-10 probe, batch 1)
@@ -114,20 +109,10 @@ PROBED = [
 ]
 
 
-def _load_null_probe():
-    spec = importlib.util.spec_from_file_location(
-        "null_probe", os.path.join(REPO, "tools", "null_probe.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 @pytest.fixture(scope="module")
 def injected_dir(tmp_path_factory, smoke_dir):
     """sf0.001 copy with deterministic NULLs in events, documents, and
     embeddings."""
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("nullprobe"))
     strides_by_table = {
         "events": np_mod.EVENT_STRIDES,
@@ -148,7 +133,7 @@ def injected_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def injected_oracle(injected_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{injected_dir}/{t}.parquet')"
@@ -194,7 +179,6 @@ EDGE_PROBED = [
 def edge_dir(tmp_path_factory, smoke_dir):
     """sf0.001 copy with empty/whitespace/multibyte text and an empty
     event_type planted at prime strides."""
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("edgeprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -216,7 +200,7 @@ def edge_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def edge_oracle(edge_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{edge_dir}/{t}.parquet')"
@@ -265,7 +249,6 @@ def nan_dir(tmp_path_factory, smoke_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("nanprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -289,7 +272,7 @@ def nan_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def nan_oracle(nan_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{nan_dir}/{t}.parquet')"
@@ -338,7 +321,6 @@ EMPTY_PROBED = [
 def empty_dir(tmp_path_factory, smoke_dir):
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("emptyprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -353,7 +335,7 @@ def empty_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def empty_oracle(empty_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{empty_dir}/{t}.parquet')"
@@ -404,7 +386,6 @@ EMPTY_REL_PROBED = [
 def empty_rel_dir(tmp_path_factory, smoke_dir):
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("emptyrel"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -419,7 +400,7 @@ def empty_rel_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def empty_rel_oracle(empty_rel_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{empty_rel_dir}/{t}.parquet')"
@@ -467,7 +448,6 @@ EMPTY_DIM_PROBED = [
 def empty_dim_dir(tmp_path_factory, smoke_dir):
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("emptydim"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -482,7 +462,7 @@ def empty_dim_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def empty_dim_oracle(empty_dim_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{empty_dim_dir}/{t}.parquet')"
@@ -534,7 +514,6 @@ TIES_PROBED = [
 
 @pytest.fixture(scope="module")
 def ties_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("tiesprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -550,7 +529,7 @@ def ties_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def ties_oracle(ties_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{ties_dir}/{t}.parquet')"
@@ -574,7 +553,6 @@ def test_ties_injection_creates_duplicates(smoke_dir):
     """The tie injector must actually create duplicate (user_id, ts)
     pairs / duplicate texts / duplicate vectors — otherwise the tier
     silently tests nothing."""
-    np_mod = _load_null_probe()
     ev, _ = np_mod.inject_ties(
         pd.read_parquet(os.path.join(smoke_dir, "events.parquet")), "events", 1
     )
@@ -647,7 +625,6 @@ EXTREME_PROBED = [
 
 @pytest.fixture(scope="module")
 def extreme_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("extremeprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -670,7 +647,7 @@ def extreme_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def extreme_oracle(extreme_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{extreme_dir}/{t}.parquet')"
@@ -734,7 +711,6 @@ TIME_PROBED = [
 
 @pytest.fixture(scope="module")
 def time_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("timeprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -752,7 +728,7 @@ def time_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def time_oracle(time_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{time_dir}/{t}.parquet')"
@@ -808,7 +784,6 @@ def vec_dir(tmp_path_factory, smoke_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("vecprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -849,7 +824,7 @@ def vec_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def vec_oracle(vec_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{vec_dir}/{t}.parquet')"
@@ -917,7 +892,6 @@ MONEY_PROBED = [
 
 @pytest.fixture(scope="module")
 def money_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("moneyprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -940,7 +914,7 @@ def money_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def money_oracle(money_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{money_dir}/{t}.parquet')"
@@ -1017,7 +991,6 @@ CONFUSE_PROBED = [
 
 @pytest.fixture(scope="module")
 def confuse_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("confuseprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1038,7 +1011,7 @@ def confuse_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def confuse_oracle(confuse_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{confuse_dir}/{t}.parquet')"
@@ -1091,7 +1064,6 @@ SKEW_PROBED = [
 
 @pytest.fixture(scope="module")
 def skew_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("skewprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1114,7 +1086,7 @@ def skew_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def skew_oracle(skew_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{skew_dir}/{t}.parquet')"
@@ -1182,7 +1154,6 @@ HOSTILE_PROBED = [
 
 @pytest.fixture(scope="module")
 def hostile_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("hostileprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1204,7 +1175,7 @@ def hostile_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def hostile_oracle(hostile_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{hostile_dir}/{t}.parquet')"
@@ -1261,7 +1232,6 @@ def date_dir(tmp_path_factory, smoke_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("dateprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1283,7 +1253,7 @@ def date_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def date_oracle(date_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{date_dir}/{t}.parquet')"
@@ -1329,7 +1299,6 @@ NEGKEY_PROBED = [
 
 @pytest.fixture(scope="module")
 def negkey_dir(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("negkeyprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1347,7 +1316,7 @@ def negkey_dir(tmp_path_factory, smoke_dir):
 @pytest.fixture(scope="module")
 def negkey_oracle(negkey_dir):
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{negkey_dir}/{t}.parquet')"
@@ -1391,7 +1360,6 @@ LABEL_PROBED = [
 
 
 def _label_dir(tmp_path_factory, smoke_dir, mode):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp(f"{mode}probe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")
@@ -1413,7 +1381,7 @@ def _label_dir(tmp_path_factory, smoke_dir, mode):
 def label_probe(request, tmp_path_factory, smoke_dir):
     d = _label_dir(tmp_path_factory, smoke_dir, request.param)
     con = duckdb.connect()
-    for t in _load_null_probe().TABLES:
+    for t in np_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{d}/{t}.parquet')"
@@ -1449,7 +1417,6 @@ SHORTDOC_PROBED = [
 
 @pytest.fixture(scope="module")
 def shortdoc_probe(tmp_path_factory, smoke_dir):
-    np_mod = _load_null_probe()
     dst = str(tmp_path_factory.mktemp("shortdocprobe"))
     for t in np_mod.TABLES:
         src = os.path.join(smoke_dir, f"{t}.parquet")

@@ -5,7 +5,10 @@ a plan regression here costs nothing at sf0.01 and everything at 100 TB.
 
 from __future__ import annotations
 
+import ast
+import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +23,8 @@ from hadoop_trans_spark.plans import (
     scan_partition_filters,
 )
 from hadoop_trans_spark.queries import QUERIES
+from tools import rotate_sweep, update_coverage
+from tools.resolver import REPO
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, smoke_dir):
@@ -938,9 +943,10 @@ def test_sweep_window_matches_computed_rotation():
     stale _SWEEP_PRIORITY wastes the round's external verification —
     the #1 verdict finding in rounds 3 AND 4. This test goes red the
     moment new CORRECTNESS_r*.json history makes the committed window
-    stale; the fix is one command:
+    stale, or a code change makes a committed query digest stale; the
+    fix is one command:
 
-        python tools/rotate_sweep.py   # then commit the rewritten file
+        python tools/rotate_sweep.py   # then commit the rewritten files
     """
     import subprocess
     import sys
@@ -961,16 +967,7 @@ def test_sweep_check_treats_post_commit_correctness_file_as_pending():
     classify an untracked/modified CORRECTNESS file as pending; a file
     already incorporated in HEAD must NOT be pending (so a builder who
     forgets to rotate still trips the check)."""
-    import importlib.util
-    import os
     from unittest import mock
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "rotate_sweep", os.path.join(repo, "tools", "rotate_sweep.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
 
     class _R:
         def __init__(self, stdout):
@@ -978,25 +975,25 @@ def test_sweep_check_treats_post_commit_correctness_file_as_pending():
 
     # untracked r13 file + modified r12 file -> both pending
     with mock.patch.object(
-        mod.subprocess,
+        rotate_sweep.subprocess,
         "run",
         return_value=_R("?? CORRECTNESS_r13.json\n M CORRECTNESS_r12.json\n"),
     ):
-        assert mod.pending_rounds() == frozenset({12, 13})
+        assert rotate_sweep.pending_rounds() == frozenset({12, 13})
     # clean tree -> nothing pending (forgot-to-rotate stays a hard fail)
-    with mock.patch.object(mod.subprocess, "run", return_value=_R("")):
-        assert mod.pending_rounds() == frozenset()
+    with mock.patch.object(rotate_sweep.subprocess, "run", return_value=_R("")):
+        assert rotate_sweep.pending_rounds() == frozenset()
     # not a git checkout -> degrade to the strict behavior
     with mock.patch.object(
-        mod.subprocess, "run", side_effect=OSError("no git")
+        rotate_sweep.subprocess, "run", side_effect=OSError("no git")
     ):
-        assert mod.pending_rounds() == frozenset()
+        assert rotate_sweep.pending_rounds() == frozenset()
     # compute_window must honour the exclusion: excluding a round means
     # its rows do not advance any query's vintage
     rounds = {2: {"qa": {"hash_match": True}}, 3: {"qa": {"hash_match": True}}}
-    last_round, _ = mod.latest_status(rounds, {"qa"})
+    last_round, _ = rotate_sweep.latest_status(rounds, {"qa"})
     assert last_round == {"qa": 3}
-    last_round, _ = mod.latest_status(
+    last_round, _ = rotate_sweep.latest_status(
         {k: v for k, v in rounds.items() if k != 3}, {"qa"}
     )
     assert last_round == {"qa": 2}
@@ -1011,19 +1008,9 @@ def test_every_declared_query_has_a_third_engine_model():
     with a model that bypasses the repo-authored SQL (the Spark query
     and its DuckDB oracle share that SQL, so they can share a
     misconception; the model tier cannot)."""
-    import importlib.util
-    import os
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "update_coverage", os.path.join(repo, "tools", "update_coverage.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
     from hadoop_trans_spark.queries import QUERIES
 
-    ledger = mod.third_engine_models(list(QUERIES))
+    ledger = update_coverage.third_engine_models(list(QUERIES))
     unmodeled = sorted(q for q, files in ledger.items() if not files)
     assert not unmodeled, (
         "queries without a third-engine model (add one to a "
@@ -1054,16 +1041,6 @@ def test_third_engine_credit_requires_code_token_not_prose(tmp_path):
     ledger — only the full query name as a code token (identifier or a
     non-docstring string constant, the form that actually executes the
     query) counts. The short qNN prose form never credits."""
-    import importlib.util
-    import os
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "update_coverage", os.path.join(repo, "tools", "update_coverage.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
     (tmp_path / "test_third_engine_fake.py").write_text(
         '"""Module prose mentioning q03_filter_predicates in full."""\n'
         "def test_a(spark):\n"
@@ -1082,7 +1059,7 @@ def test_third_engine_credit_requires_code_token_not_prose(tmp_path):
         "q41_simhash",
         "q42_ngram_jaccard",
     ]
-    ledger = mod.third_engine_models(queries, tests_dir=str(tmp_path))
+    ledger = update_coverage.third_engine_models(queries, tests_dir=str(tmp_path))
     assert ledger == {
         "q01_pricing_summary": "",  # comment prose
         "q02_projection_cast": "fake",  # executed via string literal
@@ -1098,62 +1075,106 @@ def test_sweep_latest_status_wins_by_round_number_not_filename_order():
     """A red in r2 overridden by a green in r10 must read green even
     though 'r10' sorts lexicographically before 'r2' — the rotation
     (and COVERAGE) must key on the parsed round NUMBER."""
-    import importlib.util
-    import os
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "rotate_sweep", os.path.join(repo, "tools", "rotate_sweep.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
     green = {"rows_match": True, "schema_match": True, "hash_match": True}
     red = {"rows_match": False, "schema_match": True, "hash_match": False}
     rounds = {10: {"qx": green}, 2: {"qx": red, "qy": green}}
-    last_round, last_ok = mod.latest_status(rounds, {"qx", "qy"})
+    last_round, last_ok = rotate_sweep.latest_status(rounds, {"qx", "qy"})
     assert last_round == {"qx": 10, "qy": 2}
     assert last_ok == {"qx": True, "qy": True}
     # and the reverse: a red in the LATER round must win over old green
     rounds = {10: {"qx": red}, 2: {"qx": green}}
-    _, last_ok = mod.latest_status(rounds, {"qx"})
+    _, last_ok = rotate_sweep.latest_status(rounds, {"qx"})
     assert last_ok == {"qx": False}
 
 
 def test_sweep_reshape_pins_outrank_green_vintage_until_reproven():
-    """A RESHAPED pin (code reshaped in round R, latest driver row from
-    an EARLIER round) must sort ahead of ordinary green re-confirmations
-    — the old green proved pre-reshape code — and must self-clear once a
-    row with round >= R exists, so stale pin entries are inert."""
-    import importlib.util
-    import os
-
-    repo = __file__.rsplit("/tests/", 1)[0]
-    spec = importlib.util.spec_from_file_location(
-        "rotate_sweep", os.path.join(repo, "tools", "rotate_sweep.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    assert mod.RESHAPED.get("q110") == 6  # the round-6 pin set
-    # stale green (r3 row, reshape r6): bucket 2 — after never-checked
+    """A query whose digest changed in round R (its code was reshaped;
+    latest driver row from an EARLIER round) must sort ahead of ordinary
+    green re-confirmations — the old green proved the code before the
+    change — and must self-clear once a row with round >= R exists, so
+    old rounds in tools/query_digests.json are inert."""
+    assert rotate_sweep.load_digests()["q110_inverted_index"][1] == 6  # round-6 pin
+    # stale green (r3 row, digest round r6): bucket 2 — after never-checked
     # (0) and reds (1), BEFORE plain greens (3) of ANY vintage
-    try:
-        mod.RESHAPED["q998"] = 6
-        green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    pins = {"q998_reshaped": 6}
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    red = {"rows_match": False, "schema_match": True, "hash_match": False}
 
-        def key_for(name, rounds):
-            last_round, last_ok = mod.latest_status(rounds, {name})
-            return mod.priority_key(name, last_round, last_ok)
+    def key_for(name, rounds):
+        last_round, last_ok = rotate_sweep.latest_status(rounds, {name})
+        return rotate_sweep.priority_key(name, last_round, last_ok, pins)
 
-        pinned = key_for("q998_reshaped", {3: {"q998_reshaped": green}})
-        oldest_green = key_for("q001_old", {2: {"q001_old": green}})
-        assert pinned < oldest_green, (pinned, oldest_green)
-        # post-reshape row (r6 >= pin round 6): pin inert, plain green
-        reproven = key_for("q998_reshaped", {6: {"q998_reshaped": green}})
-        assert reproven[0] == 3, reproven
-    finally:
-        del mod.RESHAPED["q998"]
+    never = key_for("q999_new", {})
+    latest_red = key_for("q997_red", {5: {"q997_red": red}})
+    pinned = key_for("q998_reshaped", {3: {"q998_reshaped": green}})
+    oldest_green = key_for("q001_old", {2: {"q001_old": green}})
+    assert never < latest_red < pinned < oldest_green, (
+        never, latest_red, pinned, oldest_green,
+    )
+    # post-reshape row (r6 >= pin round 6): pin inert, plain green
+    reproven = key_for("q998_reshaped", {6: {"q998_reshaped": green}})
+    assert reproven[0] == 3, reproven
+
+
+STREAMING = (
+    "q54 q55 q56 q57 q58 q59 q60 q79 q88 q89 q132 q141 q148 q183 q189 q202 q250 q254"
+)
+
+
+@pytest.mark.parametrize(
+    "module, name, docstring_only, reached",
+    [
+        ("operators/cooccur.py", "upper_pairs", False, "q140 q147 q178 q200 q204"),
+        ("streaming/jobs.py", "run_stream", False, STREAMING),
+        ("pipelines/fs.py", "data_files", False, "q33 q34 q245 q246"),
+        ("operators/cooccur.py", "upper_pairs", True, ""),
+    ],
+)
+def test_sweep_digest_pins_exactly_the_queries_reaching_an_edit(
+    tmp_path, module, name, docstring_only, reached
+):
+    """Changing a definition's body, in a copy of the package, changes
+    the digest of exactly the queries that reach it, and only those get
+    the new round; a comment, docstring or line-number edit changes none."""
+    pkg = tmp_path / "hadoop_trans_spark"
+    shutil.copytree(os.path.join(REPO, "hadoop_trans_spark"), pkg)
+    path = pkg / module
+    src = path.read_text()
+    fn = next(n for n in ast.parse(src).body if getattr(n, "name", None) == name)
+    lines = src.splitlines(keepends=True)
+    if docstring_only:
+        doc = fn.body[0].lineno - 1
+        lines[doc] = lines[doc].replace('"""', '"""Edited. ', 1)
+        lines.insert(0, "# a new comment\n\n")
+    else:
+        last = fn.body[-1]
+        lines.insert(last.lineno - 1, " " * last.col_offset + "pass\n")
+    path.write_text("".join(lines))
+    before = rotate_sweep.query_digests()
+    after = rotate_sweep.query_digests(str(tmp_path))
+    changed = {q for q in before if before[q] != after[q]}
+    assert {q.split("_")[0] for q in changed} == set(reached.split())
+    rounds = rotate_sweep.restamp({q: [d, 3] for q, d in before.items()}, after, 17)
+    assert {q for q, (_, r) in rounds.items() if r == 17} == changed
+
+
+def test_sweep_check_names_queries_whose_digest_is_stale(
+    tmp_path, monkeypatch, capsys
+):
+    """A digest file that no longer matches the code fails ``--check``
+    and names the query whose code changed."""
+    import sys
+
+    digests = {q: [d, 0] for q, d in rotate_sweep.query_digests().items()}
+    digests["q140_triangle_count"][0] = "0" * 64
+    monkeypatch.setattr(rotate_sweep, "DIGESTS", str(tmp_path / "query_digests.json"))
+    rotate_sweep.write_digests(digests)
+    monkeypatch.setattr(sys, "argv", ["rotate_sweep.py", "--check"])
+    with pytest.raises(SystemExit) as exc:
+        rotate_sweep.main()
+    assert exc.value.code == 1
+    out = capsys.readouterr().out
+    assert "digests STALE" in out and "['q140_triangle_count']" in out, out
 
 
 def test_approx_distinct_sketches_built_per_flag_not_per_key(spark, smoke_dir):

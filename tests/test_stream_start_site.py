@@ -10,7 +10,8 @@ from __future__ import annotations
 import ast
 import os
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tools.resolver import REPO, py_files
+
 ROOTS = ["hadoop_trans_spark", "tools"]
 START_SITE = (os.path.join("hadoop_trans_spark", "streaming", "jobs.py"), "run_stream")
 # A ``.start()`` whose receiver chain names one of these is a streaming
@@ -58,14 +59,10 @@ def _stream_starts(path: str) -> list[tuple[str, int]]:
 def _sites() -> dict[tuple[str, str], list[int]]:
     sites: dict[tuple[str, str], list[int]] = {}
     for root in ROOTS:
-        for dirpath, _, files in os.walk(os.path.join(REPO, root)):
-            for f in sorted(files):
-                if not f.endswith(".py"):
-                    continue
-                path = os.path.join(dirpath, f)
-                rel = os.path.relpath(path, REPO)
-                for func, line in _stream_starts(path):
-                    sites.setdefault((rel, func), []).append(line)
+        for path in py_files(os.path.join(REPO, root)):
+            rel = os.path.relpath(path, REPO)
+            for func, line in _stream_starts(path):
+                sites.setdefault((rel, func), []).append(line)
     return sites
 
 

@@ -8,6 +8,12 @@ different configurations. Prints one JSON line per sf: the min per
 query (``queries``), every draw (``draws``), and the Spark jobs, stages
 and tasks of the fastest draw (``jobs``).
 
+Those counts are a cost record of one draw, not a plan fingerprint: AQE
+can move them by a task between runs of the same tree (q254 at sf0.1
+gave 16 and 17 tasks on unchanged code), so equal counts do not prove
+an unchanged plan, nor unequal counts a changed one. Back a plan-identity
+claim with ``tools/capture_plans.py`` instead.
+
 The driver's bench is cold-JVM per round; warm in-session A/Bs cannot
 see costs that only exist cold (codegen, first-touch, conf-dependent
 planning), which is how the r14 SHJ conf shipped unproven. Launch this

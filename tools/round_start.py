@@ -1,8 +1,9 @@
 """One-command round-start ritual (VERDICT r5 item 8).
 
 Runs, in order:
-  1. ``tools/rotate_sweep.py``    — rewrite the 50-query driver window
-     from the latest CORRECTNESS_r*.json history;
+  1. ``tools/rotate_sweep.py``    — refresh tools/query_digests.json and
+     rewrite the 50-query driver window from the latest
+     CORRECTNESS_r*.json history;
   2. ``tools/update_coverage.py`` — regenerate COVERAGE.md's per-query
      driver-history table from the same records;
   3. ``tools/rotate_sweep.py --check`` — confirm the committed window

@@ -38,7 +38,9 @@ Differential probing under injected data (the null_probe campaign):
 
 Prints one JSON line per scenario, then a summary line
 ``=== STREAM RESTART PROBE === jobs: N  bad: M``; exit 1 on any
-restart-vs-single mismatch. Jobs covered: tumbling, sliding, session,
+restart-vs-single mismatch, or on an abort scenario whose injected
+crash never fired (its run had too few batches to reach the abort
+point, so it resumed nothing). Jobs covered: tumbling, sliding, session,
 chained, dedup, join_inner, join_left, join_full, streaks
 (applyInPandasWithState), totals (complete mode).
 """
@@ -48,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -90,11 +93,13 @@ def run_job(spark, src, n_files, build, mode, landed):
 def run_crashed(spark, src, n_files, build, mode, abort_after):
     """All files landed; the first query crashes after the sink write of
     batch ``abort_after``, a NEW one resumes from its checkpoint.
-    Returns (crashed, resumed) [(batch_id, rows)]."""
+    Returns ((crashed, resumed) [(batch_id, rows)], whether the crash
+    fired — a run with no batch ``abort_after`` never crashes)."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from hadoop_trans_spark.streaming import restart_harness
 
+    fired = False
     with restart_harness(spark, src, n_files) as run:
         try:
             run.phase(
@@ -103,8 +108,9 @@ def run_crashed(spark, src, n_files, build, mode, abort_after):
         except StreamingQueryException as ex:
             if ABORT_MARK not in str(ex):
                 raise
+            fired = True
         run.phase(lambda d: build(spark, d), mode, n_files)
-    return run.phases
+    return run.phases, fired
 
 
 def merge_by_batch_id(phases) -> list[tuple[int, list]]:
@@ -179,41 +185,21 @@ def jobs_table():
         # the LAST batch of the LAST phase (and of the single run)
         return canon_rows(single[-1][1]), canon_rows(phases[-1][-1][1])
 
+    jobs = {
+        "tumbling": (tumbling_counts, "append", union),
+        "sliding": (sliding_counts, "append", union),
+        "session": (session_windows, "append", union),
+        "chained": (chained_windowed_rollup, "append", union),
+        "dedup": (stream_dedup, "append", union),
+        "join_inner": (partial(stream_stream_join, how="inner"), "append", union),
+        "join_left": (partial(stream_stream_join, how="left_outer"), "append", union),
+        "join_full": (partial(stream_stream_join, how="full_outer"), "append", union),
+        "streaks": (user_streaks_updates, "update", fold_streaks),
+        "totals": (complete_totals_stream, "complete", last_table),
+    }
     return {
-        "tumbling": (lambda s, d: tumbling_counts(es(s, d)), "append", union),
-        "sliding": (lambda s, d: sliding_counts(es(s, d)), "append", union),
-        "session": (lambda s, d: session_windows(es(s, d)), "append", union),
-        "chained": (
-            lambda s, d: chained_windowed_rollup(es(s, d)),
-            "append",
-            union,
-        ),
-        "dedup": (lambda s, d: stream_dedup(s, d), "append", union),
-        "join_inner": (
-            lambda s, d: stream_stream_join(s, d, "inner"),
-            "append",
-            union,
-        ),
-        "join_left": (
-            lambda s, d: stream_stream_join(s, d, "left_outer"),
-            "append",
-            union,
-        ),
-        "join_full": (
-            lambda s, d: stream_stream_join(s, d, "full_outer"),
-            "append",
-            union,
-        ),
-        "streaks": (
-            lambda s, d: user_streaks_updates(es(s, d)),
-            "update",
-            fold_streaks,
-        ),
-        "totals": (
-            lambda s, d: complete_totals_stream(es(s, d)),
-            "complete",
-            last_table,
-        ),
+        name: (lambda s, d, job=job: job(es(s, d)), mode, canon)
+        for name, (job, mode, canon) in jobs.items()
     }
 
 
@@ -275,13 +261,17 @@ def main() -> None:
         # each abort point (all files present from the start), resume
         # from the same checkpoint, idempotent-sink merge by batch_id.
         for ap in abort_points:
-            crashed, resumed = run_crashed(spark, src, n_files, build, mode, ap)
+            (crashed, resumed), fired = run_crashed(
+                spark, src, n_files, build, mode, ap
+            )
             merged = merge_by_batch_id([crashed, resumed])
             aa, bb = canon(single, [merged])
             replayed = {b for b, _ in crashed} & {b for b, _ in resumed}
-            ok2 = aa == bb
+            # a crash that never fired tested no resume
+            ok2 = fired and aa == bb
             st2 = {
                 "abort_after_batch": ap,
+                "crash_fired": fired,
                 "single_rows": len(aa),
                 "crash_resume_rows": len(bb),
                 "replayed_batch_ids": sorted(replayed),
