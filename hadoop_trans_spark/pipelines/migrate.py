@@ -17,18 +17,19 @@ partition files cluster-to-cluster; the only driver work is metadata.
 
 Metadata order, each step once per run:
   1. key enumeration (one Spark job) and partition-dir listings;
-  2. ONE source read with mergeSchema: one table listing plus one JVM
-     footer pass over every file. That pass is the health check — the
-     per-file pyarrow verdicts (pipelines/health.py) run only when it
-     fails, and then name the corrupt files to quarantine;
+  2. ONE source read with mergeSchema (health.read_parquet): one table
+     listing, its fan-out bounded by the session's listing parallelism,
+     plus one JVM footer pass over every file. That pass is the health
+     check — the per-file pyarrow verdicts (pipelines/health.py) run
+     only when it fails, and then name the corrupt files to quarantine;
   3. the copy (that read, pruned to the copy set) and the verification
-     (that same DataFrame), so verify compares the destination against
-     exactly the files the copy read.
+     (that same DataFrame against the copied destination partitions),
+     so verify compares the destination against exactly the files the
+     copy read.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 from . import fs
 from .alerts import Alert, AlertSink
 from .health import data_files as health_data_files
-from .health import scan_parquet_health
+from .health import read_parquet, scan_parquet_health
 from .verify import (
     DEFAULT_PARTITION,
     VerifyReport,
@@ -93,11 +94,8 @@ class MigrateJob:
     end: str | None = None  # reference `-e`
     mode: str = "skip"  # conflict policy: skip | overwrite | fail
     verify_after: bool = True
-    # When the source read's JVM footer pass fails, footer-validate every
-    # source file with the per-file pyarrow scan and quarantine the
-    # corrupt ones (excluded + reported + alerted) instead of failing the
-    # run (r13; see pipelines/health.py for the contract). A clean source
-    # never pays for the scan. False re-raises the read's error.
+    # When the source read fails, quarantine its corrupt files instead of
+    # failing the run (pipelines/health.py). False re-raises the error.
     quarantine_scan: bool = True
 
     @property
@@ -119,11 +117,8 @@ class MigrateReport:
     # corrupt source files excluded from the copy: {path, reason} each
     # (pipelines/health.py contract — reported, never silently skipped)
     quarantined: list[dict] = field(default_factory=list)
-    # the partition keys the copy ATTEMPTED (post conflict policy, before
-    # quarantine): unlike `copied`, this survives the every-candidate-
-    # file-quarantined edge where nothing is copied and copied stays []
-    # (ADVICE r14 — consumers enumerating "months the migrate covered"
-    # must read this, not `copied`)
+    # the keys the copy ATTEMPTED (after the conflict policy): unlike
+    # `copied`, not [] when every candidate file was quarantined (ADVICE r14)
     to_copy: list[str] = field(default_factory=list)
 
     @property
@@ -131,67 +126,21 @@ class MigrateReport:
         return all(v.equal for v in self.verify.values())
 
 
-@contextmanager
-def raw_partition_values(spark: SparkSession):
-    """Partition values are IDENTITY, not numbers. With Spark's default
-    partition-column type inference, par_dt=01 and par_dt=1 both infer
-    to int 1 — a migrate would silently RENAME zero-padded partition
-    dirs (par_dt=02 → par_dt=2) and MERGE colliding ones (01 + 1 → 1),
-    and the per-key verification, grouping by the same inferred value
-    on both sides, cannot see it (hostile-layout probe find, r12).
-    Every pipeline read of a Hive-partitioned layout runs with
-    inference off so values round-trip byte-exactly. Inference happens
-    at DataFrame CREATION (schema resolution), so only the reads need
-    to sit inside this context, not the actions.
-
-    Concurrency note (ADVICE r12): this toggles SESSION-scoped conf, so
-    a concurrent read on the SAME SparkSession during the window would
-    silently get inference disabled (or re-enabled mid-migrate by a
-    competing context exit). The pipelines are single-threaded per
-    session by design — the CLI owns its session — and nested use is
-    safe (the restore is value-based, not stack-based, and both nesting
-    levels set the same value). Callers embedding migrate() in a
-    multi-threaded driver should hand it `spark.newSession()` so the
-    conf mutation is isolated; per-read DataFrameReader options cannot
-    express this knob (it is consulted at partition discovery, before
-    reader options apply)."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _read_source(
     spark: SparkSession, job: MigrateJob, to_copy: list[str]
 ) -> tuple[DataFrame | None, list[dict]]:
-    """The whole source table, read once, and the quarantined files of
-    the copy set (``{path, reason}`` each). The DataFrame is ``None``
-    when no healthy file of the copy set is left.
+    """The whole source table, read once through ``read_parquet``, and
+    the quarantined files of the copy set (``{path, reason}`` each). The
+    DataFrame is ``None`` when no healthy file of the copy set is left.
 
-    mergeSchema: a schema-evolved partition (one that gained a column)
-    otherwise has that column SILENTLY DROPPED by the sampled-file
-    schema — and verification, reading the source the same way, stays
-    green through the loss (r12 probe find). A copy tool must read the
-    superset schema; older partitions carry NULLs for the newer columns.
-
-    mergeSchema also makes Spark parse every footer in the table now,
-    before the copy starts, so that pass is the health check. Only when
-    it fails does the per-file scan run (pipelines/health.py), table-wide:
-    corrupt files in the copy set are quarantined and alerted, corrupt
-    files elsewhere are left out of the union schema (the copy never
-    touched them, so they are not quarantine entries), and a scan that
-    finds nothing corrupt re-raises the read's error. ignoreCorruptFiles
-    is pinned off for this read: a session that sets it would otherwise
-    drop corrupt files from the schema pass AND the copy without a word.
+    The read covers the whole table, not just the copy set: its union
+    schema keeps a column that exists only outside the copy set (copied
+    rows carry it as NULLs). When its footer pass fails, the per-file
+    scan runs table-wide; corrupt files outside the copy set are only
+    left out of the read (the copy never touched them).
     """
-    reader = spark.read.option("mergeSchema", "true").option(
-        "ignoreCorruptFiles", "false"
-    )
     try:
-        return reader.parquet(job.src_path), []
+        return read_parquet(spark, job.src_path), []
     except (Py4JJavaError, PySparkException):
         if not job.quarantine_scan:
             raise
@@ -200,14 +149,12 @@ def _read_source(
         )
         if not corrupt:
             raise
-    # Explicit healthy-file read; basePath keeps the partition column
-    # resolvable from the dir layout.
     base = fs.qualify(spark, job.src_path)
     copy_dirs = tuple(f"{base}/{job.partition_name}={k}/" for k in to_copy)
     quarantined = [q for q in corrupt if q["path"].startswith(copy_dirs)]
     if not any(f.startswith(copy_dirs) for f in healthy):
         return None, quarantined
-    return reader.option("basePath", base).parquet(*healthy), quarantined
+    return read_parquet(spark, job.src_path, healthy), quarantined
 
 
 def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None) -> MigrateReport:
@@ -262,8 +209,7 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
         cond = F.col(pn).isin(named) if named else F.lit(False)
         if DEFAULT_PARTITION in to_copy:
             cond = cond | F.col(pn).isNull()
-        with raw_partition_values(spark):
-            src_df, report.quarantined = _read_source(spark, job, to_copy)
+        src_df, report.quarantined = _read_source(spark, job, to_copy)
         for q in report.quarantined:
             sink.emit(
                 Alert(
@@ -292,10 +238,13 @@ def migrate(spark: SparkSession, job: MigrateJob, sink: AlertSink | None = None)
     #    side is the copy's own read, so after a quarantine the report
     #    is "equal, minus the NAMED quarantined files" — the quarantine
     #    entries carry the loss, verification proves the copy moved
-    #    everything it was allowed to read.
+    #    everything it was allowed to read. The destination side is only
+    #    the copied partitions that wrote a dir: other partitions' columns
+    #    must not fail the compare.
     if job.verify_after and report.copied:
-        with raw_partition_values(spark):
-            dst_df = spark.read.option("mergeSchema", "true").parquet(job.dst_path)
+        names = set(fs.list_dirs(spark, job.dst_path))
+        dirs = [f"{job.dst_path}/{pn}={k}" for k in report.copied if f"{pn}={k}" in names]
+        dst_df = read_parquet(spark, job.dst_path, dirs) if dirs else src_df.where(F.lit(False))
         report.verify = verify_partitions(src_df, dst_df, pn, report.copied)
         for k, rep in report.verify.items():
             if not rep.equal:

@@ -33,11 +33,15 @@ from pyspark.sql import SparkSession
 #   * 256 MiB scan splits — fewer, fuller tasks against object storage;
 #   * RocksDB state store — streaming state (sessions, dedup keys,
 #     stream-stream join buffers) spills off-heap instead of living on
-#     the executor heap.
+#     the executor heap;
+#   * Spark's own bound on partition-listing tasks (10000) in place of
+#     the local one-per-core bound: a cluster lists a 10k-dir table
+#     with 10k tasks, not with the driver's core count.
 CLUSTER_PROFILE: dict[str, str] = {
     "spark.sql.shuffle.partitions": "4096",
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "4096",
     "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
+    "spark.sql.sources.parallelPartitionDiscovery.parallelism": "10000",
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -75,6 +79,12 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # A table of more than 32 partition dirs is listed by a Spark
+        # job; its default is one task per dir. Locally, one task per
+        # core lists many dirs each, so a big table's listing costs as
+        # many tasks as a small one's (the cluster profile restores
+        # Spark's bound).
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

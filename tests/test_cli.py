@@ -148,3 +148,7 @@ def test_session_profiles():
         "RocksDBStateStoreProvider"
     )
     assert int(CLUSTER_PROFILE["spark.sql.shuffle.partitions"]) >= 1024
+    # Partition listing keeps Spark's fan-out on a cluster; the local
+    # one-task-per-core bound would list a 10k-dir table with 8 tasks.
+    listing = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    assert CLUSTER_PROFILE[listing] == "10000"

@@ -1087,6 +1087,30 @@ def test_sweep_latest_status_wins_by_round_number_not_filename_order():
     assert last_ok == {"qx": False}
 
 
+def test_sweep_and_coverage_classify_driver_rows_identically():
+    """The window order (rotate_sweep) and COVERAGE.md (update_coverage)
+    must agree on which driver rows are green: every combination of the
+    row fields, and every committed CORRECTNESS round."""
+    import itertools
+
+    absent = object()
+    rows = {}
+    for i, (h, r, o) in enumerate(
+        itertools.product(
+            (True, False, absent), (True, False, absent), (None, 0, 3, absent)
+        )
+    ):
+        fields = {"hash_match": h, "rows_match": r, "oracle_rows": o}
+        rows[f"q{i}"] = {k: v for k, v in fields.items() if v is not absent}
+    for rounds in ({1: rows}, update_coverage.load_rounds()):
+        names = {n for data in rounds.values() for n in data}
+        _, last_ok = rotate_sweep.latest_status(rounds, names)
+        history = update_coverage.driver_history(rounds)
+        assert last_ok == {n: h[-1][1] == "green" for n, h in history.items()}
+    # hash_match (12 rows), or rows_match with no oracle rows (4 more)
+    assert sum(update_coverage.driver_green(r) for r in rows.values()) == 16
+
+
 def test_sweep_reshape_pins_outrank_green_vintage_until_reproven():
     """A query whose digest changed in round R (its code was reshaped;
     latest driver row from an EARLIER round) must sort ahead of ordinary

@@ -51,7 +51,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.resolver import DEFS, REPO, Package, query_name, references  # noqa: E402
-from tools.update_coverage import load_rounds  # noqa: E402
+from tools.update_coverage import driver_green, load_rounds  # noqa: E402
 
 INIT = os.path.join(REPO, "hadoop_trans_spark", "queries", "__init__.py")
 DIGESTS = os.path.join(REPO, "tools", "query_digests.json")
@@ -146,10 +146,7 @@ def latest_status(
             if rnd < last_round.get(name, -1):
                 continue
             last_round[name] = rnd
-            last_ok[name] = bool(
-                row.get("hash_match")
-                or (row.get("rows_match") and row.get("oracle_rows") is None)
-            )
+            last_ok[name] = driver_green(row)
     return last_round, last_ok
 
 

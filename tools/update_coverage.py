@@ -52,6 +52,26 @@ def load_rounds() -> dict[int, dict]:
     return rounds
 
 
+def driver_green(row: dict) -> bool:
+    """A driver CORRECTNESS row is green when its output hash matched
+    the oracle's, or its rows matched and the oracle returned none."""
+    return bool(
+        row.get("hash_match")
+        or (row.get("rows_match") and row.get("oracle_rows") is None)
+    )
+
+
+def driver_history(rounds: dict[int, dict]) -> dict[str, list[tuple[int, str]]]:
+    """``{query: [(round, "green" | "RED"), ...]}`` in round-number order
+    (not filename order: an unpadded r10 would sort before r2)."""
+    history: dict[str, list[tuple[int, str]]] = {}
+    for rnd in sorted(rounds):
+        for name, row in rounds[rnd].items():
+            status = "green" if driver_green(row) else "RED"
+            history.setdefault(name, []).append((rnd, status))
+    return history
+
+
 def third_engine_models(queries, tests_dir: str | None = None) -> dict[str, str]:
     """query name -> comma-joined third-engine test files MODELING it
     (the VERDICT r8 grep proxy, made a generated ledger column). A credit
@@ -111,18 +131,7 @@ def main() -> None:
     from hadoop_trans_spark.queries import QUERIES
 
     rounds = load_rounds()
-    history: dict[str, list[tuple[int, str]]] = {}
-    # Iterate by numeric round so history rows (and the "latest" cell)
-    # stay correct even if filenames stop zero-padding (r10 vs r2).
-    for rnd in sorted(rounds):
-        data = rounds[rnd]
-        for name, row in data.items():
-            ok = bool(
-                row.get("hash_match")
-                or (row.get("rows_match") and row.get("oracle_rows") is None)
-            )
-            status = "green" if ok else "RED"
-            history.setdefault(name, []).append((rnd, status))
+    history = driver_history(rounds)
 
     t3 = third_engine_models(list(QUERIES))
     lines = [
